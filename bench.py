@@ -2,6 +2,10 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+Usage: python bench.py [--only name [name ...]]
+    --only times just the named registered queries (the per-change A/B
+    instrument) with the same warm-up, min-of-3 loop and CPU stamps.
+
 Prints ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -14,6 +18,7 @@ per BASELINE.json.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -263,6 +268,12 @@ def bench_layout(sf_dir: str) -> str:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Time the headline queries.")
+    ap.add_argument(
+        "--only", nargs="+", metavar="NAME",
+        help="time these registered queries instead of the headline set",
+    )
+    names = tuple(ap.parse_args().only or HEADLINE)
     raw_sf_dir = os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
@@ -276,15 +287,7 @@ def main() -> None:
     # spark.sql.files.openCostInBytes to chase more scan splits was
     # measured (r16) and REJECTED — 16 KB-256 KB floors put every
     # query into a many-tiny-tasks regime that inflated the suite
-    # 16.2 -> 20-30 s (details in OPTIMIZATION_r16.md). The env hook
-    # below exists for re-measuring only.
-    if sf_dir is not raw_sf_dir and os.environ.get(
-        "SPARK_GRAFT_OPEN_COST_BYTES"
-    ):
-        spark.conf.set(
-            "spark.sql.files.openCostInBytes",
-            os.environ["SPARK_GRAFT_OPEN_COST_BYTES"],
-        )
+    # 16.2 -> 20-30 s (details in OPTIMIZATION_r16.md).
 
     # Warm-up, two layers:
     # 1. footer/page-cache touch of every table a headline query scans;
@@ -303,7 +306,7 @@ def main() -> None:
         table(spark, sf_dir, t).count()
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
-        for name in HEADLINE:
+        for name in names:
             QUERIES[name](spark, warm_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
@@ -313,14 +316,15 @@ def main() -> None:
     #    ivf_build — index-build noise, not serving. Pay it here,
     #    outside the timers, so even a single timed pass (or a future
     #    min->mean change) measures serving only.
-    QUERIES["knn_auto_filtered_batch"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    if "knn_auto_filtered_batch" in names:
+        QUERIES["knn_auto_filtered_batch"](spark, sf_dir).write.format(
+            "noop"
+        ).mode("overwrite").save()
 
     box_start = _box_snapshot()
     timings: dict[str, float] = {}
     query_cpu: dict[str, dict] = {}
-    for name in HEADLINE:
+    for name in names:
         fn = QUERIES[name]
         # min of 3 runs at the target sf: run-to-run noise on a busy
         # box is ~±0.5 s across the suite (and background load spikes
@@ -383,7 +387,10 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total",
+                "metric": (
+                    "headline_queries_total" if names == HEADLINE
+                    else "only_queries_total"
+                ),
                 "value": total,
                 "unit": "sec",
                 "queries": timings,

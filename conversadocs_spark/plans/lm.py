@@ -301,9 +301,9 @@ def quality_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(words).cast("double")
     n_uniq = F.size(F.array_distinct(words)).cast("double")
     n_chars = F.length("text").cast("double")
-    # regexp_count, not size(regexp_extract_all(...)): same count of
-    # single-char class matches, no per-match array allocation (r15,
-    # guide §1.2 per-task work; verified 0 disagreements on the fixture)
+    # regexp_count is equivalent to size(regexp_extract_all(..., 0)):
+    # Spark 4.1 rewrites it to exactly that, so the plan is identical
+    # and neither form is faster — it is just the shorter spelling.
     n_punct = F.regexp_count(
         "text", F.lit(r"[^A-Za-z0-9\s]")
     ).cast("double")
@@ -393,9 +393,9 @@ def quality_lr_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(words).cast("double")
     n_uniq = F.size(F.array_distinct(words)).cast("double")
     n_chars = F.length("text").cast("double")
-    # regexp_count, not size(regexp_extract_all(...)): same count of
-    # single-char class matches, no per-match array allocation (r15,
-    # guide §1.2 per-task work; verified 0 disagreements on the fixture)
+    # regexp_count is equivalent to size(regexp_extract_all(..., 0)):
+    # Spark 4.1 rewrites it to exactly that, so the plan is identical
+    # and neither form is faster — it is just the shorter spelling.
     n_punct = F.regexp_count(
         "text", F.lit(r"[^A-Za-z0-9\s]")
     ).cast("double")
@@ -505,9 +505,9 @@ def quality_lr_score_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(words).cast("double")
     n_uniq = F.size(F.array_distinct(words)).cast("double")
     n_chars = F.length("text").cast("double")
-    # regexp_count, not size(regexp_extract_all(...)): same count of
-    # single-char class matches, no per-match array allocation (r15,
-    # guide §1.2 per-task work; verified 0 disagreements on the fixture)
+    # regexp_count is equivalent to size(regexp_extract_all(..., 0)):
+    # Spark 4.1 rewrites it to exactly that, so the plan is identical
+    # and neither form is faster — it is just the shorter spelling.
     n_punct = F.regexp_count(
         "text", F.lit(r"[^A-Za-z0-9\s]")
     ).cast("double")

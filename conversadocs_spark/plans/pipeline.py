@@ -261,10 +261,9 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
             ""
         ),
     )
-    # regexp_count, not size(regexp_extract_all(...)): same match
-    # count, zero per-match array materialization per scanned row
-    # (r16, the f05a5a1 quality-kernel fix applied here — guide §1.2
-    # per-task work; the count is all the query keeps).
+    # regexp_count is equivalent to size(regexp_extract_all(..., 0)):
+    # Spark 4.1 rewrites it to exactly that, so the plan is identical
+    # and neither form is faster; the count is all the query keeps.
     return d.select(
         "doc_id",
         F.regexp_count(t, F.lit(_EMAIL_RE)).cast("long").alias("n_emails"),
@@ -1548,9 +1547,9 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(words).cast("double")
     n_uniq = F.size(F.array_distinct(words)).cast("double")
     n_chars = F.length("text").cast("double")
-    # regexp_count, not size(regexp_extract_all(...)): same count of
-    # single-char class matches, no per-match array allocation (r15,
-    # guide §1.2 per-task work; verified 0 disagreements on the fixture)
+    # regexp_count is equivalent to size(regexp_extract_all(..., 0)):
+    # Spark 4.1 rewrites it to exactly that, so the plan is identical
+    # and neither form is faster — it is just the shorter spelling.
     n_punct = F.regexp_count(
         "text", F.lit(r"[^A-Za-z0-9\s]")
     ).cast("double")

@@ -296,9 +296,9 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.length("text").alias("n_chars_computed"),
         F.size(words).alias("n_words"),
-        # regexp_count (r16): same count as
-        # size(regexp_extract_all(..., 0)) with zero per-match array
-        # materialization — the count is all this query keeps.
+        # regexp_count is equivalent to size(regexp_extract_all(...,
+        # 0)): Spark 4.1 rewrites it to exactly that (identical plan,
+        # no speed difference); the count is all this query keeps.
         F.regexp_count("text", F.lit(TOKEN_PATTERN)).alias(
             "n_tokens_bpe"
         ),
@@ -446,9 +446,9 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(words).cast("double")
     n_uniq = F.size(F.array_distinct(words)).cast("double")
     n_chars = F.length("text").cast("double")
-    # regexp_count, not size(regexp_extract_all(...)): same count of
-    # single-char class matches, no per-match array allocation (r15,
-    # guide §1.2 per-task work; verified 0 disagreements on the fixture)
+    # regexp_count is equivalent to size(regexp_extract_all(..., 0)):
+    # Spark 4.1 rewrites it to exactly that, so the plan is identical
+    # and neither form is faster — it is just the shorter spelling.
     n_punct = F.regexp_count(
         "text", F.lit(r"[^A-Za-z0-9\s]")
     ).cast("double")
@@ -1039,9 +1039,9 @@ def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(words).cast("double")
     n_uniq = F.size(F.array_distinct(words)).cast("double")
     n_chars = F.length("text").cast("double")
-    # regexp_count, not size(regexp_extract_all(...)): same count of
-    # single-char class matches, no per-match array allocation (r15,
-    # guide §1.2 per-task work; verified 0 disagreements on the fixture)
+    # regexp_count is equivalent to size(regexp_extract_all(..., 0)):
+    # Spark 4.1 rewrites it to exactly that, so the plan is identical
+    # and neither form is faster — it is just the shorter spelling.
     n_punct = F.regexp_count(
         "text", F.lit(r"[^A-Za-z0-9\s]")
     ).cast("double")

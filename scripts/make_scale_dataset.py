@@ -9,6 +9,9 @@ Usage:
     python scripts/make_scale_dataset.py [SRC] [DST] [COPIES]
     # defaults: /root/testdata/sf0.1 /tmp/sf1 10
 
+Build every scale set from the unstrided sf0.1 fixture (sf1 = x10,
+sf10 = x100). Chaining sf0.1 -> sf1 -> sf10 collides ids across
+copies, so `build` refuses a source whose keys already reach a stride.
 Used for the 10x scaling + correctness gate recorded in BASELINE.md
 ("Scaling check"); pair with scripts/scale_gate.py.
 """
@@ -45,9 +48,48 @@ OFFSETS: dict[str, dict[str, int]] = {
 }
 
 
-def main() -> None:
+def build(
+    spark,
+    src: str,
+    dst: str,
+    offsets: dict[str, dict[str, int]] = OFFSETS,
+    copies: int = 10,
+) -> None:
+    """Write ``copies`` key-offset copies of each table in ``offsets``
+    from ``src`` to ``dst``. Raises ValueError, before writing
+    anything, when a source key's maximum already reaches its per-copy
+    stride: copy i's ids would then overlap copy i+1's."""
     from pyspark.sql import functions as F
 
+    from conversadocs_spark.io import table
+
+    for t, offs in offsets.items():
+        top = table(spark, src, t).agg(
+            *[F.max(c).alias(c) for c in offs]
+        ).first()
+        over = {
+            c: top[c] for c, step in offs.items()
+            if top[c] is not None and top[c] >= step
+        }
+        if over:
+            raise ValueError(
+                f"{src}/{t}: key max {over} >= per-copy stride {offs}; "
+                "build from an unstrided source (sf0.1), not from a "
+                "scaled copy"
+            )
+    for t, offs in offsets.items():
+        df = table(spark, src, t)
+        out = None
+        for i in range(copies):
+            p = df
+            for col, step in offs.items():
+                p = p.withColumn(col, F.col(col) + F.lit(i * step))
+            out = p if out is None else out.unionByName(p)
+        out.write.mode("overwrite").parquet(f"{dst}/{t}.parquet")
+        print(t, spark.read.parquet(f"{dst}/{t}.parquet").count())
+
+
+def main() -> None:
     from conversadocs_spark.io import table
     from conversadocs_spark.session import get_spark
 
@@ -58,20 +100,11 @@ def main() -> None:
     spark = get_spark(app_name="make-scale-dataset")
     spark.sparkContext.setLogLevel("ERROR")
 
+    build(spark, src, dst, OFFSETS, copies)
     for t in ("region", "nation"):
         table(spark, src, t).write.mode("overwrite").parquet(
             f"{dst}/{t}.parquet"
         )
-    for t, offs in OFFSETS.items():
-        df = table(spark, src, t)
-        out = None
-        for i in range(copies):
-            p = df
-            for col, step in offs.items():
-                p = p.withColumn(col, F.col(col) + F.lit(i * step))
-            out = p if out is None else out.unionByName(p)
-        out.write.mode("overwrite").parquet(f"{dst}/{t}.parquet")
-        print(t, spark.read.parquet(f"{dst}/{t}.parquet").count())
 
 
 if __name__ == "__main__":

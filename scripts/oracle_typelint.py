@@ -2,8 +2,8 @@
 type-sensitive hash cannot reconcile with the Spark side.
 
 Why this exists (the r5/r12 lesson, VERDICT r12 "What's wrong"): every
-local gate (scale_gate.py, check_queries.py, the judge sweep) compares
-value-NORMALIZED rows, so a DuckDB HUGEINT column — which DuckDB
+local gate (scale_gate.py, the judge sweep) compares value-NORMALIZED
+rows, so a DuckDB HUGEINT column — which DuckDB
 silently produces by widening `sum(BIGINT)` / `-sum(...)` — passes
 locally (Python ints compare equal) yet fails the driver's typed hash
 (Arrow has no int128; the export degrades to a different physical
@@ -18,7 +18,7 @@ reintroduced it in r12. This module makes the class un-shippable:
   2. `type_class(duckdb_type)` / `spark_type_class(spark_dtype)` —
      map both engines' column types onto one coarse class lattice
      (int / float / decimal / str / bool / date / timestamp / array /
-     struct / map / binary) so scripts/check_queries.py can assert
+     struct / map / binary) so scripts/scale_gate.py can assert
      per-column class equality next to its value compare. Class-level
      (not width-level) on purpose: int32 vs int64 round-trips
      faithfully through the driver's Arrow path, int128 does not.

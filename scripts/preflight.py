@@ -14,7 +14,9 @@ script runs ONLY the cheap invariants (no SparkSession, no data):
   5. the `.collect(` lint (driver-side materialization allowlist,
      same sites as tests/test_plans.py),
   6. no unconditional `F.broadcast(` outside the documented
-     bounded-side allowlist (the knn_filtered lesson, ADVICE r7).
+     bounded-side allowlist (the knn_filtered lesson, ADVICE r7),
+  7. oracle result types driver-safe (scripts/oracle_typelint.py),
+  8. no result-cell normalizer outside tests/oracle.py.
 
 Usage: python scripts/preflight.py   (exit 0 = safe to snapshot)
 Run it before every snapshot-sized commit; the full pytest suite
@@ -31,6 +33,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 FAILS: list[str] = []
+
+#: a result-cell normalizer: rounding cells to 6 places, or a norm()
+NORMALIZER_RE = re.compile(r"round\(v, 6\)|def norm\(")
 
 
 def check(ok: bool, msg: str) -> None:
@@ -130,22 +135,30 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_TYPELINT_SF",
                             "/root/testdata/sf0.001")
     if os.path.isdir(sf_dir):
-        import duckdb
-
         from scripts.oracle_typelint import hugeint_offenders
-        con = duckdb.connect()
-        for t in ("region nation customer supplier part orders "
-                  "lineitem events documents embeddings").split():
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            glob = "/*.parquet" if os.path.isdir(path) else ""
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{path}{glob}'")
-        offenders = hugeint_offenders(con, ORACLES)
+        from tests.oracle import duckdb_views
+        offenders = hugeint_offenders(duckdb_views(sf_dir), ORACLES)
         check(not offenders,
               f"oracle result types driver-safe, {len(ORACLES)} bound "
               f"(offenders: {offenders or '[]'})")
     else:
         print(f"[skip] oracle type lint (no testdata at {sf_dir})")
+
+    # One comparator: tests/oracle.py is the only place allowed to
+    # round result cells, so a float-boundary fix reaches every gate.
+    copies = []
+    for sub in ("scripts", "tests"):
+        for root, _dirs, files in os.walk(os.path.join(REPO, sub)):
+            for f in files:
+                full = os.path.join(root, f)
+                rel = os.path.relpath(full, REPO).replace(os.sep, "/")
+                if f.endswith(".py") and rel != "tests/oracle.py" and (
+                    NORMALIZER_RE.search(open(full).read())
+                ):
+                    copies.append(rel)
+    check(not copies,
+          f"no cell normalizer outside tests/oracle.py (copies: "
+          f"{copies or '[]'})")
 
     if FAILS:
         print(f"\npreflight: {len(FAILS)} FAILURE(S) — do not snapshot")

@@ -1,32 +1,60 @@
 #!/usr/bin/env python
-"""Run the full DuckDB oracle gate against a scaled dataset produced
-by scripts/make_scale_dataset.py — the same check the driver performs
-at sf0.01, at 10x (or any) scale. This is how the two scale-only bugs
-in BASELINE.md's "Scaling check" section were caught (money-sum
-rounding past the 2^53 double envelope; salted-join replica broadcast
-OOM): the sf0.01 gate cannot see either.
+"""The oracle and scale gate runner: every registered query against its
+DuckDB oracle (compared by tests/oracle.py, the one comparator), the
+scale audits, and the per-family sf100 gates.
 
 Usage:
-    python scripts/scale_gate.py [SF_DIR]      # default /tmp/sf1
+    python scripts/scale_gate.py SF_DIR              # full sweep + audits
+    python scripts/scale_gate.py SF_DIR name ...     # named queries only
+    python scripts/scale_gate.py SF_DIR --family F [--rebuild]
+        # F in serving|quality|dedup|graph|lm|select; --rebuild first
+        # rebuilds SF_DIR's documents/embeddings from the sibling sf10
 
-Queries whose ORACLE is intentionally quadratic and unbounded
-(dedup_minhash: brute-force all-pairs Jaccard, hours in single-threaded
-DuckDB at 50k docs while the Spark side takes ~27s) are run
-Spark-side-only.
+Sweep (full and named modes). Each query is checked one way:
+  - rows-only queries (no oracle) are executed and counted;
+  - oracle queries are collected and compared to the oracle's rows, and
+    their column types must fall in the same coarse class
+    (scripts/oracle_typelint.py: the driver's hash is type-sensitive,
+    the value compare is not);
+  - on a scale set (more than DRIVER_MAX_DOCS documents), above
+    BIG_OUTPUT_CAP oracle rows the compare degrades to a count plus
+    engine-side column checksums (`value_signals`), and the quadratic
+    oracles (QUADRATIC_ORACLES) run Spark-side only with value
+    invariants; the driver-size sets compare every oracle in full,
+    executing it once.
+This is how the two scale-only bugs in BASELINE.md's "Scaling check"
+section were caught (money-sum rounding past the 2^53 double envelope;
+salted-join replica broadcast OOM): the sf0.01 gate cannot see either.
+
+Families (`--family`). Each is a list of `Gate` specs — a query or
+operator run, its allowed exchange keys, broadcast/forbidden-operator
+rules and a value check — run by one loop (`run_family`) that sets up
+the session once, reads the executed plan once per gate, applies the
+exchange allowlist, and tallies REPORT lines and failures. They are
+built for the ~1000x sf100 set (5M docs/vecs; see the family builders
+for each one's at-scale claim) and run unchanged on sf1.
 """
 
 from __future__ import annotations
 
+import argparse
+import math
 import os
+import re
 import sys
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
+from scripts.oracle_typelint import class_mismatches  # noqa: E402
+from tests.oracle import duckdb_views, mismatch  # noqa: E402
+
 #: oracle is brute-force-quadratic over the full table: skip the
-#: DuckDB side at scale, still execute + count the Spark side
+#: DuckDB side at scale, still execute + value-check the Spark side
 QUADRATIC_ORACLES = {
     "dedup_minhash", "dedup_clusters", "dedup_incremental",
     # not quadratic, but DuckDB's planner takes ~390 s on the
@@ -34,11 +62,17 @@ QUADRATIC_ORACLES = {
     # the sf0.01 driver check still runs the full hash compare
     "basket_lift",
 }
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+#: corpus size of the driver's sets (sf0.001/sf0.01 have 500 documents);
+#: above it a set is a scale set, where the quadratic oracles run
+#: Spark-side only and the big-output cap below applies
+DRIVER_MAX_DOCS = 1_000
+#: at scale, above this oracle row count the full collect-and-hash
+#: compare is no longer feasible driver-side (137M-row join_range at sf10
+#: serializes past any sane maxResultSize and the python normalization
+#: sort would dominate the sweep); degrade to a count check PLUS an
+#: engine-side per-column value signal — counts alone could match
+#: while values diverge.
+BIG_OUTPUT_CAP = 20_000_000
 
 
 # --------------------------------------------------------------------------
@@ -328,117 +362,1151 @@ def value_signals(con, sdf, oracle_sql):
     return tuple(srow), tuple(orow), ok
 
 
-def main() -> None:
-    import duckdb
+PASSED = ("ROWS", "MATCH", "CHECKSUM", "INVARIANTS")
 
-    import __spark_entry__ as entry
-    from conversadocs_spark.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
-    # the gate collects FULL outputs for the hash compare; at sf10
-    # some legitimate results serialize past the 1g default
-    os.environ.setdefault("SPARK_GRAFT_MAX_RESULT_SIZE", "8g")
-    spark = get_spark(app_name="scale-gate")
-    spark.sparkContext.setLogLevel("ERROR")
+def check_query(spark, con, name, sf_dir, at_scale) -> tuple[str, str]:
+    """One query's verdict and note. Verdicts: ROWS (rows-only query
+    ran), MATCH (full compare), CHECKSUM (count + column checksums),
+    INVARIANTS (Spark-side value invariants); a failed check returns
+    MISMATCH, TYPE MISMATCH or INVARIANT FAIL."""
+    from conversadocs_spark.plans import ORACLES, QUERIES
 
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        glob = "/*.parquet" if os.path.isdir(path) else ""
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{path}{glob}'"
-        )
+    sdf = QUERIES[name](spark, sf_dir)
+    if name not in ORACLES:
+        return "ROWS", f"rows={sdf.count()}"
+    oracle = ORACLES[name]
+    rel = con.sql(oracle)  # binds only: the types without executing
+    ty_bad = class_mismatches(
+        sdf.dtypes, rel.columns, [str(t) for t in rel.types]
+    )
+    if name in QUADRATIC_ORACLES and at_scale:
+        ok, note = QUADRATIC_CHECKS[name](spark, con, sdf)
+        verdict = "INVARIANTS" if ok else "INVARIANT FAIL"
+        note = f"spark-only + value invariants, {note}"
+    else:
+        n_oracle = con.execute(
+            f"SELECT count(*) FROM ({oracle})"
+        ).fetchone()[0] if at_scale else 0
+        if n_oracle > BIG_OUTPUT_CAP:
+            n_spark = sdf.count()
+            ok = n_spark == n_oracle
+            note = (
+                f"count+checksum, rows={n_spark} vs {n_oracle} — output "
+                f"past the {BIG_OUTPUT_CAP}-row hash-compare cap"
+            )
+            if ok:
+                ssig, osig, ok = value_signals(con, sdf, oracle)
+                note += (
+                    "; no signal-able columns" if ssig is None
+                    else "; column checksums " + (
+                        "agree" if ok
+                        else f"DIVERGE spark={ssig} oracle={osig}"
+                    )
+                )
+            verdict = "CHECKSUM" if ok else "MISMATCH"
+        else:
+            rows = [tuple(r) for r in sdf.collect()]
+            cur = con.execute(oracle)
+            diff = mismatch(
+                sdf.columns, rows,
+                [d[0] for d in cur.description], cur.fetchall(),
+            )
+            verdict, note = (
+                ("MATCH", f"rows={len(rows)}") if diff is None
+                else ("MISMATCH", diff[:400])
+            )
+    if ty_bad:
+        note += f" TYPE MISMATCH {ty_bad}"
+        verdict = "TYPE MISMATCH" if verdict in PASSED else verdict
+    return verdict, note
 
-    qs, oracles = entry.queries(), entry.oracle_sql()
 
-    def norm(cols, rows):
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        cell = lambda v: round(v, 6) if isinstance(v, float) else v  # noqa: E731
-        return [cols[i] for i in order], sorted(
-            [tuple(cell(r[i]) for i in order) for r in rows], key=str
-        )
+def run_sweep(spark, sf_dir: str, names: list[str]) -> list[str]:
+    """Check each named query; print one line each plus a tally and
+    return the names that failed."""
+    from conversadocs_spark.plans import ORACLES
 
-    #: above this oracle row count the full collect-and-hash compare
-    #: is no longer feasible driver-side (137M-row join_range at sf10
-    #: serializes past any sane maxResultSize and the python
-    #: normalization sort would dominate the sweep); degrade to a
-    #: count check PLUS an engine-side per-column value signal
-    #: (below) — counts alone could match while values diverge.
-    big_output_cap = 20_000_000
-
-    bad = []
-    checked = 0
-    for name in sorted(oracles):
+    con = duckdb_views(sf_dir)
+    n_docs = con.execute("SELECT count(*) FROM documents").fetchone()[0]
+    at_scale = n_docs > DRIVER_MAX_DOCS
+    tally = dict.fromkeys(PASSED, 0)
+    bad, ty_bad = [], []
+    for name in names:
         t0 = time.time()
         try:
-            sdf = qs[name](spark, sf_dir)
-            if name in QUADRATIC_ORACLES:
-                ok, note = QUADRATIC_CHECKS[name](spark, con, sdf)
-                if not ok:
-                    bad.append(name)
-                print(
-                    f"{name}: "
-                    f"{'OK' if ok else 'INVARIANT FAIL'} "
-                    f"(spark-only + value invariants, {note};"
-                    f" {time.time() - t0:.1f}s)",
-                    flush=True,
-                )
-                continue
-            n_oracle = con.execute(
-                f"SELECT count(*) FROM ({oracles[name]})"
-            ).fetchone()[0]
-            if n_oracle > big_output_cap:
-                n_spark = sdf.count()
-                ok = n_spark == n_oracle
-                sig_note = ""
-                if ok:
-                    ssig, osig, sig_ok = value_signals(
-                        con, sdf, oracles[name]
-                    )
-                    if ssig is None:
-                        sig_note = "; no signal-able columns"
-                    else:
-                        ok = sig_ok
-                        sig_note = (
-                            "; column checksums "
-                            + ("agree" if sig_ok else
-                               f"DIVERGE spark={ssig} oracle={osig}")
-                        )
-                if not ok:
-                    bad.append(name)
-                checked += 1
-                print(
-                    f"{name}: {'OK' if ok else 'MISMATCH'} "
-                    f"(count+checksum, rows={n_spark} vs "
-                    f"{n_oracle} — output past the "
-                    f"{big_output_cap}-row hash-compare cap"
-                    f"{sig_note}; "
-                    f"{time.time() - t0:.1f}s)",
-                    flush=True,
-                )
-                continue
-            sc, sr = norm(sdf.columns, [tuple(r) for r in sdf.collect()])
-            cur = con.execute(oracles[name])
-            oc, orr = norm(
-                [d[0] for d in cur.description], cur.fetchall()
-            )
-            ok = sc == oc and sr == orr
-            if not ok:
-                bad.append(name)
-            checked += 1
-            print(
-                f"{name}: {'OK' if ok else 'MISMATCH'}"
-                f" ({time.time() - t0:.1f}s)",
-                flush=True,
-            )
+            verdict, note = check_query(spark, con, name, sf_dir, at_scale)
         except Exception as e:  # noqa: BLE001 — gate must report, not die
+            verdict, note = "ERR", str(e)[:200]
+        if verdict in PASSED:
+            tally[verdict] += 1
+        else:
             bad.append(name)
-            print(f"{name}: ERR {str(e)[:120]}", flush=True)
-    audit_bad = run_scale_audits(spark, qs, sf_dir)
-    print("oracle-checked:", checked)
-    print("MISMATCHES:", bad if bad else "none")
-    print("AUDIT FAILURES:", audit_bad if audit_bad else "none")
-    sys.exit(1 if bad or audit_bad else 0)
+        if "TYPE MISMATCH" in note:
+            ty_bad.append(name)
+        print(f"{name}: {verdict} ({time.time() - t0:.1f}s) {note}",
+              flush=True)
+    n_oracle = sum(name in ORACLES for name in names)
+    print(
+        f"oracle: {n_oracle - len(set(bad) & set(ORACLES))}/{n_oracle} ok"
+        f" (full MATCH {tally['MATCH']}, count+checksum "
+        f"{tally['CHECKSUM']}, value invariants {tally['INVARIANTS']})"
+    )
+    print(f"rows-only: {tally['ROWS']}/{len(names) - n_oracle} ran")
+    print("type-class mismatches:", ty_bad or "none")
+    print("MISMATCHES:", bad or "none")
+    return bad
+
+
+# --------------------------------------------------------------------------
+# sf100 family gates. Each family builder returns its `Gate` specs; the
+# one loop in `run_family` runs them. The builders' docstrings carry
+# each family's at-scale claim.
+# --------------------------------------------------------------------------
+
+#: joins that move the corpus; forbidden where a plan claims no shuffle
+SHUFFLED_JOINS = ("SortMergeJoin", "ShuffledHashJoin")
+
+
+@dataclass
+class Gate:
+    """One gated run: ``run()`` builds the DataFrame; the loop times
+    it through ``collect()`` (``collect=True``, rows handed to
+    ``check``) or ``count()``, then checks the executed plan and calls
+    ``check(df, n_rows, rows)``, which raises AssertionError on a
+    violation and returns the REPORT note."""
+
+    name: str
+    run: Callable
+    check: Callable
+    #: allowed substrings of every `Exchange hashpartitioning` line
+    #: (first match wins); None skips the exchange allowlist
+    keys: tuple[str, ...] | None = None
+    broadcast: bool = False  # the plan must contain a BroadcastExchange
+    forbid: tuple[str, ...] = ()  # operators the plan must not contain
+    #: plan tag from the matched keys; default "broadcast+Nex"
+    tag: Callable | None = None
+    collect: bool = False
+
+
+def final_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def check_plan(g: Gate, plan: str) -> str:
+    """Assert ``g``'s exchange, broadcast and operator rules on an
+    executed plan; return its plan tag."""
+    hits = []
+    if g.keys is not None:
+        for line in plan.splitlines():
+            if "Exchange hashpartitioning" not in line:
+                continue
+            key = next((k for k in g.keys if k in line), None)
+            assert key is not None, (
+                f"exchange outside the allowed keys {g.keys} at scale: "
+                f"{line.strip()}"
+            )
+            hits.append(key)
+    assert not g.broadcast or "BroadcastExchange" in plan, (
+        "no broadcast at scale — the small side degraded to a shuffle"
+    )
+    for op in g.forbid:
+        assert op not in plan, f"{op} at scale"
+    if g.tag is not None:
+        return g.tag(hits)
+    return f"broadcast+{len(hits)}ex" if g.broadcast else ""
+
+
+def run_family(spark, sf_dir: str, family: str) -> list[str]:
+    """Run one family's gates; print REPORT lines, return failures."""
+    con = duckdb_views(sf_dir)
+    failures, report = [], []
+    for g in FAMILIES[family](spark, sf_dir, con):
+        t0 = time.time()
+        df = g.run()
+        rows = df.collect() if g.collect else None
+        n = len(rows) if g.collect else df.count()
+        dt = time.time() - t0
+        try:
+            tag = check_plan(g, final_plan(df))
+            note = g.check(df, n, rows)
+            line = " ".join(
+                filter(None, [f"{g.name}: OK rows={n} {dt:.1f}s", tag, note])
+            )
+            report.append(line)
+            print(line, flush=True)
+        except AssertionError as ex:
+            failures.append(f"{g.name}: {ex}")
+            print(f"{g.name}: FAIL {ex}", flush=True)
+        df.unpersist()
+    print("---")
+    for line in report:
+        print("REPORT", line)
+    print(f"family {family}:", "all green" if not failures else failures)
+    return failures
+
+
+# ---- serving -------------------------------------------------------------
+
+#: name -> (expected rows, per-query k for recall, filtered?)
+SERVING: dict[str, tuple[int, int | None, bool]] = {
+    "knn_int8_batch": (25, 5, False),
+    "knn_binary_batch": (15, 3, False),
+    "knn_matryoshka_batch": (15, 3, False),
+    "multivec_maxsim_batch": (9, None, False),
+    # MMR diversifies AWAY from pure top-k by design, so no recall
+    # floor — the fill + plan pins carry it (its values are
+    # oracle-hash-checked at sf0.01/sf1/sf10)
+    "mmr_rerank_exact": (25, None, False),
+    "knn_filtered_int8_batch": (25, 5, True),
+    "knn_auto_filtered_batch": (15, 3, True),
+}
+#: Floors are QUALITY bands vs the float-exact top-k at the same
+#: scale, not correctness gates — each tier's own semantics
+#: (dequantized scoring, Hamming shortlist, IVF probe) are
+#: value-hash-checked against DuckDB at sf0.01/sf1/sf10. The raw SQ8
+#: tier gets 0.75: at 5M vectors the near-dup-heavy fixture packs
+#: near-ties inside one 8-bit quantization step, so int8's top-5 can
+#: legitimately drift from the float top-5 (r14 measured: unfiltered
+#: 1.00, filtered 0.80 — the filtered corpus halves the pool and
+#: promotes ties into the cut). The FILTERED tier re-ranks a
+#: TIE-AWARE int8 shortlist (dense_rank()<=20: the top-20 DISTINCT
+#: quantized sims with plateaus whole — sf100 measured the true
+#: top-5 at dense_rank 2 BEHIND a 1000-deep plateau of int8 rounding
+#: noise, so every row-count cut (row_number AND rank(), which
+#: counts rows above) puts them at 1001+; row_number()<=4096 bounds
+#: the worst case) in fp32 since r15 (VERDICT r14 #1 — the filtered
+#: recall sat exactly at its old 0.80 floor), so its floor is 0.95:
+#: only a true top-5 member whose value band misses the top-20
+#: distinct sims, or cut by the 4096 bound, escapes. Binary is a
+#: 1-bit code: 0.6.
+RECALL_FLOORS = {
+    "knn_int8_batch": 0.75,
+    "knn_matryoshka_batch": 0.9,
+    "knn_binary_batch": 0.6,
+    "knn_filtered_int8_batch": 0.95,
+    "knn_auto_filtered_batch": 0.6,
+}
+#: the serving set is documents+embeddings x10 over sf10, with a 1e10
+#: id stride that clears sf10's ids (max ~9.9e9) AND the +1e6 near-dup
+#: injection offset; the other tables are symlinked from sf10 (the
+#: serving queries never read them)
+SF100_OFFSETS = {
+    "documents": {"doc_id": 10_000_000_000},
+    "embeddings": {"vec_id": 10_000_000_000},
+}
+
+
+def rebuild_sf100(spark, dst: str) -> None:
+    """Rebuild ``dst``'s documents/embeddings from the sibling sf10."""
+    from conversadocs_spark.io import TABLES
+    from scripts.make_scale_dataset import build
+
+    src = os.path.join(os.path.dirname(os.path.abspath(dst)), "sf10")
+    build(spark, src, dst, SF100_OFFSETS, copies=10)
+    for t in TABLES:
+        link = f"{dst}/{t}.parquet"
+        if t not in SF100_OFFSETS and not os.path.exists(link):
+            os.symlink(f"{src}/{t}.parquet", link)
+
+
+def _serving_shape(filtered: bool):
+    def tag(hits: list[str]) -> str:
+        shape = "broadcast-semi" if filtered else "no-shuffle"
+        for key in hits:
+            if key == "hashpartitioning(vec_id":
+                shape = "shuffled-semi"
+            elif key == "list_id":
+                shape += "+ivf"
+        return shape
+
+    return tag
+
+
+def serving_gates(spark, sf, con) -> list[Gate]:
+    """The SERVING MATRIX (VERDICT r10 #8): the five quantized/filtered
+    batch-retrieval queries, MMR, and the composed manifest-planned
+    serving query, whose plan pins claim "the corpus never shuffles at
+    ANY scale".
+
+    Plan: no SortMergeJoin / ShuffledHashJoin on the unfiltered tiers
+    and every hash exchange keyed on query_id. The filtered queries
+    may degrade their allowed-id semi-join to a shuffled form once the
+    tenant set outgrows the broadcast threshold (the documented
+    knn_filtered fallback): their exchanges are the semi-join's vec_id
+    one or query_id-keyed, and the tag records which semi shape ran;
+    the composed knn_auto_filtered_batch plans IVF above the
+    crossover, so its probe-side list_id structures are also admitted
+    (partition-pruned by construction, never a corpus-wide reshuffle).
+
+    Values: per-query fill (exact expected row counts), filter-respect
+    on the filtered queries (anti-join count == 0), and recall floors
+    (RECALL_FLOORS) vs the exact cosine top-k computed at the SAME
+    scale (tests/test_vector.py / tests/test_planner.py hold the
+    per-tier contracts)."""
+    from pyspark.sql import functions as F
+
+    from conversadocs_spark import io
+    from conversadocs_spark.operators.knn import knn_per_query
+    from conversadocs_spark.plans import QUERIES
+
+    emb = io.table(spark, sf, "embeddings")
+    docs = io.table(spark, sf, "documents")
+    queries = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    corpus = emb.where(F.col("vec_id") >= 5)
+    allowed_df = docs.where(
+        (F.col("lang") == "en") & (F.col("source") != "src0")
+    ).select(F.col("doc_id").alias("vec_id"))
+
+    # exact cosine top-5 per query, unfiltered and filtered (one corpus
+    # scan each), for the recall floors
+    t0 = time.time()
+    exact: dict[bool, dict[int, list[int]]] = {False: {}, True: {}}
+    kept = corpus.join(allowed_df, "vec_id", "left_semi")
+    for filtered, pool in ((False, corpus), (True, kept)):
+        for r in (
+            knn_per_query(pool, queries, k=5)
+            .orderBy("query_id", "rank")
+            .collect()
+        ):
+            exact[filtered].setdefault(r.query_id, []).append(r.vec_id)
+    print(f"exact baselines (both scans): {time.time() - t0:.1f}s")
+
+    def gate(name: str, exp_rows: int, k: int | None, filtered: bool):
+        def check(df, n, rows) -> str:
+            assert n == exp_rows, (
+                f"{n} rows, expected {exp_rows} (under-fill at scale)"
+            )
+            if filtered:
+                n_bad = (
+                    df.select("vec_id")
+                    .join(allowed_df, "vec_id", "left_anti")
+                    .count()
+                )
+                assert n_bad == 0, f"{n_bad} out-of-filter rows at scale"
+            if k is None:
+                return ""
+            base = exact[filtered]
+            got: dict[int, set[int]] = {}
+            for r in rows:
+                got.setdefault(r.query_id, set()).add(r.vec_id)
+            hit = sum(len(got[q] & set(base[q][:k])) for q in got)
+            recall = hit / sum(len(set(base[q][:k])) for q in got)
+            floor = RECALL_FLOORS[name]
+            assert recall >= floor, f"recall {recall:.2f} < floor {floor}"
+            return f"recall={recall:.2f}"
+
+        return Gate(
+            name,
+            lambda: QUERIES[name](spark, sf),
+            check,
+            keys=("hashpartitioning(query_id",) + (
+                ("hashpartitioning(vec_id", "list_id") if filtered else ()
+            ),
+            forbid=() if filtered else SHUFFLED_JOINS,
+            tag=_serving_shape(filtered),
+            collect=True,
+        )
+
+    return [gate(name, *spec) for name, spec in SERVING.items()]
+
+
+# ---- quality -------------------------------------------------------------
+
+
+def quality_gates(spark, sf, con) -> list[Gate]:
+    """The TEXT-QUALITY / CURATION SCREENS (VERDICT r12 #6), whose
+    100 TB claim is the BROADCAST ASYMMETRY: the small side of every
+    screen (the eval suite's grams / bloom bits, the 1-row percentile
+    cutoff, the 1-row phrase) is broadcast, and the 5M-doc training
+    side is never shuffled BY THE SCREEN — its only exchanges are the
+    screen's own aggregation keys (doc_id / gram), identical in kind
+    to what the sf0.1 plan runs.
+
+    Plan: at least one BroadcastExchange; every hash exchange keyed on
+    the query's allowed key set; quality_filter_stack may run doc_id
+    SortMergeJoins (three corpus-linear signal branches joined on
+    doc_id IS its plan), the scan-shaped screens must have none.
+
+    Values: contamination_bloom has NO false negatives vs the exact
+    shared-gram count re-derived for a 200-doc sample, frac in [0, 1];
+    quality_filter_stack's keep == the conjunction of its three signal
+    columns on a 200-row sample, against the cutoff re-derived from
+    the returned avg_logprob column; phrase_search's sampled hit docs
+    contain the phrase, n_occurrences >= 1."""
+    from pyspark.sql import functions as F
+
+    from conversadocs_spark import io
+    from conversadocs_spark.plans import QUERIES
+    from conversadocs_spark.plans.pipeline import _CONTAM_N, shingle_docs
+
+    d = io.table(spark, sf, "documents")
+    print(f"documents: {d.count()}")
+
+    def check_stack(df, n, rows) -> str:
+        sample = df.limit(200).collect()
+        cut = df.agg(
+            F.round(F.percentile("avg_logprob", F.lit(0.1)), 6).alias("c")
+        ).first()["c"]
+        for r in sample:
+            want = (
+                r.quality_score >= 0.7
+                and r.dup_gram_frac <= 0.1
+                and r.avg_logprob >= cut
+            )
+            assert r.keep == want, (
+                f"keep != conjunction for doc {r.doc_id} at scale"
+            )
+        kept = df.where("keep").count()
+        assert 0 < kept, "zero keeps at scale"
+        return f"kept={kept}"
+
+    def check_bloom(df, n, rows) -> str:
+        g = shingle_docs(d, "text", "doc_id", _CONTAM_N)
+        ev_grams = (
+            g.where(F.col("id") < 20)
+            .select(F.explode_outer("shingles").alias("gram"))
+            .distinct()
+        )
+        sample_ids = [
+            r.doc_id for r in df.where("n_flagged > 0").limit(100).collect()
+        ] + [r.doc_id for r in df.where("n_flagged = 0").limit(100).collect()]
+        exact = {
+            r.doc_id: r.n_shared
+            for r in (
+                g.where(F.col("id").isin(sample_ids))
+                .select(
+                    F.col("id").alias("doc_id"),
+                    F.explode_outer("shingles").alias("gram"),
+                )
+                .join(ev_grams, "gram", "left_semi")
+                .groupBy("doc_id")
+                .agg(F.count("*").alias("n_shared"))
+                .collect()
+            )
+        }
+        got = {
+            r.doc_id: (r.n_flagged, r.flagged_frac)
+            for r in df.where(F.col("doc_id").isin(sample_ids)).collect()
+        }
+        for doc, (flagged, frac) in got.items():
+            assert flagged >= exact.get(doc, 0), (
+                f"FALSE NEGATIVE at scale — doc {doc} flagged {flagged} "
+                f"< shared {exact.get(doc, 0)}"
+            )
+            assert 0.0 <= frac <= 1.0, f"frac {frac} out of range"
+        return f"sampled={len(got)} no-false-negatives"
+
+    def check_ngram(df, n, rows) -> str:
+        bad = df.where(
+            "n_shared < 0 OR contamination < 0 OR contamination > 1"
+        ).count()
+        assert bad == 0, "out-of-range rows"
+        return f"hits={df.where('n_shared > 0').count()}"
+
+    def check_phrase(df, n, rows) -> str:
+        sample = df.limit(50).collect()
+        assert sample, "zero hits at scale"
+        phrase = sample[0].phrase
+        texts = dict(
+            d.where(F.col("doc_id").isin([r.doc_id for r in sample]))
+            .select("doc_id", "text")
+            .collect()
+        )
+        for r in sample:
+            assert r.n_occurrences >= 1
+            assert phrase in texts[r.doc_id], (
+                f"doc {r.doc_id} lacks the phrase"
+            )
+        return f"phrase={phrase!r} docs={n}"
+
+    def gate(name, check, keys, forbid=SHUFFLED_JOINS) -> Gate:
+        return Gate(
+            name, lambda: QUERIES[name](spark, sf), check,
+            keys=keys, broadcast=True, forbid=forbid,
+        )
+
+    return [
+        # two doc_id joins of three corpus-linear branches + gram aggs:
+        # doc_id exchanges (and SMJ on them) ARE the plan; gram/bigram
+        # aggregation keys feed the repetition + LM branches
+        gate(
+            "quality_filter_stack", check_stack,
+            ("doc_id", "gram", "w1", "w2", "bigram", "term", "tok"),
+            forbid=(),
+        ),
+        # probe-side re-aggregation keys only; the bloom is broadcast
+        gate(
+            "contamination_bloom", check_bloom,
+            ("doc_id", "gram", "r,", "pos"),
+        ),
+        # exact sibling: eval grams broadcast, train side aggregates on
+        # (doc_id, gram) then doc_id
+        gate("contamination_ngram", check_ngram, ("doc_id", "gram")),
+        # trigram count shuffle then a 1-row broadcast phrase
+        gate("phrase_search", check_phrase, ("gram",)),
+    ]
+
+
+# ---- dedup ---------------------------------------------------------------
+
+
+def dedup_gates(spark, sf, con) -> list[Gate]:
+    """The DEDUP/CURATION PATH (VERDICT r11 #5): the minhash pipeline
+    and connected-components clustering.
+
+    rep_pairs: the minhash candidate stage is BUCKETED-NOT-ALL-PAIRS —
+    banded candidate pairs (hot_cap=4096, the registered parameters)
+    stay within the salted linear bound bands * n_reps * hot_cap, and
+    the executed plan has no CartesianProduct; the representative
+    near-dup pairs pass `check_dedup_pairs_values` (canonical order,
+    jaccard in [threshold, 1], exact Python re-derivation of a
+    200-pair sample).
+
+    Why the REPRESENTATIVE layer and not the registered dedup_minhash
+    id-pair expansion: the scale sets COPY sf0.1 with id strides, so
+    at sf100 every distinct text has ~1000 identical-content copies
+    and the id-level pair set is ~C(1000,2) * n_texts ~ 2.5e9 rows —
+    quadratic in the copy count BY DEFINITION
+    (operators/dedup.py:minhash_rep_near_dups), i.e. the OUTPUT is
+    fixture-inflated, not the computation. The engine's scale path is
+    the representative layer (signature, banding, candidates,
+    re-check all run per DISTINCT content), so that is what this gate
+    measures; the id-level expansion size is reported ANALYTICALLY
+    (one aggregate, nothing materialized) so the drop is loud. The
+    expansion itself is hash-checked at sf0.01 and value-audited at
+    sf1/sf10, where the copy counts keep it materializable.
+
+    dedup_clusters: the REGISTERED query end to end; its full output
+    passes `check_clusters_fixed_point` with zero violations."""
+    from pyspark.sql import functions as F
+
+    from conversadocs_spark import io
+    from conversadocs_spark.operators.dedup import (
+        bucket_pairs,
+        hashed_shingles,
+        minhash_banded,
+        minhash_rep_near_dups,
+        minhash_signatures,
+    )
+    from conversadocs_spark.plans import QUERIES
+
+    docs = io.table(spark, sf, "documents")
+    n_docs = docs.count()
+    print(f"documents: {n_docs}")
+    holder: list = []
+    rep_pairs, membership = minhash_rep_near_dups(
+        docs, threshold=0.5, n=3, num_hashes=64, bands=16,
+        cache_holder=holder, hot_cap=4096,
+    )
+
+    def check_reps(df, n, rows) -> str:
+        try:
+            plan = rep_pairs._jdf.queryExecution().executedPlan().toString()
+            assert "CartesianProduct" not in plan, "CartesianProduct"
+            # candidate bound: re-run the banded bucket stage on the SAME
+            # representative relation with the registered parameters
+            t0 = time.time()
+            reps = membership.where(F.col("id") == F.col("rid")).select(
+                F.col("rid").alias("doc_id")
+            )
+            rep_docs = docs.join(reps, "doc_id", "left_semi")
+            n_reps = rep_docs.count()
+            banded = minhash_banded(
+                minhash_signatures(hashed_shingles(rep_docs), 64), 16, 4
+            ).localCheckpoint()
+            cands = bucket_pairs(
+                banded, ["band", "band_hash"], F.struct(F.col("id")),
+                hot_cap=4096,
+            ).count()
+            bound = 16 * n_reps * 4096
+            assert 0 < cands <= bound, (
+                f"candidate bound violated: {cands} > {bound}"
+            )
+            ok, note = check_dedup_pairs_values(
+                spark, con,
+                df.select(
+                    F.col("rid1").alias("id1"),
+                    F.col("rid2").alias("id2"),
+                    "jaccard_sim",
+                ),
+            )
+            assert ok, f"rep_pairs invariants: {note}"
+            # id-level expansion within identical-content groups alone
+            expansion = (
+                membership.groupBy("rid")
+                .agg(F.count("*").alias("sz"))
+                .agg(F.sum(F.col("sz") * (F.col("sz") - 1) / 2).alias("w"))
+                .first()["w"]
+            )
+        finally:
+            for c in holder:
+                c.unpersist()
+        return (
+            f"{note} candidates={cands} linear-bound={bound} "
+            f"n_reps={n_reps} (C(n_docs,2)~{n_docs * (n_docs - 1) // 2:.1e},"
+            f" {time.time() - t0:.1f}s) id-level expansion "
+            f"~{int(expansion):,} pairs (analytic, not materialized)"
+        )
+
+    def check_clusters(df, n, rows) -> str:
+        ok, note = check_clusters_fixed_point(spark, con, df)
+        assert ok, f"dedup_clusters invariants: {note}"
+        return note
+
+    return [
+        Gate(
+            "rep_pairs",
+            lambda: rep_pairs.localCheckpoint(eager=True),
+            check_reps,
+        ),
+        Gate(
+            "dedup_clusters",
+            lambda: QUERIES["dedup_clusters"](spark, sf).localCheckpoint(
+                eager=True
+            ),
+            check_clusters,
+        ),
+    ]
+
+
+# ---- graph ---------------------------------------------------------------
+
+GRAPH_ITERS = 12
+GRAPH_SCALE = 10**12
+#: make_scale_dataset's lineitem strides and the per-copy l_orderkey
+#: slice the graph is built from (orderkey % 10M < SLICE in each copy)
+STRIDE_PART, STRIDE_ORDER, SLICE = 1_000_000, 10_000_000, 10_000
+
+
+def strip_cached_lineage(plan: str) -> str:
+    """Keep the executed (final) segment only, then drop every
+    InMemoryRelation subtree (the cached-build lineage the printer
+    renders below each InMemoryTableScan): what remains is the work
+    the round itself does."""
+    final = plan.split("== Initial Plan ==")[0]
+    out: list[str] = []
+    skip_indent: int | None = None
+    for line in final.splitlines():
+        indent = len(line) - len(line.lstrip(" :"))
+        if skip_indent is not None:
+            if indent > skip_indent:
+                continue
+            skip_indent = None
+        if "InMemoryRelation" in line:
+            skip_indent = indent
+            continue
+        out.append(line)
+    return "\n".join(out)
+
+
+def python_replay(edges_c0, n_global, mult, iters):
+    """Pure-Python integer fixed-point replay of copy-0 with the
+    global scalars (see `graph_gates`). Returns ({id: rank_fp},
+    dangling nodes per copy)."""
+    deg: dict[int, int] = {}
+    for s, _d in edges_c0:
+        deg[s] = deg.get(s, 0) + 1
+    nodes = set()
+    for s, d in edges_c0:
+        nodes.add(s)
+        nodes.add(d)
+    dang = sorted(nodes - set(deg))
+    base = GRAPH_SCALE // n_global
+    r = {v: base for v in nodes}
+    for _t in range(iters):
+        inflow = {v: 0 for v in nodes}
+        for s, d in edges_c0:
+            inflow[d] += r[s] // deg[s]
+        dsh = mult * sum(r[d] // n_global for d in dang)
+        r = {
+            v: (15 * base + 85 * (inflow[v] + dsh)) // 100
+            for v in nodes
+        }
+    return r, len(dang)
+
+
+def graph_gates(spark, sf, con) -> list[Gate]:
+    """The GRAPH family (VERDICT r13 #4): pagerank over a DIRECTED
+    co-purchase graph of EVERY copy of the lineitem slice (edges
+    lower-partkey -> higher-partkey per shared order, deduped; at
+    sf100 ~1.72M nodes / ~8.07M edges) with a REAL dangling set, so
+    the dangling="uniform" path — the per-round 1-row broadcast — is
+    exercised at scale.
+
+    Plan pins, on the round segment that actually executed (captured
+    through pagerank's plan_sink after the first checkpoint). The
+    edge list is eagerly localCheckpointed so the operator's ENTIRE
+    lineage is file-free: no FileScan anywhere in the round plan;
+    links and the dangling set read from cache (InMemoryTableScan),
+    rank state from the checkpoint RDD (Scan ExistingRDD); at most two
+    corpus-keyed exchanges (ranks into the contribution join, the
+    dst-keyed sum) plus one single-partition 1-row dangling aggregate,
+    counted with cached-lineage subtrees stripped; the dangling mass
+    enters the update through a broadcast.
+
+    Value audit (bit-exact, the copy-identity argument): the key
+    strides make the graph N structurally IDENTICAL disconnected
+    components, and the fixed-point update is topology-local except
+    for two global scalars — n_nodes and the per-round dangling share
+    (exactly N x copy-0's while all copies carry identical ranks,
+    which holds by induction from the uniform init). So a pure-Python
+    integer replay of COPY 0 ONLY, with the GLOBAL n and N x copy-0's
+    dangling share, must equal the Spark ranks of copy-0 nodes bit
+    for bit. The preconditions are PROVED on the data first: N from
+    the counts, and copy-1's edge set re-extracted and compared to
+    copy-0's plus the strides, edge for edge."""
+    from pyspark.sql import functions as F
+
+    from conversadocs_spark import io
+    from conversadocs_spark.operators import pagerank as pr
+
+    li = (
+        io.table(spark, sf, "lineitem")
+        .where(F.col("l_orderkey") % STRIDE_ORDER < SLICE)
+        .select("l_orderkey", "l_partkey")
+    )
+    edges = (
+        li.alias("a")
+        .join(li.alias("b"), "l_orderkey")
+        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
+        .select(
+            F.col("a.l_partkey").alias("src"),
+            F.col("b.l_partkey").alias("dst"),
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    n_edges = edges.count()
+    plans: list[str] = []
+    con.execute(
+        "CREATE VIEW li AS SELECT l_orderkey, l_partkey FROM lineitem "
+        f"WHERE l_orderkey % {STRIDE_ORDER} < {SLICE}"
+    )
+
+    def copy_edges(k: int):
+        lo, hi = k * STRIDE_ORDER, k * STRIDE_ORDER + SLICE
+        return con.execute(
+            f"""
+            WITH e AS (
+                SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+                FROM li a JOIN li b USING (l_orderkey)
+                WHERE a.l_partkey < b.l_partkey
+                  AND l_orderkey >= {lo} AND l_orderkey < {hi}
+            )
+            SELECT src, dst FROM e ORDER BY src, dst
+            """
+        ).fetchall()
+
+    def check(ranks, n_ranked, rows) -> str:
+        round_plan = plans[0] if plans else ""
+        stripped = strip_cached_lineage(round_plan)
+        assert "FileScan" not in round_plan, "round plan rescans raw files"
+        assert "InMemoryTableScan" in round_plan, (
+            "links/dangling not read from cache"
+        )
+        assert "Scan ExistingRDD" in round_plan, (
+            "rank state not a checkpoint RDD"
+        )
+        n_hash = len(re.findall(r"Exchange hashpartitioning", stripped))
+        n_single = len(re.findall(r"Exchange SinglePartition", stripped))
+        assert n_hash <= 2, (
+            f"{n_hash} corpus-keyed exchanges in a round:\n{stripped}"
+        )
+        assert n_single <= 1, f"{n_single} single-partition exchanges"
+        assert "BroadcastExchange" in stripped or (
+            "BroadcastNestedLoopJoin" in stripped
+        ), "dangling mass not broadcast into the update"
+
+        c0 = copy_edges(0)
+        nodes_c0 = {v for edge in c0 for v in edge}
+        mult, rem = divmod(n_edges, len(c0))
+        assert rem == 0 and n_ranked == mult * len(nodes_c0), (
+            f"count identity broken: edges {n_edges} vs copy-0 "
+            f"{len(c0)}, nodes {n_ranked} vs copy-0 {len(nodes_c0)}"
+        )
+        shifted = [(s + STRIDE_PART, d + STRIDE_PART) for s, d in c0]
+        assert [tuple(x) for x in copy_edges(1)] == shifted, (
+            "copy-1 edge set is not copy-0 + stride"
+        )
+
+        want, n_dang_c0 = python_replay(c0, n_ranked, mult, GRAPH_ITERS)
+        got = {
+            row["id"]: row["rank_fp"]
+            for row in ranks.where(F.col("id") < STRIDE_PART).collect()
+        }
+        assert set(got) == set(want), (
+            f"copy-0 node set mismatch: {len(got)} vs {len(want)}"
+        )
+        bad = [v for v in want if got[v] != want[v]]
+        assert not bad, (
+            f"{len(bad)} of {len(want)} copy-0 ranks differ from the "
+            f"integer replay, e.g. id={bad[0]} spark={got[bad[0]]} "
+            f"replay={want[bad[0]]}"
+        )
+        return (
+            f"edges={n_edges} rounds={GRAPH_ITERS}; round plan: {n_hash} "
+            f"corpus-keyed exchange(s) + {n_single} 1-row dangling "
+            "aggregate (broadcast), links+dangling from cache, state "
+            f"from checkpoint RDD, zero FileScans; copy identity: {mult} "
+            f"x ({len(nodes_c0)} nodes / {len(c0)} edges), copy-1 = "
+            f"copy-0 + stride; all {len(want)} copy-0 ranks equal the "
+            f"integer replay bit for bit ({n_dang_c0} dangling/copy)"
+        )
+
+    return [
+        Gate(
+            "pagerank_uniform",
+            lambda: pr.pagerank_fixedpoint(
+                edges,
+                iters=GRAPH_ITERS,
+                scale=GRAPH_SCALE,
+                dangling="uniform",
+                # the audit is the bit-exact replay, not residual size;
+                # anything pathological still trips this generous guard
+                tol_fp=10**10,
+                plan_sink=plans,
+            ).persist(),
+            check,
+        )
+    ]
+
+
+# ---- lm ------------------------------------------------------------------
+
+
+def lm_gates(spark, sf, con) -> list[Gate]:
+    """The LM / EVAL family (VERDICT r14 #7): lm_bigram_score, whose
+    add-one bigram LM is TRAINED and APPLIED in one pass family whose
+    only exchanges are the model's own aggregation keys. Gram explode
+    -> two stacked hash aggregates (model size bounded by observed
+    bigrams, not corpus size); the vocab scalar reaches the model as a
+    1-row broadcast (BroadcastExchange pinned); scoring is one join on
+    the gram key (SMJ ALLOWED — at 5M docs the observed-bigram model
+    legitimately outgrows the broadcast threshold) plus the final
+    doc_id aggregation; NOTHING exchanges outside {doc_id, gram, w1,
+    tok}.
+
+    Values (independent replay, not the same plan): fill — exactly the
+    docs with >= 2 tokens are scored, n_bigrams == tokens - 1 for 100
+    sampled docs; doc replay — their avg_logprob re-derived from a
+    fresh, unpersisted gram explode through round(sum/n/1e6, 6),
+    bit-equal (the BIGINT fixed point makes the sum order-insensitive);
+    model replay — 25 gram lpf values re-derived through
+    round(log((c+1)/(c1+V)) * 1e6)."""
+    from pyspark.sql import functions as F
+
+    from conversadocs_spark import io
+    from conversadocs_spark.plans import QUERIES
+    from conversadocs_spark.plans.lm import doc_bigrams
+
+    d = io.table(spark, sf, "documents")
+    print(f"documents: {d.count()}")
+
+    def check(df, n, rows) -> str:
+        exp_docs = d.where(F.size(F.split("text", " ")) >= 2).count()
+        assert n == exp_docs, (
+            f"fill: {n} scored docs vs {exp_docs} docs with >=2 tokens"
+        )
+        sample = df.limit(100).collect()
+        ids = [r.doc_id for r in sample]
+        tok_n = dict(
+            d.where(F.col("doc_id").isin(ids))
+            .select("doc_id", F.size(F.split("text", " ")))
+            .collect()
+        )
+        for r in sample:
+            assert r.n_bigrams == tok_n[r.doc_id] - 1, (
+                f"doc {r.doc_id}: n_bigrams {r.n_bigrams} != "
+                f"{tok_n[r.doc_id]} tokens - 1"
+            )
+
+        t0 = time.time()
+        toks = d.select("doc_id", F.split("text", " ").alias("t"))
+        grams = doc_bigrams(toks)  # NOT persisted — a fresh derivation
+        doc_grams = grams.where(F.col("doc_id").isin(ids))
+        need = doc_grams.select("gram").distinct()
+        model = (
+            grams.join(F.broadcast(need), "gram", "left_semi")
+            .groupBy(F.split("gram", " ").getItem(0).alias("w1"), "gram")
+            .agg(F.count("*").alias("c"))
+        )
+        # c1/V must come from the FULL corpus (the model is global):
+        # c1 for the sampled w1 contexts, V as the global distinct-token
+        # count — both re-derived from scratch.
+        w1s = model.select("w1").distinct()
+        ctx = (
+            grams.select(F.split("gram", " ").getItem(0).alias("w1"))
+            .join(F.broadcast(w1s), "w1", "left_semi")
+            .groupBy("w1")
+            .agg(F.count("*").cast("bigint").alias("c1"))
+        )
+        vocab = toks.select(F.explode("t").alias("tok")).agg(
+            F.count_distinct("tok").alias("v")
+        )
+        lp = model.join(ctx, "w1").crossJoin(F.broadcast(vocab)).select(
+            "gram",
+            F.round(
+                F.log(
+                    (F.col("c") + F.lit(1.0)) / (F.col("c1") + F.col("v"))
+                )
+                * F.lit(1000000.0),
+                0,
+            )
+            .cast("bigint")
+            .alias("lpf"),
+        )
+        replay = {
+            r.doc_id: (r.n_bigrams, r.avg_logprob)
+            for r in doc_grams.join(lp, "gram")
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").cast("bigint").alias("n_bigrams"),
+                F.round(
+                    F.sum("lpf").cast("double")
+                    / (F.count("*") * F.lit(1000000.0)),
+                    6,
+                ).alias("avg_logprob"),
+            )
+            .collect()
+        }
+        for r in sample:
+            assert (r.n_bigrams, r.avg_logprob) == replay[r.doc_id], (
+                f"doc {r.doc_id}: scored ({r.n_bigrams}, {r.avg_logprob})"
+                f" != replay {replay[r.doc_id]}"
+            )
+        # spot-check 25 individual gram lpf values through the formula
+        lps = lp.limit(25).collect()
+        cs = {
+            r.gram: (r.c, r.c1)
+            for r in model.join(ctx, "w1")
+            .where(F.col("gram").isin([r.gram for r in lps]))
+            .collect()
+        }
+        v = vocab.first()["v"]
+        for r in lps:
+            c, c1 = cs[r.gram]
+            want = round(math.log((c + 1.0) / (c1 + v)) * 1e6)
+            assert r.lpf == int(want), (
+                f"gram {r.gram!r}: lpf {r.lpf} != formula {want}"
+            )
+        return (
+            f"docs-replayed={len(sample)}/100 bit-equal "
+            f"grams-replayed={len(lps)} V={v} "
+            f"(replay {time.time() - t0:.1f}s)"
+        )
+
+    return [
+        Gate(
+            "lm_bigram_score",
+            lambda: QUERIES["lm_bigram_score"](spark, sf),
+            check,
+            keys=("doc_id", "gram", "w1", "tok"),
+            broadcast=True,
+        )
+    ]
+
+
+# ---- select --------------------------------------------------------------
+
+
+def select_gates(spark, sf, con) -> list[Gate]:
+    """The SELECTION / PACKING path: token_budget_select and
+    seq_pack_ffd.
+
+    token_budget_select's 100 TB claim is the two-level decomposition:
+    the corpus NEVER meets a corpus-wide single-reducer sort — token
+    sums aggregate per distinct quality value (bounded bucket table),
+    the running sum runs over buckets only, and the threshold
+    broadcasts back. Plan: >=1 BroadcastExchange; hash exchanges keyed
+    only on quality; every SinglePartition exchange (<= 4) is fed by
+    the quality-bucket hash exchange or a 1-row budget/broadcast
+    relation, never by the corpus scan side. Values, re-derived
+    independently: kept tokens <= the re-computed 25% budget; NO
+    dropped doc outranks a kept doc in (quality desc, doc_id asc);
+    maximality (the best dropped doc would break the budget).
+
+    seq_pack_ffd's claim is shard-bounded determinism: every
+    applyInPandas group is <= 400 docs at ANY corpus size. Values:
+    every doc packed exactly once; per-pack token sums <= 256 except
+    single-doc oversized packs; shard_id == doc_id div 400; one
+    mid-corpus shard's assignment equals a pure-Python FFD replay,
+    row for row."""
+    from pyspark.sql import functions as F
+
+    from conversadocs_spark import io
+    from conversadocs_spark.plans import QUERIES
+
+    docs = io.table(spark, sf, "documents")
+    n_docs = docs.count()
+    print(f"documents: {n_docs}")
+
+    def check_budget(sel, n_kept, rows) -> str:
+        # every SinglePartition exchange must sit on the VALUE-DOMAIN
+        # side: its feeding exchange (the next Exchange line below it
+        # in the printed tree) is the quality-bucket hash exchange,
+        # so the single partition only ever sees <= #distinct-quality
+        # rows — never the corpus. 4 such nodes = the bucket table
+        # re-derived per branch (running sum + threshold, x2).
+        lines = final_plan(sel).splitlines()
+        n_single = 0
+        for i, line in enumerate(lines):
+            if "Exchange SinglePartition" not in line:
+                continue
+            n_single += 1
+            feeder = next(
+                (
+                    ln for ln in lines[i + 1:]
+                    if "Exchange" in ln or "Scan" in ln
+                ),
+                "",
+            )
+            assert (
+                "quality" in feeder            # bucket hash exchange
+                or "budget" in feeder          # reused 1-row budget
+                or "BroadcastExchange" in feeder  # 1-row broadcast
+            ), (
+                "SinglePartition fed by non-bucket relation: "
+                f"{feeder.strip()[:120]}"
+            )
+        assert n_single <= 4, f"{n_single} SinglePartition exchanges"
+        # independent value re-derivation
+        words = F.split(F.col("text"), " ")
+        n_words = F.size(words).cast("double")
+        n_uniq = F.size(F.array_distinct(words)).cast("double")
+        n_chars = F.length("text").cast("double")
+        n_punct = F.size(
+            F.regexp_extract_all("text", F.lit(r"[^A-Za-z0-9\s]"), 0)
+        ).cast("double")
+        q = F.round(
+            F.least(n_words / 50, F.lit(1.0)) * 0.4
+            + (n_uniq / n_words) * 0.4
+            + (1 - F.least(n_punct / n_chars, F.lit(1.0))) * 0.2,
+            6,
+        )
+        scored = docs.select(
+            "doc_id",
+            q.alias("quality_score"),
+            F.size(words).cast("long").alias("n_tokens"),
+        ).persist()
+        try:
+            budget = scored.agg(
+                (F.sum("n_tokens") * 0.25).alias("budget")
+            ).first()["budget"]
+            kept_sum = sel.agg(F.sum("n_tokens").alias("s")).first()["s"]
+            assert kept_sum <= budget, (
+                f"kept {kept_sum} tokens > budget {budget:.0f}"
+            )
+            # selection-order boundary: order is (quality desc, doc_id
+            # asc); no dropped doc may precede a kept doc in that order
+            dropped = scored.join(sel.select("doc_id"), "doc_id", "left_anti")
+            best_dropped = dropped.orderBy(
+                F.desc("quality_score"), F.asc("doc_id")
+            ).limit(1).collect()
+            worst_kept = sel.orderBy(
+                F.asc("quality_score"), F.desc("doc_id")
+            ).limit(1).collect()
+            if best_dropped and worst_kept:
+                bd, wk = best_dropped[0], worst_kept[0]
+                assert (bd.quality_score, -bd.doc_id) < (
+                    wk.quality_score, -wk.doc_id,
+                ), (
+                    f"boundary violated: dropped ({bd.quality_score},"
+                    f"{bd.doc_id}) outranks kept ({wk.quality_score},"
+                    f"{wk.doc_id})"
+                )
+                # maximality: the next doc in order would break the budget
+                assert kept_sum + bd.n_tokens > budget, (
+                    f"not maximal: next doc ({bd.n_tokens} tokens) still "
+                    f"fits ({kept_sum} + it <= {budget:.0f})"
+                )
+        finally:
+            scored.unpersist()
+        return (
+            f"kept={n_kept}/{n_docs} util={kept_sum / budget:.4f} "
+            f"single_part_ex={n_single}"
+        )
+
+    def check_pack(packed, n_rows, rows) -> str:
+        assert n_rows == n_docs, f"{n_rows} packed rows != {n_docs}"
+        n_distinct = packed.select("doc_id").distinct().count()
+        assert n_distinct == n_docs, "doc packed more than once"
+        # pack_id is SHARD-LOCAL (operators/packing.py) — the pack
+        # key is (shard_id, pack_id)
+        per_pack = packed.groupBy("shard_id", "pack_id").agg(
+            F.sum("n_tokens").alias("tok"),
+            F.count("*").alias("members"),
+        )
+        n_over = per_pack.where(
+            (F.col("tok") > 256) & (F.col("members") > 1)
+        ).count()
+        assert n_over == 0, f"{n_over} multi-doc packs exceed the 256 budget"
+        n_span = packed.where(
+            (F.col("doc_id") / 400).cast("long") != F.col("shard_id")
+        ).count()
+        assert n_span == 0, f"{n_span} rows with shard_id != doc_id div 400"
+        # exact FFD replay of one mid-corpus shard; doc ids are STRIDED
+        # in the scale sets, so pick the median EXISTING shard
+        shards = [
+            r.shard_id
+            for r in packed.select("shard_id").distinct()
+            .orderBy("shard_id").collect()
+        ]
+        shard_id = shards[len(shards) // 2]
+        sample = packed.where(F.col("shard_id") == shard_id).select(
+            "doc_id", "n_tokens", "pack_id"
+        ).collect()
+        assert sample, f"sample shard {shard_id} empty"
+        packs: list[int] = []
+        assign: dict[int, int] = {}
+        for doc_id, n in sorted(
+            ((r.doc_id, r.n_tokens) for r in sample),
+            key=lambda x: (-x[1], x[0]),
+        ):
+            for i, used in enumerate(packs):
+                if used + n <= 256:
+                    packs[i] = used + n
+                    assign[doc_id] = i
+                    break
+            else:
+                packs.append(n)
+                assign[doc_id] = len(packs) - 1
+        got = {r.doc_id: r.pack_id for r in sample}
+        base = min(got.values())
+        mismatches = [d for d in assign if got[d] - base != assign[d]]
+        assert not mismatches, (
+            f"FFD replay mismatch on shard {shard_id}: {mismatches[:5]}"
+        )
+        return f"packs={per_pack.count()} shard-replay-exact"
+
+    return [
+        Gate(
+            "token_budget_select",
+            lambda: QUERIES["token_budget_select"](spark, sf).persist(),
+            check_budget,
+            keys=("quality",),
+            broadcast=True,
+        ),
+        Gate(
+            "seq_pack_ffd",
+            lambda: QUERIES["seq_pack_ffd"](spark, sf).persist(),
+            check_pack,
+        ),
+    ]
+
+
+FAMILIES: dict[str, Callable[..., list[Gate]]] = {
+    "serving": serving_gates,
+    "quality": quality_gates,
+    "dedup": dedup_gates,
+    "graph": graph_gates,
+    "lm": lm_gates,
+    "select": select_gates,
+}
 
 
 def run_scale_audits(spark, qs, sf_dir) -> list[str]:
@@ -787,6 +1855,46 @@ def audit_hot_bucket_cap(spark) -> list[str]:
         flush=True,
     )
     return [] if ok else ["hot_bucket_cap"]
+
+
+def main() -> None:
+    from conversadocs_spark.plans import QUERIES
+    from conversadocs_spark.session import get_spark
+
+    ap = argparse.ArgumentParser(
+        description="Oracle sweep, scale audits and sf100 family gates."
+    )
+    ap.add_argument("sf_dir")
+    ap.add_argument("names", nargs="*", help="check only these queries")
+    ap.add_argument("--family", choices=sorted(FAMILIES))
+    ap.add_argument(
+        "--rebuild", action="store_true",
+        help="with --family: first rebuild SF_DIR from the sibling sf10",
+    )
+    args = ap.parse_args()
+    if args.family and args.names:
+        ap.error("--family takes no query names")
+    if args.rebuild and not args.family:
+        ap.error("--rebuild needs --family")
+    # the sweep collects FULL outputs for the hash compare; at sf10
+    # some legitimate results serialize past the 1g default
+    os.environ.setdefault("SPARK_GRAFT_MAX_RESULT_SIZE", "8g")
+    spark = get_spark(app_name="scale-gate")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    if args.family:
+        if args.rebuild:
+            t0 = time.time()
+            rebuild_sf100(spark, args.sf_dir)
+            print(f"build: {time.time() - t0:.1f}s")
+        failed = run_family(spark, args.sf_dir, args.family)
+    else:
+        failed = run_sweep(spark, args.sf_dir, args.names or sorted(QUERIES))
+        if not args.names:
+            audit_bad = run_scale_audits(spark, QUERIES, args.sf_dir)
+            print("AUDIT FAILURES:", audit_bad or "none")
+            failed += audit_bad
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":

@@ -9,6 +9,7 @@ FIXTURES.md tolerance rules).
 from __future__ import annotations
 
 import math
+import os
 from datetime import date, datetime
 
 import duckdb
@@ -16,12 +17,22 @@ import duckdb
 from conversadocs_spark.io import TABLES
 
 
-def run_duckdb(sql: str, sf_dir: str):
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per table in ``TABLES``.
+
+    Accepts both file-form tables (``{t}.parquet``, the driver's
+    fixtures) and Spark's directory-form tables
+    (``{t}.parquet/*.parquet``, the scale sets)."""
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        glob = "/*.parquet" if os.path.isdir(path) else ""
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}{glob}'")
+    return con
+
+
+def run_duckdb(sql: str, sf_dir: str):
+    con = duckdb_views(sf_dir)
     cur = con.execute(sql)
     cols = [d[0] for d in cur.description]
     rows = cur.fetchall()
@@ -57,28 +68,28 @@ def _normalize(cols, rows):
     return [cols[i] for i in order], out
 
 
+def mismatch(s_cols, s_rows, o_cols, o_rows) -> str | None:
+    """Compare a Spark result with its oracle's after ``_normalize``;
+    None when they agree, else what differs."""
+    s_cols_n, s_norm = _normalize(s_cols, s_rows)
+    o_cols_n, o_norm = _normalize(o_cols, o_rows)
+    if s_cols_n != o_cols_n:
+        return f"column mismatch spark={s_cols_n} oracle={o_cols_n}"
+    if len(s_norm) != len(o_norm):
+        return f"row count spark={len(s_norm)} oracle={len(o_norm)}"
+    bad = [(i, a, b) for i, (a, b) in enumerate(zip(s_norm, o_norm)) if a != b]
+    if bad:
+        return f"{len(bad)} row mismatches; first 3: {bad[:3]}"
+    return None
+
+
 def assert_query_matches_oracle(spark, name: str, sf_dir: str) -> None:
     """Run queries()[name] and oracle_sql()[name]; assert they agree."""
     from conversadocs_spark.plans import ORACLES, QUERIES
 
     sdf = QUERIES[name](spark, sf_dir)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-
-    o_cols, o_rows = run_duckdb(ORACLES[name], sf_dir)
-
-    s_cols_n, s_norm = _normalize(s_cols, s_rows)
-    o_cols_n, o_norm = _normalize(o_cols, o_rows)
-
-    assert s_cols_n == o_cols_n, (
-        f"{name}: column mismatch spark={s_cols_n} oracle={o_cols_n}"
+    diff = mismatch(
+        sdf.columns, [tuple(r) for r in sdf.collect()],
+        *run_duckdb(ORACLES[name], sf_dir),
     )
-    assert len(s_norm) == len(o_norm), (
-        f"{name}: row count spark={len(s_norm)} oracle={len(o_norm)}"
-    )
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(s_norm, o_norm)) if a != b
-    ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} row mismatches; first 3: {mismatches[:3]}"
-    )
+    assert diff is None, f"{name}: {diff}"

@@ -1,4 +1,6 @@
-"""Unit tests for scripts/scale_gate.py's big-output value signal.
+"""Unit tests for the gate tooling: tests/oracle.py's comparator,
+scripts/scale_gate.py's value checks, scripts/make_scale_dataset.py's
+stride guard and scripts/oracle_typelint.py.
 
 Above the gate's hash-compare cap the only feasible check is
 engine-side: per-column checksums computed by BOTH Spark and DuckDB
@@ -10,25 +12,19 @@ COUNT still matches (exactly the blind spot count-parity had), and
 
 from __future__ import annotations
 
-import importlib.util
 import os
+from datetime import date, datetime, timezone
 
 import duckdb
 import pytest
 
-_GATE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "scripts",
-    "scale_gate.py",
-)
-
+from tests.oracle import _normalize, duckdb_views, mismatch
 
 @pytest.fixture(scope="module")
 def gate():
-    spec = importlib.util.spec_from_file_location("scale_gate", _GATE)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    from scripts import scale_gate
+
+    return scale_gate
 
 
 _ROWS = [
@@ -131,12 +127,7 @@ def test_quadratic_checks_green_on_real_queries(
 ):
     from conversadocs_spark.plans import QUERIES
 
-    con = duckdb.connect()
-    for t in ("documents", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{sf_oracle_dir}/{t}.parquet'"
-        )
+    con = duckdb_views(sf_oracle_dir)
     for name, check in gate.QUADRATIC_CHECKS.items():
         sdf = QUERIES[name](spark, sf_oracle_dir)
         ok, note = check(spark, con, sdf)
@@ -253,17 +244,11 @@ def test_basket_checker_catches_wrong_lift(spark, gate):
 # (b) find ZERO offenders in the live registry.
 # ---------------------------------------------------------------- #
 
-_TYPELINT = os.path.join(
-    os.path.dirname(_GATE), "oracle_typelint.py")
-
-
 @pytest.fixture(scope="module")
 def typelint():
-    spec = importlib.util.spec_from_file_location(
-        "oracle_typelint", _TYPELINT)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    from scripts import oracle_typelint
+
+    return oracle_typelint
 
 
 def test_typelint_catches_injected_hugeint(typelint):
@@ -287,13 +272,7 @@ def test_typelint_registry_clean(typelint):
     if not os.path.isdir(sf):
         pytest.skip(f"no testdata at {sf}")
     from conversadocs_spark.plans import ORACLES
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders "
-              "lineitem events documents embeddings").split():
-        p = os.path.join(sf, f"{t}.parquet")
-        glob = "/*.parquet" if os.path.isdir(p) else ""
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}{glob}'")
-    assert typelint.hugeint_offenders(con, ORACLES) == []
+    assert typelint.hugeint_offenders(duckdb_views(sf), ORACLES) == []
 
 
 def test_typelint_class_parity_helpers(typelint):
@@ -311,3 +290,88 @@ def test_typelint_class_parity_helpers(typelint):
     assert bad and "a:" in bad[0]
     assert typelint.class_mismatches(
         [("a", "bigint")], ["a"], ["INTEGER"]) == []
+
+
+# ---------------------------------------------------------------- #
+# tests/oracle.py is the one comparator every gate imports. These are
+# the cell kinds on which the per-script copies it replaced disagreed
+# with it (they only rounded top-level floats).
+# ---------------------------------------------------------------- #
+
+
+@pytest.mark.parametrize("cell, want", [
+    (None, None),
+    (True, True),
+    (7, 7),
+    (0.12345649, 0.123456),
+    (float("nan"), "NaN"),
+    ([1.0000004, 2, None], (1.0, 2, None)),
+    ({"b": 0.1234567, "a": None}, (("a", None), ("b", 0.123457))),
+    (datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc),
+     "2024-01-02T03:04:05"),
+    (datetime(2024, 1, 2, 3, 4, 5), "2024-01-02T03:04:05"),
+    (date(2024, 1, 2), "2024-01-02"),
+])
+def test_normalize_cell_kinds(cell, want):
+    assert _normalize(["c"], [(cell,)]) == (["c"], [(want,)])
+
+
+def test_normalize_sorts_columns_by_name_and_none_last():
+    cols, rows = _normalize(["b", "a"], [(None, 2), ("x", 1), (None, 1)])
+    assert cols == ["a", "b"]
+    assert rows == [(1, "x"), (1, None), (2, None)]
+
+
+def test_mismatch_equates_nan_and_tz_and_reports_drift():
+    nan, ts = float("nan"), datetime(2024, 1, 2, tzinfo=timezone.utc)
+    assert mismatch(["x", "t"], [(nan, ts)],
+                    ["t", "x"], [(ts.replace(tzinfo=None), nan)]) is None
+    assert "row count" in mismatch(["x"], [(1,)], ["x"], [])
+    assert "column mismatch" in mismatch(["x"], [(1,)], ["y"], [(1,)])
+    assert "1 row mismatches" in mismatch(["x"], [(1.5,)], ["x"], [(1.25,)])
+
+
+def test_scale_dataset_refuses_chained_build(spark, sf_dir, tmp_path):
+    """An unstrided source builds; a source that is already a strided
+    copy raises before anything is written (the sf0.1 -> sf1 -> sf10
+    chain that collided doc_id/vec_id)."""
+    from scripts.make_scale_dataset import build
+
+    once = str(tmp_path / "x2")
+    build(spark, sf_dir, once, copies=2)
+    assert os.path.isdir(os.path.join(once, "documents.parquet"))
+    twice = str(tmp_path / "x4")
+    with pytest.raises(ValueError, match="per-copy stride"):
+        build(spark, once, twice, copies=2)
+    assert not os.path.exists(twice)
+
+
+def test_family_plan_rules(gate):
+    """One exchange allowlist for every sf100 family: first allowed key
+    wins, the serving tag records the semi-join shape, and broadcast /
+    forbidden-operator rules fail loudly."""
+    plan = "\n".join([
+        "+- Exchange hashpartitioning(query_id#1, 8)",
+        "   +- Exchange hashpartitioning(vec_id#2, 8)",
+        "      +- BroadcastExchange HashedRelationBroadcastMode",
+    ])
+    serving = gate.Gate(
+        "q", None, None,
+        keys=("hashpartitioning(query_id", "hashpartitioning(vec_id"),
+        tag=gate._serving_shape(True),
+    )
+    assert gate.check_plan(serving, plan) == "shuffled-semi"
+    assert gate.check_plan(
+        gate.Gate("q", None, None, keys=("id#",), broadcast=True), plan
+    ) == "broadcast+2ex"
+    with pytest.raises(AssertionError, match="outside the allowed keys"):
+        gate.check_plan(gate.Gate("q", None, None, keys=("query_id",)), plan)
+    with pytest.raises(AssertionError, match="BroadcastExchange at scale"):
+        gate.check_plan(
+            gate.Gate("q", None, None, forbid=("BroadcastExchange",)), plan
+        )
+    with pytest.raises(AssertionError, match="no broadcast"):
+        gate.check_plan(
+            gate.Gate("q", None, None, broadcast=True),
+            plan.replace("BroadcastExchange", "Project"),
+        )
