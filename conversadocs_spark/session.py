@@ -14,6 +14,20 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: ``spark.sql.codegen.cache.maxEntries``, the size of the JVM-wide LRU
+#: cache of Janino-compiled classes (a static conf: it takes effect only
+#: when the session's JVM starts). Spark's default of 100 is below the
+#: working set: one pass of perfbench's ``serve`` mix generates about
+#: 200 distinct classes and one ``batch`` pass about 370, so the LRU
+#: evicted every class before its query came round again and every
+#: steady-state pass recompiled them all (BASELINE.md, perfbench A/B
+#: ledger), inside each query, between its adaptive stages. The whole
+#: 225-query registry run in one session generates 3,073 (sf0.001, first
+#: pass; a second pass adds 62, from queries whose generated code embeds
+#: per-run ids, and a pass at sf0.01 adds 232 whose plans differ by
+#: scale). 4096 holds it all.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "conversadocs-spark",
@@ -25,6 +39,9 @@ def get_spark(
     - AQE: runtime coalescing + skew-join handling; at 100 TB this is
       what turns a bad static shuffle count into a workable one.
     - Arrow: all pandas_udf / mapInPandas traffic is Arrow-batched.
+    - Generated code: the compiled-class cache holds
+      ``CODEGEN_CACHE_ENTRIES`` classes, the registry's whole working
+      set, so a repeated query finds its classes compiled.
     - Broadcast threshold left at default (10 MB): dimension tables
       (region/nation/supplier) broadcast automatically; we additionally
       hint with F.broadcast where the stats may not be known.
@@ -70,6 +87,9 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
     )
     if max_part is not None:
         builder = builder.config(

@@ -230,11 +230,19 @@ def read_versioned(
     spark: SparkSession, table_path: str, version: int | None = None
 ) -> DataFrame:
     """Read a specific version (time travel) or the latest committed
-    one (the marker, atomically swapped by write_versioned)."""
+    one (the marker, atomically swapped by write_versioned).
+
+    The version dir is read through ``io.read_parquet``: resolved once
+    per session while its files' fingerprint holds, each call with
+    attribute ids of its own. A new version is a new path, and a
+    version dir replaced by rename has a new fingerprint, so neither
+    is served from a stale listing."""
     import os
 
+    from conversadocs_spark.io import read_parquet
+
     version = _resolve_version(table_path, version)
-    return spark.read.parquet(os.path.join(table_path, f"v={version}"))
+    return read_parquet(spark, os.path.join(table_path, f"v={version}"))
 
 
 def read_manifest(

@@ -16,7 +16,10 @@ script runs ONLY the cheap invariants (no SparkSession, no data):
   6. no unconditional `F.broadcast(` outside the documented
      bounded-side allowlist (the knn_filtered lesson, ADVICE r7),
   7. oracle result types driver-safe (scripts/oracle_typelint.py),
-  8. no result-cell normalizer outside tests/oracle.py.
+  8. no result-cell normalizer outside tests/oracle.py,
+  9. no direct parquet read of an `sf_dir` path outside
+     conversadocs_spark/io.py (fixture reads go through its
+     per-session relation cache).
 
 Usage: python scripts/preflight.py   (exit 0 = safe to snapshot)
 Run it before every snapshot-sized commit; the full pytest suite
@@ -36,6 +39,8 @@ FAILS: list[str] = []
 
 #: a result-cell normalizer: rounding cells to 6 places, or a norm()
 NORMALIZER_RE = re.compile(r"round\(v, 6\)|def norm\(")
+#: a fixture read that bypasses io.table's relation cache
+SF_READ_RE = re.compile(r"spark\.read\.parquet\([^)]*\bsf_dir", re.S)
 
 
 def check(ok: bool, msg: str) -> None:
@@ -159,6 +164,25 @@ def main() -> int:
     check(not copies,
           f"no cell normalizer outside tests/oracle.py (copies: "
           f"{copies or '[]'})")
+
+    # Fixture reads go through io.table: a direct spark.read.parquet of
+    # an sf_dir path pays a schema-inference job on every call.
+    sources = [os.path.join(REPO, f) for f in os.listdir(REPO)]
+    for sub in ("conversadocs_spark", "scripts", "tests"):
+        for root, _dirs, files in os.walk(os.path.join(REPO, sub)):
+            sources += [os.path.join(root, f) for f in files]
+    uncached = []
+    for full in sources:
+        rel = os.path.relpath(full, REPO).replace(os.sep, "/")
+        if rel.endswith(".py") and rel != "conversadocs_spark/io.py":
+            text = open(full).read()
+            uncached += [
+                f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+                for m in SF_READ_RE.finditer(text)
+            ]
+    check(not uncached,
+          f"no spark.read.parquet of an sf_dir path outside io.py "
+          f"(offenders: {uncached or '[]'})")
 
     if FAILS:
         print(f"\npreflight: {len(FAILS)} FAILURE(S) — do not snapshot")

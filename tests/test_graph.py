@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from conversadocs_spark import io
 from conversadocs_spark.operators.pagerank import pagerank
 from conversadocs_spark.operators.sketch import heavy_hitters
+from conversadocs_spark.plans.graph import BOUNDED_LOOP_CONF
 from conversadocs_spark.plans.registry import QUERIES
 
 
@@ -175,12 +176,13 @@ def _strip_cached_lineage(plan: str) -> str:
 
 def test_pagerank_bounded_loop_is_exchange_free(spark):
     """VERDICT r15 #7: the bounded-graph loop_conf
-    (shuffle.partitions=1, AQE off) makes every per-round
+    (BOUNDED_LOOP_CONF, the conf graph_pagerank_exact runs under:
+    shuffle.partitions=1, AQE off, codegen off) makes every per-round
     join/groupBy clustering requirement satisfiable by
     SinglePartition, so the executed round segment must contain ZERO
-    Exchange of any kind — the bench's biggest win, pinned so a
-    future AQE/conf drift can't silently restore the per-round
-    shuffle. The same call WITHOUT loop_conf must keep the session
+    Exchange of any kind and no WholeStageCodegen — the bench's
+    biggest win, pinned so a future AQE/conf drift can't silently
+    restore the per-round shuffle or compiles. The same call WITHOUT loop_conf must keep the session
     shuffle width (corpus-scale path unchanged) and leave the session
     conf untouched afterward."""
     from conversadocs_spark.operators import pagerank as pr
@@ -193,15 +195,7 @@ def test_pagerank_bounded_loop_is_exchange_free(spark):
     pr.pagerank_fixedpoint(
         df, iters=4, tol_fp=10**12, dangling="none",
         checkpoint_every=4,
-        loop_conf={
-            # mirrors graph_pagerank_exact's loop_conf exactly
-            # (including the r16 codegen-off key) so the pin covers
-            # the conf the bench query actually runs under
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": "1",
-            "spark.sql.join.preferSortMergeJoin": "false",
-            "spark.sql.codegen.wholeStage": "false",
-        },
+        loop_conf=BOUNDED_LOOP_CONF,
         plan_sink=sink,
     ).collect()
     assert sink and sink[0], "round plan not captured via plan_sink"
@@ -214,6 +208,13 @@ def test_pagerank_bounded_loop_is_exchange_free(spark):
     assert not re.search(
         r"Exchange (hash|range|single)partitioning", stripped, re.I
     ), f"bounded loop round re-grew a shuffle:\n{stripped}"
+    # no WholeStageCodegen either (the r16 codegen-off key): a drifted
+    # or misspelt key would silently bring back the per-checkpoint
+    # Janino compiles. The tree string prints each operator inside a
+    # WholeStageCodegen wrapper with a "*(<stage id>)" prefix.
+    assert not re.search(r"WholeStageCodegen|\*\(\d+\)", stripped), (
+        f"bounded loop round is whole-stage compiled:\n{stripped}"
+    )
 
     # corpus-scale path: no loop_conf -> session width inside the
     # round (hash exchanges present), session conf intact after
