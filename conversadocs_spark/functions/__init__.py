@@ -1,7 +1,7 @@
 """Pure column-expression builders (no UDFs unless unavoidable).
 
-Everything here returns pyspark Column expressions that stay inside
-whole-stage codegen — the JVM-side fast path.
+Everything here returns pyspark Column expressions evaluated JVM-side,
+with no Python worker (array math: see functions/vector.py).
 """
 
 from conversadocs_spark.functions.vector import (  # noqa: F401

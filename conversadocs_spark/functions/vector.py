@@ -4,9 +4,9 @@ Reference semantics: the reference embeds chunks with a 384-dim
 L2-normalized sentence-transformer and ranks by exact cosine similarity
 (/root/reference/conversadocs/bones.py:71, bones.py:74, bones.py:78).
 Here the same math is expressed with ``zip_with`` + ``aggregate`` higher
-order functions so it runs JVM-side under whole-stage codegen — no
-Python in the hot path, dimension-agnostic (FIXTURES.md: test dim is 64,
-the reference's model is 384).
+order functions so it runs JVM-side, interpreted (Spark 4.1 implements
+them as CodegenFallback) — no Python in the hot path, dimension-agnostic
+(FIXTURES.md: test dim is 64, the reference's model is 384).
 
 All lambdas cast to double before multiplying so Spark (float32 arrays)
 and the DuckDB oracle agree to well past the round(6) tolerance.
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 
 def dot_product(a: Column, b: Column) -> Column:
-    """Sum_i a[i]*b[i] via zip_with + aggregate (whole-stage codegen)."""
+    """Sum_i a[i]*b[i] via zip_with + aggregate (interpreted, JVM-side)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),

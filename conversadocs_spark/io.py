@@ -68,9 +68,7 @@ def _fingerprint(path: str) -> tuple:
     return tuple(sorted(leaves))
 
 
-def read_parquet(
-    spark: SparkSession, path: str, nanos_as_long: bool = False
-) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, resolved once per session.
 
     Cache contract:
@@ -89,9 +87,7 @@ def read_parquet(
 
     A path that is not a local file or directory (a URI, a glob, a
     missing path) is read uncached, and Spark reports what is wrong
-    with it. ``nanos_as_long`` sets ``spark.sql.legacy.parquet.nanosAsLong``
-    at resolution; the conf stays set because the scan reads it again
-    when it executes.
+    with it.
     """
     try:
         # taken BEFORE resolving: a change racing the resolution leaves an
@@ -103,8 +99,6 @@ def read_parquet(
     cache = _RELATIONS.setdefault(spark, {})
     hit = cache.get(path)
     if hit is None or hit[0] != fp:
-        if nanos_as_long:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         relation = spark.read.parquet(path)._jdf.queryExecution().analyzed()
         # a deleted path (a vacuumed version, a replaced stage) is never
         # read again; drop its entry rather than keep its listing alive.
@@ -128,10 +122,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts``: the current fixtures store it as TIMESTAMP(MICROS,
     not adjusted to UTC), which Spark reads as TIMESTAMP_NTZ. A fixture
     generated with TIMESTAMP(NANOS), as FIXTURES.md documents, Spark 4
-    rejects outright (PARQUET_TYPE_ILLEGAL); for that one we read ts as
-    a long (legacy conf, runtime-settable, set when the path is
-    resolved) and truncate ns -> us, matching DuckDB's own ns -> us
-    truncation so oracle comparisons agree.
+    rejects outright (PARQUET_TYPE_ILLEGAL); ``session.get_spark``
+    therefore reads it as a long (the legacy
+    ``spark.sql.legacy.parquet.nanosAsLong``, a session default) and this
+    truncates ns -> us, matching DuckDB's own ns -> us truncation so
+    oracle comparisons agree.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -140,7 +135,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType
 
-        df = read_parquet(spark, path, nanos_as_long=True)
+        df = read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df

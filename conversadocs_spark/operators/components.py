@@ -27,6 +27,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from conversadocs_spark.session import child_session, rebind
+
 # Rounds executed by the most recent connected_components() call in
 # this process (1 = the fused first round alone; +1 per loop round
 # until the early fixpoint). Observability only — the early-fixpoint
@@ -50,16 +52,9 @@ def connected_components(
     deterministic, so the result is oracle-checkable against a
     transitive-closure SQL formulation.
 
-    Not concurrency-safe (ADVICE r15): the loop narrows the
-    session-global ``spark.sql.shuffle.partitions`` for its duration
-    (restored in ``finally``), so a query submitted concurrently on
-    the SAME SparkSession during the loop would inherit the narrowed
-    width, and interleaved calls could restore a stale value. All
-    repo callers (bench, gates, tests) drive the session from one
-    thread; callers that need concurrency should run the loop on an
-    isolated session (``spark.newSession()``-style conf scope) or
-    serialize calls. Returned labels are materialized in-scope and
-    are safe either way.
+    The loop runs at a width of its own (below), in a child session
+    (``session.child_session``); the caller's session conf is never
+    written, and the labels come back as its DataFrame.
     """
     spark = pairs.sparkSession
     edges_raw = (
@@ -90,21 +85,25 @@ def connected_components(
     loop_parts = max(
         1, min(sess_parts, -(-n_edges // max(1, edges_per_partition)))
     )
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    loop = child_session(
+        spark, {"spark.sql.shuffle.partitions": str(loop_parts)}
+    )
     try:
-        return _connected_components_loop(edges_raw, loop_parts, max_iter)
+        labels = _connected_components_loop(
+            rebind(edges_raw, loop), loop_parts, max_iter
+        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
         edges_raw.unpersist()
+    return rebind(labels, spark)
 
 
 def _connected_components_loop(
     edges_raw: DataFrame, loop_parts: int, max_iter: int
 ) -> DataFrame:
-    """Min-label propagation at a fixed ``loop_parts`` width; every
-    round's localCheckpoint is materialized by its probe action INSIDE
-    the caller's conf scope, so the returned labels are width-stable."""
+    """Min-label propagation at a fixed ``loop_parts`` width, which
+    must be ``edges_raw``'s session's shuffle width; every round's
+    localCheckpoint is materialized by its probe action in that
+    session, so the returned labels are width-stable."""
     edges = (
         # hash-partition by the join key BEFORE persisting: the cached
         # distribution satisfies every round's join requirement (the

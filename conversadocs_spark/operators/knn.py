@@ -8,7 +8,7 @@ default 3; /root/reference/app.py:116).
 
 Spark-first design:
 - Single query vector: the vector becomes a literal/broadcast scalar —
-  the scan streams once, computes sim per row inside codegen, and a
+  the scan streams once, computes sim per row JVM-side, and a
   TakeOrderedAndProject keeps the global top-k (no full sort, no
   shuffle of the data — only k rows per partition reach the driver
   stage). This is exactly the plan that survives 100 TB: a full scan

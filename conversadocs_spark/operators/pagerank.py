@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from conversadocs_spark.session import child_session, rebind
+
 #: executed-plan string of the FIRST CHECKPOINTED segment (the first
 #: `checkpoint_every` rounds) of the most recent pagerank_fixedpoint
 #: call, captured AFTER execution so AQE plans are final —
@@ -287,18 +289,17 @@ def pagerank_fixedpoint(
     map-side-combinable sum, lineage truncated per round with an eager
     localCheckpoint. No driver-side vectors at any node count.
 
-    ``loop_conf``: session-conf overrides applied for the duration of
-    the call and restored after (e.g. ``{"spark.sql.adaptive.enabled":
-    "false", "spark.sql.shuffle.partitions": "8"}``). A caller that
-    KNOWS its graph is bounded-small (a keyword graph, a
-    query-bounded co-purchase graph) should pass exactly that: the
-    loop's 24x2 shuffle stages each carry a few thousand rows, so
-    AQE's per-stage re-planning is one scheduled job per stage of
-    pure local-mode dispatch latency (measured at sf0.1/6.5k nodes:
-    ~90 stage-jobs with AQE vs 27 without, ~7.5 -> ~6.5 s wall,
-    bit-identical ranks), and 32-wide shuffles are mostly empty
-    tasks. Corpus-scale graphs must NOT set this — they keep the
-    session's AQE coalescing/skew handling and shuffle width.
+    ``loop_conf``: SQL conf overrides for the call, which runs in a
+    child session (``session.child_session``); the caller's session
+    conf is never written, and the ranks come back as its DataFrame. A
+    caller that KNOWS its graph is bounded-small should pass
+    ``plans.graph.BOUNDED_LOOP_CONF``: the loop's 24x2 shuffle stages
+    each carry a few thousand rows, so AQE's per-stage re-planning is
+    one scheduled job per stage of pure local-mode dispatch latency
+    (measured at sf0.1/6.5k nodes: ~90 stage-jobs with AQE vs 27
+    without, ~7.5 -> ~6.5 s wall, bit-identical ranks). Corpus-scale
+    graphs must NOT set this — they keep the session's AQE
+    coalescing/skew handling and shuffle width.
 
     ``broadcast_ranks``: bounded-graph-only companion to ``loop_conf``
     (VERDICT r13 #3). When the node set is known to fit a broadcast
@@ -320,43 +321,7 @@ def pagerank_fixedpoint(
     """
     one_minus = alpha_den - alpha_num
     spark = edges.sparkSession
-    # save/apply INSIDE the try (ADVICE r13): a failure on the Nth
-    # key must still restore the first N-1 via finally; get(k, None)
-    # + unset() round-trips keys that had no explicit session value
-    # without force-setting their defaults.
-    saved_conf: dict[str, str | None] = {}
-    try:
-        for k, v in (loop_conf or {}).items():
-            saved_conf[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
-        return _pagerank_fixedpoint_body(
-            edges, iters, scale, alpha_num, alpha_den, tol_fp,
-            dangling, checkpoint_every, src_col, dst_col, one_minus,
-            broadcast_ranks, plan_sink,
-        )
-    finally:
-        for k, v in saved_conf.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def _pagerank_fixedpoint_body(
-    edges: DataFrame,
-    iters: int,
-    scale: int,
-    alpha_num: int,
-    alpha_den: int,
-    tol_fp: int,
-    dangling: str,
-    checkpoint_every: int,
-    src_col: str,
-    dst_col: str,
-    one_minus: int,
-    broadcast_ranks: bool = False,
-    plan_sink: list | None = None,
-) -> DataFrame:
+    edges = rebind(edges, child_session(spark, loop_conf or {}))
     # Persist the deduped edge relation: nodes / out_deg / keepers /
     # links each re-derive it, and WITHOUT the persist each of those
     # materializations re-runs the caller's whole edge-construction
@@ -410,8 +375,9 @@ def _pagerank_fixedpoint_body(
     if n_nodes == 0:
         deg.unpersist()
         e.unpersist()
-        return deg.select(
-            "id", F.lit(0).cast("bigint").alias("rank_fp")
+        return rebind(
+            deg.select("id", F.lit(0).cast("bigint").alias("rank_fp")),
+            spark,
         )
     base = scale // n_nodes
     # keeper self-rows (NULL deg): zero-INFLOW nodes survive the
@@ -585,4 +551,4 @@ def _pagerank_fixedpoint_body(
             f"pagerank_fixedpoint residual {residual} > tol_fp "
             f"{tol_fp} after {iters} fixed iterations; raise iters"
         )
-    return ranks
+    return rebind(ranks, spark)

@@ -24,7 +24,7 @@ Scale shape (the standard two-phase distributed PCA):
    platform-dependent.
 3. **Projection as a Catalyst expression**: components are packed
    into one broadcast row; projected[j] = <x - mean, comp_j> runs
-   JVM-side under whole-stage codegen — the corpus-sized stage has
+   JVM-side (interpreted HOFs) — the corpus-sized stage has
    zero Python and zero shuffle, same contract as pq_encode /
    ivf._assign.
 """

@@ -17,8 +17,8 @@ the trained/approximate ANN families):
 - dequant xh = qmin + (code + 128) * qscale — double arithmetic,
   bit-identical in any IEEE engine evaluating the same expression.
 
-Everything is pure Catalyst (transform/aggregate/zip_with inside
-whole-stage codegen): no Python, no shuffle, storage-sized output.
+Everything is pure Catalyst (transform/aggregate/zip_with, interpreted
+JVM-side as CodegenFallback): no Python, no shuffle, storage-sized output.
 """
 
 from __future__ import annotations
@@ -85,7 +85,7 @@ def dequantized(
 #
 # Storage: dim/32 BIGINTs = dim*8/32 bytes logical — 4 bytes per 32
 # dims vs 128 for float32, the classic 32x shrink; the Hamming scan
-# is integer XOR+POPCNT inside whole-stage codegen.
+# is integer XOR+POPCNT in interpreted zip_with/aggregate, JVM-side.
 
 _WORD_BITS = 32
 
@@ -128,8 +128,9 @@ def binarize_sign(
 def hamming_matches(a: Column, b: Column, dim: Column) -> Column:
     """Number of agreeing sign bits between two packed codes =
     dim - popcount(a XOR b), summed over words (int column). XOR and
-    bit_count run word-at-a-time inside codegen — the binary scan
-    reads 1/32nd of the float bytes and does no float math at all.
+    bit_count run word-at-a-time in interpreted zip_with/aggregate
+    (CodegenFallback) — the binary scan reads 1/32nd of the float bytes
+    and does no float math at all.
 
     PRECONDITION: ``a`` and ``b`` pack vectors of the SAME dimension
     and ``dim`` is that shared dimension (knn_binary passes the

@@ -139,7 +139,9 @@ LIMIT 20
 #: the loop's shuffle stages each carry a few thousand rows — AQE's
 #: per-stage re-planning is one dispatched local-mode job per stage of
 #: pure scheduling latency. Static planning + ONE-wide shuffles for the
-#: call only (conf restored after): with a single-partition loop every
+#: call only (pagerank_fixedpoint runs its loop in a child session with
+#: this conf; the caller's session conf is never written): with a
+#: single-partition loop every
 #: per-round groupBy/join requirement is satisfied by SinglePartition, so
 #: the 24-round loop runs exchange-FREE inside each checkpoint job (guide
 #: §2.4 — remove shuffles outright; r15 A/B at sf0.1: partitions 8 -> 1

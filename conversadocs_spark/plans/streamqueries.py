@@ -18,11 +18,13 @@ from __future__ import annotations
 
 import itertools
 import os
-from contextlib import contextmanager
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from conversadocs_spark.plans.registry import register
+from conversadocs_spark.session import child_session, rebind
 from conversadocs_spark.streaming.ops import (
     stream_dedup,
     stream_tumbling_agg,
@@ -121,64 +123,45 @@ def _stage(spark: SparkSession, sf_dir: str, duplicate_rows: bool) -> str:
     )
 
 
-@contextmanager
-def _replay_width(spark: SparkSession):
-    """Shuffle width for the BOUNDED replay harness (r15, guide §2.2
-    fewer-larger-partitions applied to streaming state): every
-    stateful operator materializes one state-store instance PER
-    shuffle partition PER micro-batch (delta + snapshot + CRC files
-    on the checkpoint dir), so a 3-batch replay of a bounded fixture
-    at the session's 32-wide default paid ~hundreds of tiny state
-    files of pure I/O latency. Measured at sf0.01 (2 reps, rows
-    identical): interval-join replay 18-26 s -> 4-6 s, session_chat
-    4.5-5.3 -> 2.7-3.0, tumbling 4.3-5.8 -> 2.1-2.6 at width 8.
+#: shuffle width of the BOUNDED replay harness (r15): every stateful
+#: operator materializes one state-store instance PER shuffle partition
+#: PER micro-batch, so a 3-batch replay of a bounded fixture at the
+#: session's 32-wide default paid ~hundreds of tiny state files of pure
+#: I/O latency. Measured at sf0.01 (rows identical): interval-join
+#: replay 18-26 s -> 4-6 s, session_chat 4.5-5.3 -> 2.7-3.0, tumbling
+#: 4.3-5.8 -> 2.1-2.6 at width 8. State width does not change results
+#: (replay == batch pins in tests/test_streaming.py).
+REPLAY_PARTITIONS = 8
 
-    Parameterised, not hard-coded for local mode: the replay fixture
-    is 3 bounded micro-batches by construction, and a production
-    deployment sizes shuffle partitions to stream volume through the
-    session conf — SPARK_GRAFT_REPLAY_PARTITIONS overrides for a
-    bigger replay. Restored after the run; batch queries in the same
-    session are unaffected. State partition count does not change
-    keyed-aggregation results (pinned replay == batch in
-    tests/test_streaming.py).
 
-    Like connected_components' loop width, this mutates the
-    session-global shuffle width for the scope of the replay
-    (restored in ``finally``) and assumes single-threaded use of the
-    session (ADVICE r15) — concurrent callers need an isolated
-    session."""
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(
-        key, os.environ.get("SPARK_GRAFT_REPLAY_PARTITIONS", "8")
+def _run_available_now(
+    stream_df: DataFrame,
+    configure: Callable[[DataStreamWriter], DataStreamWriter],
+) -> SparkSession:
+    """Run ``configure(stream_df.writeStream)`` to completion
+    (AvailableNow) and return the session that started it: a child
+    session at ``REPLAY_PARTITIONS`` width, since a stream fixes its
+    state width from the starting session's conf. The caller's session
+    conf is never written."""
+    replay = child_session(
+        stream_df.sparkSession,
+        {"spark.sql.shuffle.partitions": str(REPLAY_PARTITIONS)},
     )
-    try:
-        yield
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-
-
-def _run_available_now(spark: SparkSession, writer) -> None:
-    """start() + awaitTermination() under the bounded replay width
-    (see _replay_width) — shared by every foreachBatch replay site."""
-    with _replay_width(spark):
-        writer.trigger(availableNow=True).start().awaitTermination()
+    writer = configure(rebind(stream_df, replay).writeStream)
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return replay
 
 
 def _replay(stream_df: DataFrame, mode: str) -> DataFrame:
     """Run the streaming DF to completion (AvailableNow) into a memory
-    sink; return the sink contents as a batch DataFrame."""
+    sink; return the sink contents as a batch DataFrame of the caller's
+    session (the sink's temp view is in the session that started it)."""
     name = f"replay_{os.getpid()}_{next(_COUNTER)}"
-    _run_available_now(
-        stream_df.sparkSession,
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode),
+    replay = _run_available_now(
+        stream_df,
+        lambda w: w.format("memory").queryName(name).outputMode(mode),
     )
-    return stream_df.sparkSession.table(name)
+    return rebind(replay.table(name), stream_df.sparkSession)
 
 
 @register("streaming_tumbling_replay", tags=("streaming", "rows-only"))
@@ -234,8 +217,8 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(index_dir, ignore_errors=True)
     ev = read_events_stream(spark, path)
     _run_available_now(
-        spark,
-        ev.writeStream.foreachBatch(foreach_batch_index_writer(index_dir))
+        ev,
+        lambda w: w.foreachBatch(foreach_batch_index_writer(index_dir))
         .option("checkpointLocation", ckpt),
     )
     return spark.read.parquet(index_dir)
@@ -297,9 +280,8 @@ def streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, arrivals, n_files=3, min_id=split_id
     )
     _run_available_now(
-        spark,
-        read_vectors_stream(spark, arrivals)
-        .writeStream.foreachBatch(
+        read_vectors_stream(spark, arrivals),
+        lambda w: w.foreachBatch(
             foreach_batch_ivf_assign(centroids, index_dir)
         )
         .option("checkpointLocation", ckpt),
@@ -359,8 +341,8 @@ def streaming_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(table, ignore_errors=True)
     ev = read_events_stream(spark, path)
     _run_available_now(
-        spark,
-        ev.writeStream.foreachBatch(foreach_batch_hll_merger(table))
+        ev,
+        lambda w: w.foreachBatch(foreach_batch_hll_merger(table))
         .option("checkpointLocation", ckpt),
     )
     sk = read_versioned(spark, table).select(
@@ -482,8 +464,8 @@ def streaming_update_mode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     _run_available_now(
-        spark,
-        agg.writeStream.foreachBatch(sink)
+        agg,
+        lambda w: w.foreachBatch(sink)
         .outputMode("update")
         .option("checkpointLocation", ckpt),
     )
@@ -569,8 +551,8 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(changes_dir)
     )
     _run_available_now(
-        spark,
-        stream.writeStream.foreachBatch(foreach_batch_cdc_applier(table))
+        stream,
+        lambda w: w.foreachBatch(foreach_batch_cdc_applier(table))
         .option("checkpointLocation", ckpt),
     )
     return read_versioned(spark, table)
@@ -618,8 +600,8 @@ def streaming_decay_replay(
     shutil.rmtree(table, ignore_errors=True)
     ev = read_events_stream(spark, path)
     _run_available_now(
-        spark,
-        ev.writeStream.foreachBatch(
+        ev,
+        lambda w: w.foreachBatch(
             foreach_batch_decay_merger(table)
         )
         .option("checkpointLocation", ckpt),

@@ -560,7 +560,7 @@ def fingerprint_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, so the fingerprint VALUES are engine-portable and
     the whole selection is oracle-checked, not just counted.
 
-    Scale shape: one scan, everything inside whole-stage codegen
+    Scale shape: one scan, everything JVM-side
     (split -> gram transform -> hash transform -> window-min
     transform -> distinct/aggregate over per-row arrays) — ZERO
     shuffles, no UDF, no state; docs shorter than k collapse to one

@@ -2012,7 +2012,7 @@ def knn_int8_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     so this query is fully ORACLE-BACKED: DuckDB replicates
     quantize -> dequantize -> cosine bit-for-bit.
 
-    Plan shape: one scan computing codes inside codegen (no shuffle,
+    Plan shape: one scan computing codes JVM-side (no shuffle,
     no Python), broadcast 1-row dequantized query,
     TakeOrderedAndProject(5) — identical scaling to knn_topk with a
     quarter of the bytes read in a real quantized-storage deployment.
@@ -2099,7 +2099,7 @@ ORDER BY x.sim DESC, s.vec_id ASC LIMIT 5
 def knn_binary_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-quantized retrieval: sign bits packed 32-per-BIGINT
     (operators/quant.py:binarize_sign), Hamming-similarity shortlist
-    of 50 (XOR + POPCNT, pure integer codegen), exact float rescore of
+    of 50 (XOR + POPCNT, integer-only and JVM-side), exact float rescore of
     the shortlist, top-5. Completes the storage ladder below SQ8
     (knn_int8, 4x) and PQ (ann_pq, 32x trained): sign binarization is
     32x untrained — and unlike PQ it is a pure comparison against the
@@ -2994,7 +2994,7 @@ def multivec_maxsim_batch_query(
 
     Scale shape: all Q query bags broadcast together (Q x 10 x dim
     doubles); ONE pass over the corpus token table computes every
-    (corpus token x query token) cosine inside codegen; then the same
+    (corpus token x query token) cosine JVM-side; then the same
     two MAP-SIDE-COMBINABLE aggregations as the single-query form —
     max per (query, doc, query-token), sum per (query, doc) — so the
     only shuffled relations are doc-count-sized per query, never the

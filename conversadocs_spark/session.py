@@ -9,8 +9,9 @@ sized by env so the same code runs at sf0.001 and at 100 TB.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -39,6 +40,13 @@ def get_spark(
     - AQE: runtime coalescing + skew-join handling; at 100 TB this is
       what turns a bad static shuffle count into a workable one.
     - Arrow: all pandas_udf / mapInPandas traffic is Arrow-batched.
+    - DataFrame debugging off: PySpark 4.1 otherwise records the
+      Python call site of every Column call, about 8 py4j round trips
+      each (perfbench serve: 1010 -> 558 py4j calls per op). PySpark
+      reads the key once per process, at the first Column call.
+    - Parquet TIMESTAMP(NANOS) reads as a long, which ``io.table``
+      converts to microseconds. The scan reads the key when it
+      executes, so it is a session default, not a per-read setting.
     - Generated code: the compiled-class cache holds
       ``CODEGEN_CACHE_ENTRIES`` classes, the registry's whole working
       set, so a repeated query finds its classes compiled.
@@ -114,5 +122,33 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_RESULT_SIZE", "1g"),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
+
+
+def child_session(
+    spark: SparkSession, overrides: Mapping[str, str]
+) -> SparkSession:
+    """A clone of ``spark`` (conf, temp views, functions) with
+    ``overrides`` set on the clone's SQL conf: the one way a query runs
+    under conf of its own. It shares ``spark``'s SparkContext and cache;
+    ``spark``'s conf, which other queries in any thread see, is never
+    written. Move DataFrames in and results out with :func:`rebind`.
+    Like ``newSession()``, creating it points PySpark's ``RDD.toDF`` at
+    the new session; the engine never calls ``RDD.toDF``."""
+    return SparkSession(
+        spark.sparkContext,
+        spark._jsparkSession.cloneSession(),
+        options=dict(overrides),
+    )
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a DataFrame of ``spark``, planned and run under
+    ``spark``'s conf; cached relations in it are still read from cache."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)

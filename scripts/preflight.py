@@ -19,7 +19,10 @@ script runs ONLY the cheap invariants (no SparkSession, no data):
   8. no result-cell normalizer outside tests/oracle.py,
   9. no direct parquet read of an `sf_dir` path outside
      conversadocs_spark/io.py (fixture reads go through its
-     per-session relation cache).
+     per-session relation cache),
+ 10. no `.conf.set(` / `.conf.unset(` in conversadocs_spark/ outside
+     session.py (a query that needs conf of its own runs in
+     session.child_session).
 
 Usage: python scripts/preflight.py   (exit 0 = safe to snapshot)
 Run it before every snapshot-sized commit; the full pytest suite
@@ -41,6 +44,8 @@ FAILS: list[str] = []
 NORMALIZER_RE = re.compile(r"round\(v, 6\)|def norm\(")
 #: a fixture read that bypasses io.table's relation cache
 SF_READ_RE = re.compile(r"spark\.read\.parquet\([^)]*\bsf_dir", re.S)
+#: a write of session conf
+CONF_WRITE_RE = re.compile(r"\.conf\.(?:set|unset)\(")
 
 
 def check(ok: bool, msg: str) -> None:
@@ -183,6 +188,25 @@ def main() -> int:
     check(not uncached,
           f"no spark.read.parquet of an sf_dir path outside io.py "
           f"(offenders: {uncached or '[]'})")
+
+    # A query's conf is its own: one that writes the session conf
+    # leaks its tuning into every query running beside it on that
+    # session. Conf of a query's own comes from session.child_session.
+    writes = []
+    for full in sources:
+        rel = os.path.relpath(full, REPO).replace(os.sep, "/")
+        if (
+            rel.startswith("conversadocs_spark/") and rel.endswith(".py")
+            and rel != "conversadocs_spark/session.py"
+        ):
+            text = open(full).read()
+            writes += [
+                f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+                for m in CONF_WRITE_RE.finditer(text)
+            ]
+    check(not writes,
+          f"no session conf write in conversadocs_spark/ outside "
+          f"session.py (offenders: {writes or '[]'})")
 
     if FAILS:
         print(f"\npreflight: {len(FAILS)} FAILURE(S) — do not snapshot")

@@ -124,8 +124,8 @@ def test_events_ts_is_timestamp_on_every_read(spark):
 
 def test_nanos_events_resolve_per_session(spark, tmp_path):
     """A TIMESTAMP(NANOS) ``events.ts`` needs nanosAsLong in the reading
-    session's conf; a new session sets it when it resolves the path, and
-    the ns -> us projection applies to every read, cached or not."""
+    session's conf; a new session has it from ``get_spark``'s defaults,
+    and the ns -> us projection applies to every read, cached or not."""
     table = pq.read_table(f"{SF_SMOKE}/events.parquet")
     i = table.schema.get_field_index("ts")
     micros = table["ts"].cast(pa.int64()).to_numpy()

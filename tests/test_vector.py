@@ -71,6 +71,52 @@ def test_ivf_assignment_partitions_corpus(spark, sf_oracle_dir):
     assert centroids.count() == 16
 
 
+def test_ivf_build_checkpoints_each_lloyd_step(spark, sf_oracle_dir, tmp_path):
+    """ivf_build checkpoints each step's K-row centroids, so writing the
+    index (ivf_write_index: a count and two writes) reads them instead
+    of re-running the Lloyd chain: fewer than the 26 jobs the lazy chain
+    cost, and the same assignments and centroids as the lazy chain."""
+    from conversadocs_spark import io
+    from conversadocs_spark.operators.ivf import (
+        _assign,
+        _cell_means,
+        ivf_build,
+        ivf_write_index,
+    )
+
+    emb = io.table(spark, sf_oracle_dir, "embeddings").where(
+        F.col("vec_id") >= 5
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assigned, centroids = ivf_build(emb, n_lists=16, refine_iters=2)
+    ivf_write_index(assigned, centroids, str(tmp_path), dim=64, n_lists=16)
+    jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+    assert jobs < 26, f"build + index write ran {jobs} jobs"
+
+    # the lazy chain, as ivf_build ran it before it checkpointed
+    lazy = emb.select(
+        "vec_id",
+        "embedding",
+        F.pmod(F.xxhash64("vec_id"), F.lit(16)).cast("int").alias("list_id"),
+    )
+    means = _cell_means(lazy, "vec_id", "embedding")
+    for _ in range(2):
+        lazy = _assign(emb, means, "vec_id", "embedding")
+        means = _cell_means(lazy, "vec_id", "embedding")
+
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    written = spark.read.parquet(str(tmp_path / "assignments" / "v=1"))
+    assert rows(written, "vec_id", "list_id") == rows(
+        lazy, "vec_id", "list_id"
+    )
+    assert rows(centroids, "list_id", "centroid") == rows(
+        means, "list_id", "centroid"
+    )
+
+
 def test_similarity_join_non_vacuous(spark, sf_oracle_dir):
     """Regression guard: the threshold must keep the result non-empty
     on the fixtures (a 0-row pass proves nothing)."""
