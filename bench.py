@@ -191,8 +191,9 @@ HEADLINE = (
 # records both regimes side by side).
 # ---------------------------------------------------------------------------
 
-#: row groups per table, capped at the local core budget; small tables
-#: keep >=256 rows per group so groups stay non-degenerate.
+#: row groups per table: a fixed cap of 32, not tied to the core count
+#: (tying it needs its own batch A/B); small tables keep >=256 rows per
+#: group so groups stay non-degenerate.
 _LAYOUT_MAX_GROUPS = 32
 
 

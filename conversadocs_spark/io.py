@@ -25,6 +25,7 @@ import os
 import stat
 import weakref
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -126,7 +127,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     therefore reads it as a long (the legacy
     ``spark.sql.legacy.parquet.nanosAsLong``, a session default) and this
     truncates ns -> us, matching DuckDB's own ns -> us truncation so
-    oracle comparisons agree.
+    oracle comparisons agree. In a session without that key the read
+    raises a RuntimeError that names it, not Spark's bare
+    PARQUET_TYPE_ILLEGAL.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -135,7 +138,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType
 
-        df = read_parquet(spark, path)
+        try:
+            df = read_parquet(spark, path)
+        except AnalysisException as exc:
+            if "PARQUET_TYPE_ILLEGAL" not in str(exc):
+                raise
+            raise RuntimeError(
+                f"{path}: events.ts is TIMESTAMP(NANOS), which Spark reads "
+                "only with spark.sql.legacy.parquet.nanosAsLong=true in the "
+                "reading session; session.get_spark sets it, so build the "
+                "session with session.get_spark or set the key when "
+                "building it"
+            ) from exc
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df

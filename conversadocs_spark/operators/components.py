@@ -14,15 +14,21 @@ Rounds needed = O(log diameter) rather than diameter, so even a
 pathological chain component of length 100 converges in ~10 rounds
 (tests/test_pipeline.py::test_components_chain_converges), while
 the star/clique shapes real near-dup graphs produce still finish in
-~3; every round is hash-partitioned on id (no all-pairs anything).
-The one driver-side action per round reads a single 0/1 convergence
-flag — the same bounded O(log)-actions pattern as operators/reduce.py.
-If the loop exhausts ``max_iter`` without converging the function
-RAISES instead of returning partially-propagated (wrong) labels.
+~3; every round is hash-partitioned on id (no all-pairs anything),
+and each round's driver-side action reads one label sum — the same
+bounded O(log)-actions pattern as operators/reduce.py. A graph whose
+measured edge count fits one partition (the near-dup rep-pair graph
+at every fixture scale) runs the same rounds as one numpy kernel in
+one task instead (:func:`_connected_components_single_task`), where
+the loop's cost would be its jobs, not its data. If the rounds exhaust
+``max_iter`` without converging the function RAISES instead of
+returning partially-propagated (wrong) labels, on either path.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,7 +60,8 @@ def connected_components(
 
     The loop runs at a width of its own (below), in a child session
     (``session.child_session``); the caller's session conf is never
-    written, and the labels come back as its DataFrame.
+    written, and the labels come back as its DataFrame. At width 1 the
+    same rounds run as one numpy kernel in one task instead.
     """
     spark = pairs.sparkSession
     edges_raw = (
@@ -85,10 +92,14 @@ def connected_components(
     loop_parts = max(
         1, min(sess_parts, -(-n_edges // max(1, edges_per_partition)))
     )
-    loop = child_session(
-        spark, {"spark.sql.shuffle.partitions": str(loop_parts)}
-    )
     try:
+        # an empty graph keeps the loop: the kernel would emit no row
+        # to carry its round count
+        if loop_parts == 1 and n_edges:
+            return _connected_components_single_task(edges_raw, max_iter)
+        loop = child_session(
+            spark, {"spark.sql.shuffle.partitions": str(loop_parts)}
+        )
         labels = _connected_components_loop(
             rebind(edges_raw, loop), loop_parts, max_iter
         )
@@ -237,3 +248,76 @@ def _connected_components_loop(
             "raise max_iter (rounds needed ~ log2(component diameter))"
         )
     return labels.select("id", F.col("label").alias("cluster_id"))
+
+
+def _connected_components_single_task(
+    edges_raw: DataFrame, max_iter: int
+) -> DataFrame:
+    """:func:`_connected_components_loop`'s rounds as one numpy kernel
+    in one ``mapInPandas`` task over the (bidirectional) edge list:
+    the fused first round, the label-sum early fixpoint and the
+    pointer jump through the PREVIOUS round's labels, so labels, round
+    count and the non-convergence raise equal the loop's.
+
+    Node ids are replaced by their rank among the sorted ids, which
+    keeps every min; labels only ever fall, so the loop's equal-sum
+    fixpoint test is an equal-array test here. The task emits the
+    round count and convergence beside each label; the driver reads
+    them with one ``first()`` on the eager checkpoint. The kernel is a
+    closure, so it pickles by value and the Python worker needs no
+    import of this package."""
+
+    def kernel(batches):
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        # every node is a src (edges run both ways)
+        ids, src = np.unique(
+            pdf["src"].to_numpy(np.int64), return_inverse=True
+        )
+        dst = np.searchsorted(ids, pdf["dst"].to_numpy(np.int64))
+        order = np.argsort(src, kind="stable")
+        dst = dst[order]
+        starts = np.flatnonzero(np.r_[True, np.diff(src[order]) != 0])
+        labels = np.minimum(
+            np.arange(len(ids)), np.minimum.reduceat(dst, starts)
+        )
+        rounds, converged = 1, False
+        for _ in range(max_iter - 1):
+            rounds += 1
+            stepped = np.minimum(
+                labels, np.minimum.reduceat(labels[dst], starts)
+            )
+            if np.array_equal(stepped, labels):
+                converged = True
+                break
+            labels = np.minimum(stepped, labels[stepped])
+        yield pd.DataFrame({
+            "id": ids,
+            "cluster_id": ids[labels],
+            "rounds": rounds,
+            "converged": converged,
+        })
+
+    labels = (
+        edges_raw.coalesce(1)
+        .mapInPandas(
+            kernel,
+            "id bigint, cluster_id bigint, rounds int, converged boolean",
+        )
+        .localCheckpoint(eager=True)
+    )
+    head = labels.select("rounds", "converged").first()
+    global LAST_RUN_ROUNDS
+    LAST_RUN_ROUNDS = head["rounds"]
+    if not head["converged"]:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            "iterations; labels would be partially propagated — "
+            "raise max_iter (rounds needed ~ log2(component diameter))"
+        )
+    id_type = edges_raw.schema["src"].dataType
+    return labels.select(
+        F.col("id").cast(id_type), F.col("cluster_id").cast(id_type)
+    )

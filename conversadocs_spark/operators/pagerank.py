@@ -28,31 +28,19 @@ Spark-first design, mirroring operators/components.py:
   action per round.
 - ranks are plain doubles: convergence is detected on a tolerance,
   not bit-equality, so float-order drift cannot wedge the loop.
+
+The fixed-point twin, :func:`pagerank_fixedpoint`, also runs as one
+numpy kernel in one task (``single_task``) for a graph its caller
+bounds, where the per-round jobs, not the data, are the cost.
 """
 
 from __future__ import annotations
 
-import os
-
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
-
-from conversadocs_spark.session import child_session, rebind
-
-#: executed-plan string of the FIRST CHECKPOINTED segment (the first
-#: `checkpoint_every` rounds) of the most recent pagerank_fixedpoint
-#: call, captured AFTER execution so AQE plans are final —
-#: observability for scale gates (the components.LAST_RUN_ROUNDS
-#: precedent): the sf100 graph gate pins the round shape (links read
-#: from cache, no corpus-wide exchange beyond the inherent ones) on
-#: the plan that actually ran, not on a reconstruction. Module-level
-#: state is last-writer-wins under concurrent calls (ADVICE r14) —
-#: callers that need an unambiguous handle pass ``plan_sink`` to
-#: :func:`pagerank_fixedpoint` instead; the global stays because the
-#: scale gate reaches the operator through the query registry, which
-#: has no out-param channel.
-LAST_ROUND_PLAN: str | None = None
 
 
 def _capture_plan(df: DataFrame) -> str | None:
@@ -236,8 +224,7 @@ def pagerank_fixedpoint(
     checkpoint_every: int = 1,
     src_col: str = "src",
     dst_col: str = "dst",
-    loop_conf: dict[str, str] | None = None,
-    broadcast_ranks: bool = False,
+    single_task: bool = False,
     plan_sink: list | None = None,
 ) -> DataFrame:
     """FIXED-POINT power-iteration PageRank — the oracle-checkable twin
@@ -286,42 +273,39 @@ def pagerank_fixedpoint(
     Scale shape: identical to :func:`pagerank` — state is one
     (id, rank) DataFrame, the edge relation is hash-partitioned once
     and cached, each round is one contribution join + one
-    map-side-combinable sum, lineage truncated per round with an eager
-    localCheckpoint. No driver-side vectors at any node count.
+    map-side-combinable sum, lineage truncated with an eager
+    localCheckpoint every ``checkpoint_every`` rounds. No driver-side
+    vectors at any node count.
 
-    ``loop_conf``: SQL conf overrides for the call, which runs in a
-    child session (``session.child_session``); the caller's session
-    conf is never written, and the ranks come back as its DataFrame. A
-    caller that KNOWS its graph is bounded-small should pass
-    ``plans.graph.BOUNDED_LOOP_CONF``: the loop's 24x2 shuffle stages
-    each carry a few thousand rows, so AQE's per-stage re-planning is
-    one scheduled job per stage of pure local-mode dispatch latency
-    (measured at sf0.1/6.5k nodes: ~90 stage-jobs with AQE vs 27
-    without, ~7.5 -> ~6.5 s wall, bit-identical ranks). Corpus-scale
-    graphs must NOT set this — they keep the session's AQE
-    coalescing/skew handling and shuffle width.
+    ``single_task``: for a graph its CALLER bounds, run the whole
+    fixed budget as one numpy kernel in one ``mapInPandas`` task over
+    the edge list (:func:`_fixedpoint_single_task`). The kernel
+    replays the update above over int64 in the same division
+    order, so its ranks equal the distributed loop's bit for bit in
+    both dangling modes (tests/test_graph.py pins the parity). On a
+    small graph the loop's cost is driver and job overhead, not data:
+    graph_pagerank_exact's 6,580-node sf0.1 graph took 26 jobs and
+    3.5-5.5 s per warm call on 4 vCPUs, 2.4-3.1 s of it plan
+    construction, and takes 5 jobs and about 1 s in one task. That
+    task holds the whole edge list, so a corpus-scale graph must keep
+    the default loop (the sf100 graph gate runs it).
+    ``checkpoint_every`` and ``plan_sink`` apply to the loop only.
 
-    ``broadcast_ranks``: bounded-graph-only companion to ``loop_conf``
-    (VERDICT r13 #3). When the node set is known to fit a broadcast
-    (the rank vector is 16 bytes/node — ~100 MB even at 5M nodes),
-    hint the RANKS side of the contribution join broadcast: the join
-    becomes a BroadcastHashJoin over the once-partitioned links
-    relation, eliminating the per-round ranks exchange+sort — per
-    round, ONE shuffle (the dst-keyed sum) instead of two. Values are
-    bit-identical (BIGINT sums are order-insensitive; the join's
-    arithmetic doesn't change). Default False: at web-graph node
-    counts the rank vector outgrows the driver, and the shuffle join
-    co-partitioned on src is the right plan — same scale contract as
-    loop_conf.
-
-    ``plan_sink``: optional list; the captured first-round executed
-    plan (a string, or None if the private capture surface is
-    unavailable) is appended to it — the race-free per-call
-    alternative to the module-level ``LAST_ROUND_PLAN`` (ADVICE r14).
+    ``plan_sink``: optional list; the captured first-checkpoint
+    executed plan (a string, or None if the private capture surface
+    is unavailable) is appended to it. Capture is opt-in: rendering a
+    fused multi-round plan costs 0.3-0.5 s of wall per call at sf0.1
+    (r16), so only callers that audit the round shape (the sf100 graph
+    gate, the plan-pin tests) pass a sink.
     """
     one_minus = alpha_den - alpha_num
-    spark = edges.sparkSession
-    edges = rebind(edges, child_session(spark, loop_conf or {}))
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    )
+    if single_task:
+        return _fixedpoint_single_task(
+            e, iters, scale, alpha_num, alpha_den, tol_fp, dangling
+        )
     # Persist the deduped edge relation: nodes / out_deg / keepers /
     # links each re-derive it, and WITHOUT the persist each of those
     # materializations re-runs the caller's whole edge-construction
@@ -331,13 +315,7 @@ def pagerank_fixedpoint(
     # (r14, VERDICT r13 #3). One pass builds it; everything else
     # reads the cache. links then holds the joined copy, so e is
     # released as soon as links is materialized by the first round.
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e = e.distinct().persist(StorageLevel.MEMORY_AND_DISK)
     # ONE degree pass replaces the old nodes-distinct + left-anti
     # joins (r15, guide §2.4 — remove shuffles outright): per node,
     # out_deg = count of rows where it is a src, has_in = whether it
@@ -375,10 +353,7 @@ def pagerank_fixedpoint(
     if n_nodes == 0:
         deg.unpersist()
         e.unpersist()
-        return rebind(
-            deg.select("id", F.lit(0).cast("bigint").alias("rank_fp")),
-            spark,
-        )
+        return deg.select("id", F.lit(0).cast("bigint").alias("rank_fp"))
     base = scale // n_nodes
     # keeper self-rows (NULL deg): zero-INFLOW nodes survive the
     # per-round aggregation without a nodes join — the same flow
@@ -442,10 +417,9 @@ def pagerank_fixedpoint(
     deg.unpersist()
 
     every = 1 if dangling != "none" else max(1, checkpoint_every)
-    _captured = False
+    captured = False
     prev = ranks
     for _i in range(iters):
-        rside = F.broadcast(ranks) if broadcast_ranks else ranks
         # Fused round build (r16): groupBy straight off the join, and
         # (dangling="none") the rank update folded into the aggregate's
         # result expression — 3 analyzed Dataset ops per round instead
@@ -458,7 +432,7 @@ def pagerank_fixedpoint(
         # hash clustering, so values are exact either way.
         if dangling == "none":
             new_ranks = (
-                links.join(rside, links["src"] == rside["id"])
+                links.join(ranks, links["src"] == ranks["id"])
                 .groupBy(links["dst"].alias("id"))
                 .agg(
                     F.expr(
@@ -470,7 +444,7 @@ def pagerank_fixedpoint(
             )
         else:
             contrib = (
-                links.join(rside, links["src"] == rside["id"])
+                links.join(ranks, links["src"] == ranks["id"])
                 .groupBy(links["dst"].alias("nid"))
                 .agg(
                     F.sum(F.expr("rank_fp div out_deg")).alias("inflow")
@@ -505,30 +479,9 @@ def pagerank_fixedpoint(
         prev = ranks
         if (_i + 1) % every == 0 or _i == iters - 1:
             ranks = new_ranks.localCheckpoint(eager=True)
-            if _captured is False:
-                _captured = True
-                # Plan capture is OPT-IN (r16): executedPlan()
-                # .toString() of a fused multi-round plan (each cached
-                # relation's build lineage rendered in full) costs
-                # 0.3-0.5 s of wall PER CALL at sf0.1 — measured
-                # no-capture 2.6-2.9 s vs 3.0-3.6 s — pure
-                # observability overhead on the serving path. Callers
-                # that audit the round shape (the sf100 graph gate,
-                # the plan-pin tests) pass plan_sink or set
-                # SPARK_GRAFT_CAPTURE_ROUND_PLAN=1; otherwise the
-                # global is reset to None so a stale plan from an
-                # earlier opted-in call can never masquerade as this
-                # run's (the gate skips its pin loudly on None).
-                global LAST_ROUND_PLAN
-                if plan_sink is not None or os.environ.get(
-                    "SPARK_GRAFT_CAPTURE_ROUND_PLAN"
-                ):
-                    captured = _capture_plan(new_ranks)
-                    LAST_ROUND_PLAN = captured
-                    if plan_sink is not None:
-                        plan_sink.append(captured)
-                else:
-                    LAST_ROUND_PLAN = None
+            if plan_sink is not None and not captured:
+                captured = True
+                plan_sink.append(_capture_plan(new_ranks))
         else:
             ranks = new_ranks
     residual = (
@@ -551,4 +504,87 @@ def pagerank_fixedpoint(
             f"pagerank_fixedpoint residual {residual} > tol_fp "
             f"{tol_fp} after {iters} fixed iterations; raise iters"
         )
-    return rebind(ranks, spark)
+    return ranks
+
+
+def _fixedpoint_single_task(
+    e: DataFrame,
+    iters: int,
+    scale: int,
+    alpha_num: int,
+    alpha_den: int,
+    tol_fp: int,
+    dangling: str,
+) -> DataFrame:
+    """:func:`pagerank_fixedpoint`'s fixed budget over the (src, dst)
+    edge list ``e``, as one numpy kernel in one ``mapInPandas`` task:
+    the kernel dedups the edges itself (a Spark ``distinct`` would be
+    one more shuffle stage, one more job), and the integer update, the
+    dangling share and the end-of-budget residual are the loop's, so
+    the ranks are too.
+
+    The task emits, beside each (id, rank_fp), the graph's dangling
+    count and the residual between the last two rounds; the driver
+    reads them with one ``first()`` on the eager checkpoint and raises
+    the loop's errors. The kernel is a closure, so it pickles by value
+    and the Python worker needs no import of this package."""
+    one_minus = alpha_den - alpha_num
+
+    def kernel(batches):
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        src, dst = np.unique(
+            pdf[["src", "dst"]].to_numpy(np.int64), axis=0
+        ).T
+        ids, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+        n, m = len(ids), len(src)
+        out_deg = np.bincount(idx[:m], minlength=n)
+        # edges grouped by destination: each round's inflow is one
+        # segmented int64 sum (exact, unlike bincount's float weights)
+        order = np.argsort(idx[m:], kind="stable")
+        si, di = idx[:m][order], idx[m:][order]
+        starts = np.flatnonzero(np.r_[True, di[1:] != di[:-1]])
+        dang = out_deg == 0
+        base = scale // n
+        ranks = prev = np.full(n, base, np.int64)
+        for _ in range(iters):
+            inflow = np.zeros(n, np.int64)
+            inflow[di[starts]] = np.add.reduceat(
+                ranks[si] // out_deg[si], starts
+            )
+            if dangling != "none":
+                inflow += (ranks[dang] // n).sum()
+            prev = ranks
+            ranks = (one_minus * base + alpha_num * inflow) // alpha_den
+        yield pd.DataFrame({
+            "id": ids,
+            "rank_fp": ranks,
+            "n_dangling": int(dang.sum()),
+            "residual": int(np.abs(ranks - prev).sum()),
+        })
+
+    ranks = (
+        e.coalesce(1)
+        .mapInPandas(
+            kernel,
+            "id bigint, rank_fp bigint, n_dangling bigint, residual bigint",
+        )
+        .localCheckpoint(eager=True)
+    )
+    head = ranks.select("n_dangling", "residual").first()
+    if head is not None:
+        if dangling == "none" and head["n_dangling"] > 0:
+            raise ValueError(
+                "dangling='none' but the graph has dangling nodes"
+            )
+        if head["residual"] > tol_fp:
+            raise RuntimeError(
+                f"pagerank_fixedpoint residual {head['residual']} > "
+                f"tol_fp {tol_fp} after {iters} fixed iterations; "
+                "raise iters"
+            )
+    return ranks.select(
+        F.col("id").cast(e.schema["src"].dataType), "rank_fp"
+    )

@@ -133,45 +133,6 @@ LIMIT 20
 """
 
 
-#: graph_pagerank_exact's loop_conf (VERDICT r12 #5). Its graph is
-#: query-BOUNDED (l_orderkey < 2000 -> ~6.5k nodes / ~33k links at EVERY
-#: corpus scale — the predicate, not the corpus, sets the graph size), so
-#: the loop's shuffle stages each carry a few thousand rows — AQE's
-#: per-stage re-planning is one dispatched local-mode job per stage of
-#: pure scheduling latency. Static planning + ONE-wide shuffles for the
-#: call only (pagerank_fixedpoint runs its loop in a child session with
-#: this conf; the caller's session conf is never written): with a
-#: single-partition loop every
-#: per-round groupBy/join requirement is satisfied by SinglePartition, so
-#: the 24-round loop runs exchange-FREE inside each checkpoint job (guide
-#: §2.4 — remove shuffles outright; r15 A/B at sf0.1: partitions 8 -> 1
-#: took the query 5.5-6.1 s -> 4.0-4.5 s with bit-identical top-20, and
-#: the preferSortMergeJoin=false companion lets the planner pick the
-#: sort-free shuffled-hash join for the bounded setup joins, guide §3.1).
-#: A corpus-scale graph must NOT set this — it keeps the session's AQE
-#: coalescing/skew handling and shuffle width (the sf100 graph gate runs
-#: exactly that path). tests/test_graph.py pins the round plan this conf
-#: gives: no shuffle exchange and no WholeStageCodegen.
-BOUNDED_LOOP_CONF = {
-    "spark.sql.adaptive.enabled": "false",
-    "spark.sql.shuffle.partitions": "1",
-    "spark.sql.join.preferSortMergeJoin": "false",
-    # Codegen OFF for the bounded loop (r16, measured): each
-    # checkpoint job compiles a fresh fused 4-round plan whose
-    # generated classes never cache-hit (cache/checkpoint ids
-    # differ per round batch), and compilation dwarfs
-    # execution over ~6.5k rows. Interleaved same-session
-    # ABAB x3: steady-state wall 4.77 -> 4.38 s, tree_cpu
-    # 13.3 -> 8.4, cold first run 19.1 -> 7.3, top-20
-    # bit-identical. Same scale contract as partitions=1:
-    # QUERY-BOUNDED graphs only — the corpus-scale path (the
-    # sf100 graph gate) passes no loop_conf and keeps
-    # whole-stage codegen, where generated code amortizes
-    # over millions of rows per round.
-    "spark.sql.codegen.wholeStage": "false",
-}
-
-
 @register(
     "graph_pagerank_exact",
     oracle=_PAGERANK_EXACT_ORACLE,
@@ -199,12 +160,16 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget). Integer floors quantize identically on both engines;
     top-20 ties break on exact BIGINT ranks then part_id.
 
-    Scale shape: per-round cost is one contribution join + one
-    map-side-combinable sum over an edge relation partitioned once —
-    the operators/pagerank.py contract; node-scale state never
-    reaches the driver. The l_orderkey bound keeps the ORACLE's
-    recursion constant-size at any corpus scale (the engine side has
-    no such need)."""
+    Scale shape: the l_orderkey predicate, not the corpus, sets the
+    graph's size (~6.5k nodes / ~33k edges at every gate scale), so
+    the 24 rounds run as one numpy kernel in one task
+    (``pagerank_fixedpoint(single_task=True)``), bit-identical to the
+    distributed loop, whose 26 planned and scheduled jobs for a few
+    thousand rows each would be the whole cost here. The engine side
+    scans the corpus once to derive the edges; the l_orderkey bound
+    also keeps the ORACLE's recursion constant-size at any corpus
+    scale. Corpus-scale graphs keep the distributed loop (the sf100
+    graph gate runs it)."""
     from conversadocs_spark.operators.pagerank import (
         pagerank_fixedpoint,
     )
@@ -231,18 +196,7 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranks = pagerank_fixedpoint(
         edges, iters=24, scale=10**12, tol_fp=50_000_000,
-        dangling="none", checkpoint_every=4,
-        loop_conf=BOUNDED_LOOP_CONF,
-        # broadcast_ranks measured and REJECTED for the local fixture
-        # (r14, VERDICT r13 #3): same-session A/B at sf0.1 put the
-        # broadcast loop at 8.9-9.6 s vs 8.6-9.2 s for the shuffle
-        # join — the per-round driver collect+rebroadcast costs what
-        # the 8-partition exchange it replaces costs, and values were
-        # bit-identical either way (re-gated sf0.01/sf1/sf10). On a
-        # real cluster the exchange is network, so the knob exists
-        # (operators/pagerank.py broadcast_ranks) for bounded graphs
-        # served from many executors; the local fixture keeps the
-        # co-partitioned shuffle join.
+        dangling="none", single_task=True,
     )
     return (
         ranks.select(

@@ -78,9 +78,8 @@ Bounds, per file (reviewed r9):
   r15 lsh_exact_md5 mirrors the production trio (integer planes
   frame on both bucketing sides + the Q-row bucketed query batch —
   all bounded by seeds x n_planes x dim / the query batch).
-- operators/pagerank.py 3: 1-row dangling-mass aggregates (float
-  pagerank + the fixed-point twin's integer dangling share) + the
-  opt-in broadcast_ranks hint (bounded-graph serving mode, r14).
+- operators/pagerank.py 2: 1-row dangling-mass aggregates (float
+  pagerank + the fixed-point twin's integer dangling share).
 - operators/pq.py 11: codebooks (m×k rows, model state) + 1-row
   query codes; r15 pq_exact_md5 mirrors the production trio (packed
   twin codebook, Q-row ADC table batch, Q-row refine query batch —
@@ -93,7 +92,7 @@ BROADCAST_ALLOWED: dict[str, int] = {
     "operators/ivf.py": 3,
     "operators/knn.py": 3,
     "operators/lsh.py": 6,
-    "operators/pagerank.py": 3,
+    "operators/pagerank.py": 2,
     "operators/pq.py": 11,
     "plans/aggregates.py": 6,
     "plans/analytics.py": 11,

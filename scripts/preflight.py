@@ -22,7 +22,10 @@ script runs ONLY the cheap invariants (no SparkSession, no data):
      per-session relation cache),
  10. no `.conf.set(` / `.conf.unset(` in conversadocs_spark/ outside
      session.py (a query that needs conf of its own runs in
-     session.child_session).
+     session.child_session),
+ 11. the `SPARK_GRAFT_*` names under conversadocs_spark/ equal
+     ENGINE_ENV_KNOBS: a new env knob fails until it is listed, and a
+     deleted one until the list shrinks.
 
 Usage: python scripts/preflight.py   (exit 0 = safe to snapshot)
 Run it before every snapshot-sized commit; the full pytest suite
@@ -46,6 +49,19 @@ NORMALIZER_RE = re.compile(r"round\(v, 6\)|def norm\(")
 SF_READ_RE = re.compile(r"spark\.read\.parquet\([^)]*\bsf_dir", re.S)
 #: a write of session conf
 CONF_WRITE_RE = re.compile(r"\.conf\.(?:set|unset)\(")
+#: an engine env knob
+ENV_KNOB_RE = re.compile(r"SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]")
+#: every env knob the engine reads; each one is a code path that a
+#: measurement or a test needs
+ENGINE_ENV_KNOBS = frozenset({
+    "SPARK_GRAFT_BYPASS_MERGE_THRESHOLD",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_MAX_PARTITION_BYTES",
+    "SPARK_GRAFT_MAX_RESULT_SIZE",
+    "SPARK_GRAFT_REAL_EMBED",
+    "SPARK_GRAFT_SF_DIR",
+})
 
 
 def check(ok: bool, msg: str) -> None:
@@ -207,6 +223,18 @@ def main() -> int:
     check(not writes,
           f"no session conf write in conversadocs_spark/ outside "
           f"session.py (offenders: {writes or '[]'})")
+
+    # Env knobs are an explicit list: each one is a code path to keep
+    # working, so adding one is a decision, not a side effect.
+    knobs = set()
+    for full in sources:
+        rel = os.path.relpath(full, REPO).replace(os.sep, "/")
+        if rel.startswith("conversadocs_spark/") and rel.endswith(".py"):
+            knobs |= set(ENV_KNOB_RE.findall(open(full).read()))
+    check(knobs == ENGINE_ENV_KNOBS,
+          f"SPARK_GRAFT_* names in conversadocs_spark/ == ENGINE_ENV_KNOBS "
+          f"(unlisted: {sorted(knobs - ENGINE_ENV_KNOBS) or '[]'}, "
+          f"unused: {sorted(ENGINE_ENV_KNOBS - knobs) or '[]'})")
 
     if FAILS:
         print(f"\npreflight: {len(FAILS)} FAILURE(S) — do not snapshot")

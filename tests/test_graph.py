@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from conversadocs_spark import io
 from conversadocs_spark.operators.pagerank import pagerank
 from conversadocs_spark.operators.sketch import heavy_hitters
-from conversadocs_spark.plans.graph import BOUNDED_LOOP_CONF
 from conversadocs_spark.plans.registry import QUERIES
 
 
@@ -90,35 +89,45 @@ def _python_pagerank_fixedpoint(edges, iters, scale=10**12,
 
 def test_pagerank_fixedpoint_matches_python_with_dangling(spark):
     """The integer operator (dangling='uniform' path) must equal the
-    pure-python integer replay EXACTLY — bit-identical, not close."""
+    pure-python integer replay EXACTLY — bit-identical, not close —
+    as the distributed loop and as the single-task kernel."""
     from conversadocs_spark.operators.pagerank import (
         pagerank_fixedpoint,
     )
 
     edges = [(1, 2), (1, 3), (2, 3), (3, 1), (1, 4)]  # 4 is dangling
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        r.id: r.rank_fp
-        for r in pagerank_fixedpoint(
-            df, iters=12, tol_fp=10**12, dangling="uniform"
-        ).collect()
-    }
     ref = _python_pagerank_fixedpoint(edges, iters=12)
-    assert got == ref
+    for single_task in (False, True):
+        got = {
+            r.id: r.rank_fp
+            for r in pagerank_fixedpoint(
+                df, iters=12, tol_fp=10**12, dangling="uniform",
+                single_task=single_task,
+            ).collect()
+        }
+        assert got == ref, f"single_task={single_task}"
 
 
 def test_pagerank_fixedpoint_contracts(spark):
     """dangling='none' raises on a graph with dangling nodes; the
-    residual guard raises when the fixed budget cannot settle."""
+    residual guard raises when the fixed budget cannot settle. Both
+    hold for the distributed loop and for the single-task kernel."""
     from conversadocs_spark.operators.pagerank import (
         pagerank_fixedpoint,
     )
 
     df = spark.createDataFrame([(1, 2), (1, 3), (2, 1)], ["src", "dst"])
-    with pytest.raises(ValueError, match="dangling"):
-        pagerank_fixedpoint(df, iters=2, dangling="none")
-    with pytest.raises(RuntimeError, match="residual"):
-        pagerank_fixedpoint(df, iters=1, tol_fp=0, dangling="uniform")
+    for single_task in (False, True):
+        with pytest.raises(ValueError, match="dangling"):
+            pagerank_fixedpoint(
+                df, iters=2, dangling="none", single_task=single_task
+            )
+        with pytest.raises(RuntimeError, match="residual"):
+            pagerank_fixedpoint(
+                df, iters=1, tol_fp=0, dangling="uniform",
+                single_task=single_task,
+            )
 
 
 def test_pagerank_plan_capture_degrades_not_raises(spark):
@@ -126,8 +135,7 @@ def test_pagerank_plan_capture_degrades_not_raises(spark):
     _jdf.queryExecution() surface — a py4j/API change must degrade
     observability to None, never fail the operator. _capture_plan
     swallows both a missing surface and one that raises; the
-    plan_sink out-param (ADVICE r14) receives the same value the
-    LAST_ROUND_PLAN global gets, race-free per call."""
+    plan_sink out-param receives the per-call plan."""
     from conversadocs_spark.operators import pagerank as pr
 
     # broken surfaces: no _jdf at all, and a _jdf whose access raises
@@ -140,7 +148,7 @@ def test_pagerank_plan_capture_degrades_not_raises(spark):
 
     assert pr._capture_plan(_Boom()) is None
 
-    # healthy path: the sink gets the per-call plan (== the global)
+    # healthy path: the sink gets the per-call plan
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1)], ["src", "dst"]
     )
@@ -151,7 +159,6 @@ def test_pagerank_plan_capture_degrades_not_raises(spark):
     assert len(ranks) == 3
     assert len(sink) == 1
     assert sink[0] is not None and "HashAggregate" in sink[0]
-    assert pr.LAST_ROUND_PLAN == sink[0]
 
 
 def _strip_cached_lineage(plan: str) -> str:
@@ -174,61 +181,70 @@ def _strip_cached_lineage(plan: str) -> str:
     return "\n".join(out)
 
 
-def test_pagerank_bounded_loop_is_exchange_free(spark):
-    """VERDICT r15 #7: the bounded-graph loop_conf
-    (BOUNDED_LOOP_CONF, the conf graph_pagerank_exact runs under:
-    shuffle.partitions=1, AQE off, codegen off) makes every per-round
-    join/groupBy clustering requirement satisfiable by
-    SinglePartition, so the executed round segment must contain ZERO
-    Exchange of any kind and no WholeStageCodegen — the bench's
-    biggest win, pinned so a future AQE/conf drift can't silently
-    restore the per-round shuffle or compiles. The same call WITHOUT loop_conf must keep the session
-    shuffle width (corpus-scale path unchanged) and leave the session
-    conf untouched afterward."""
+def _random_edges(seed: int, symmetric: bool) -> list:
+    """A seeded random small graph with duplicate edges and self-loops,
+    one edge per node on average, so about a third of the nodes are
+    dangling (their shares must floor one by one); ``symmetric`` adds
+    every reverse edge (no dangling nodes)."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(3, 80))
+    pairs = rng.integers(0, n, size=(n, 2)) * 7 + 100
+    edges = [tuple(map(int, p)) for p in pairs]
+    return edges + [(d, s) for s, d in edges] if symmetric else edges
+
+
+def test_pagerank_kernel_matches_distributed_loop(spark):
+    """single_task=True (graph_pagerank_exact's path) runs the fixed
+    budget as one numpy kernel; on seeded random graphs, in both
+    dangling modes, its ranks must equal the distributed loop's bit
+    for bit. A drift in the kernel's division order, dangling share or
+    dedup fails here before it can reach the oracle row."""
+    from conversadocs_spark.operators.pagerank import (
+        pagerank_fixedpoint,
+    )
+
+    for seed in range(3):
+        for dangling in ("uniform", "none"):
+            df = spark.createDataFrame(
+                _random_edges(seed, symmetric=dangling == "none"),
+                ["src", "dst"],
+            )
+            loop, kernel = (
+                sorted(
+                    tuple(r)
+                    for r in pagerank_fixedpoint(
+                        df, iters=9, tol_fp=10**12, dangling=dangling,
+                        checkpoint_every=3, single_task=single_task,
+                    ).collect()
+                )
+                for single_task in (False, True)
+            )
+            assert loop and kernel == loop, (seed, dangling)
+
+
+def test_pagerank_loop_keeps_session_width(spark):
+    """The distributed loop (the corpus-scale path the sf100 graph gate
+    runs) plans each round at the session shuffle width, so the round
+    keeps its hash exchange, and leaves the session conf untouched."""
+    import re
+
     from conversadocs_spark.operators import pagerank as pr
 
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)],
         ["src", "dst"],
     )
+    width_before = spark.conf.get("spark.sql.shuffle.partitions")
     sink: list = []
     pr.pagerank_fixedpoint(
         df, iters=4, tol_fp=10**12, dangling="none",
-        checkpoint_every=4,
-        loop_conf=BOUNDED_LOOP_CONF,
-        plan_sink=sink,
-    ).collect()
-    assert sink and sink[0], "round plan not captured via plan_sink"
-    stripped = _strip_cached_lineage(sink[0])
-    # no SHUFFLE exchange of any partitioning (BroadcastExchange is
-    # the desired shape — r15's win is BroadcastHashJoin + hash
-    # aggregate fused in ONE stage, zero per-round shuffles)
-    import re
-
-    assert not re.search(
-        r"Exchange (hash|range|single)partitioning", stripped, re.I
-    ), f"bounded loop round re-grew a shuffle:\n{stripped}"
-    # no WholeStageCodegen either (the r16 codegen-off key): a drifted
-    # or misspelt key would silently bring back the per-checkpoint
-    # Janino compiles. The tree string prints each operator inside a
-    # WholeStageCodegen wrapper with a "*(<stage id>)" prefix.
-    assert not re.search(r"WholeStageCodegen|\*\(\d+\)", stripped), (
-        f"bounded loop round is whole-stage compiled:\n{stripped}"
-    )
-
-    # corpus-scale path: no loop_conf -> session width inside the
-    # round (hash exchanges present), session conf intact after
-    width_before = spark.conf.get("spark.sql.shuffle.partitions")
-    sink2: list = []
-    pr.pagerank_fixedpoint(
-        df, iters=4, tol_fp=10**12, dangling="none",
-        checkpoint_every=4, plan_sink=sink2,
+        checkpoint_every=4, plan_sink=sink,
     ).collect()
     assert spark.conf.get("spark.sql.shuffle.partitions") == width_before
-    assert sink2 and sink2[0]
+    assert sink and sink[0]
     assert re.search(
         r"Exchange hashpartitioning",
-        _strip_cached_lineage(sink2[0]),
+        _strip_cached_lineage(sink[0]),
     ), "session-width loop lost its per-round aggregate shuffle"
 
 

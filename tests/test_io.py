@@ -11,9 +11,11 @@ import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from conversadocs_spark import io
+from conversadocs_spark.session import child_session
 from conversadocs_spark.sources.sink import read_versioned, write_versioned
 from tests.conftest import SF_SMOKE
 
@@ -125,7 +127,9 @@ def test_events_ts_is_timestamp_on_every_read(spark):
 def test_nanos_events_resolve_per_session(spark, tmp_path):
     """A TIMESTAMP(NANOS) ``events.ts`` needs nanosAsLong in the reading
     session's conf; a new session has it from ``get_spark``'s defaults,
-    and the ns -> us projection applies to every read, cached or not."""
+    and the ns -> us projection applies to every read, cached or not.
+    A session without the key gets an error naming the key and
+    ``session.get_spark``, not Spark's bare PARQUET_TYPE_ILLEGAL."""
     table = pq.read_table(f"{SF_SMOKE}/events.parquet")
     i = table.schema.get_field_index("ts")
     micros = table["ts"].cast(pa.int64()).to_numpy()
@@ -142,6 +146,11 @@ def test_nanos_events_resolve_per_session(spark, tmp_path):
     for df in (first, again):
         assert df.schema["ts"].dataType == TimestampType()
         assert _first_ts(df) == _first_ts(io.table(spark, SF_SMOKE, "events"))
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    bare = child_session(spark, {key: "false"})
+    with pytest.raises(RuntimeError, match=re.escape(key)) as err:
+        io.table(bare, str(sf), "events")
+    assert "session.get_spark" in str(err.value)
 
 
 def test_threads_sharing_a_session_share_the_cache(spark, tmp_path):

@@ -429,6 +429,47 @@ def test_components_adaptive_width_restores_conf_and_labels(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
 
 
+def test_components_kernel_matches_loop(spark):
+    """A graph that fits one partition runs its rounds as one numpy
+    kernel in one task (the default here); the same graph at
+    edges_per_partition=1 runs the distributed loop. On seeded random
+    graphs, a chain of 100 and a star, both give the same labels and
+    the same LAST_RUN_ROUNDS, and the chain raises at max_iter=2 on
+    both paths after the same round count."""
+    import random
+
+    import pytest
+
+    from conversadocs_spark.operators import components
+
+    def run(pairs, **kw):
+        got = sorted(
+            tuple(r)
+            for r in components.connected_components(pairs, **kw).collect()
+        )
+        return got, components.LAST_RUN_ROUNDS
+
+    graphs = []
+    for seed in range(3):
+        rng = random.Random(seed)
+        n = rng.randint(4, 120)
+        graphs.append([
+            (rng.randrange(n) * 3, rng.randrange(n) * 3)
+            for _ in range(rng.randint(1, n))
+        ])
+    chain = [(i, i + 1) for i in range(100)]
+    graphs += [chain, [(0, i) for i in range(1, 40)]]
+    for edges in graphs:
+        pairs = spark.createDataFrame(edges, ["id1", "id2"])
+        kernel, loop = run(pairs), run(pairs, edges_per_partition=1)
+        assert kernel[0] and kernel == loop, edges[:5]
+    pairs = spark.createDataFrame(chain, ["id1", "id2"])
+    for kw in ({}, {"edges_per_partition": 1}):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            components.connected_components(pairs, max_iter=2, **kw)
+        assert components.LAST_RUN_ROUNDS == 2
+
+
 def test_group_topk_exact_budget_per_stratum(spark):
     """k=20 rows per language, ranks 1..k dense, and the salted
     two-phase plan is a pure function of (seed, doc_id): a

@@ -9,7 +9,6 @@ import time
 import pytest
 
 from conversadocs_spark.plans import QUERIES
-from conversadocs_spark.plans.graph import BOUNDED_LOOP_CONF
 from perfbench.run import SERVE
 from tests.conftest import SF_SMOKE
 
@@ -68,9 +67,14 @@ def test_warm_knn_topk_build_is_cheap_in_py4j(spark):
     assert sent < 400, f"warm knn_topk build sent {sent} py4j commands"
 
 
-#: conf that the engine's tuned queries set for themselves: the bounded
-#: loop's keys, and the shuffle width components and the replays narrow
-_TUNED_KEYS = (*BOUNDED_LOOP_CONF, "spark.sql.shuffle.partitions")
+#: conf a query could tune for itself: the shuffle width the components
+#: loop and the replays narrow, and the planner keys a loop could turn
+_TUNED_KEYS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.join.preferSortMergeJoin",
+    "spark.sql.codegen.wholeStage",
+)
 
 
 def _conf(spark) -> dict:
@@ -106,33 +110,50 @@ def _polled(spark, work) -> list[dict]:
 
 
 def test_tuned_queries_keep_their_conf_to_themselves(spark):
-    """graph_pagerank_exact (the bounded-loop conf) and dedup_clusters
-    (the components loop width) run in two threads on one session while
-    a third reads the session's conf: both outputs equal their serial
-    runs, the reader only ever sees the session's own values, and the
-    conf is unchanged afterwards. Each loop runs in a child session, so
-    its tuning never reaches the shared one."""
-    names = ("graph_pagerank_exact", "dedup_clusters")
-    serial = {n: _rows(QUERIES[n](spark, SF_SMOKE)) for n in names}
+    """graph_pagerank_exact and dedup_clusters (both bounded loops, run
+    as single-task kernels) and a components loop forced wide (it runs
+    at a shuffle width of its own, in a child session) run in three
+    threads on one session while a fourth reads the session's conf:
+    every output equals its serial run, the reader only ever sees the
+    session's own values, and the conf is unchanged afterwards."""
+    from conversadocs_spark.operators.components import (
+        connected_components,
+    )
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], ["id1", "id2"]
+    )
+    jobs = {
+        "graph_pagerank_exact": lambda: QUERIES["graph_pagerank_exact"](
+            spark, SF_SMOKE
+        ),
+        "dedup_clusters": lambda: QUERIES["dedup_clusters"](spark, SF_SMOKE),
+        # 80 directed edges at 20 per partition: a width of 4, not the
+        # session's 8, so a leak would show
+        "components_wide": lambda: connected_components(
+            chain, edges_per_partition=20
+        ),
+    }
+    serial = {n: _rows(job()) for n, job in jobs.items()}
     before = _conf(spark)
     out: dict = {}
     errors: list = []
 
     def run(name: str) -> None:
         try:
-            out[name] = _rows(QUERIES[name](spark, SF_SMOKE))
+            out[name] = _rows(jobs[name]())
         except Exception as e:  # reported by the assertion below
             errors.append((name, e))
 
-    def both() -> None:
-        threads = [threading.Thread(target=run, args=(n,)) for n in names]
+    def all_jobs() -> None:
+        threads = [threading.Thread(target=run, args=(n,)) for n in jobs]
         for t in threads:
             t.start()
         for t in threads:
             t.join(timeout=600)
         assert not any(t.is_alive() for t in threads)
 
-    seen = _polled(spark, both)
+    seen = _polled(spark, all_jobs)
     assert not errors, errors
     assert out == serial
     assert seen == [before], f"the shared session saw tuning: {seen}"
