@@ -44,8 +44,6 @@ TABLES = (
 #: dimension tables small enough to broadcast at any scale factor
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 #: per session: path -> (fingerprint, resolved LogicalRelation). Weakly
 #: keyed, so a session's resolved relations go when the session does.
 _RELATIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()

@@ -6,23 +6,14 @@ B~C must collapse to ONE kept doc even when A~C was never emitted.
 That is a connected-components problem; cluster_id = min doc_id in
 the component and the survivor is the doc equal to its cluster_id.
 
-Scale shape: iterative min-label propagation with path-halving —
-each round joins the current labels to the (bidirectional) edge list
-taking the min label across self + neighbors, then pointer-jumps
-(label := label-of-label), which halves remaining label-chain depth.
-Rounds needed = O(log diameter) rather than diameter, so even a
-pathological chain component of length 100 converges in ~10 rounds
-(tests/test_pipeline.py::test_components_chain_converges), while
-the star/clique shapes real near-dup graphs produce still finish in
-~3; every round is hash-partitioned on id (no all-pairs anything),
-and each round's driver-side action reads one label sum — the same
-bounded O(log)-actions pattern as operators/reduce.py. A graph whose
-measured edge count fits one partition (the near-dup rep-pair graph
-at every fixture scale) runs the same rounds as one numpy kernel in
-one task instead (:func:`_connected_components_single_task`), where
-the loop's cost would be its jobs, not its data. If the rounds exhaust
-``max_iter`` without converging the function RAISES instead of
-returning partially-propagated (wrong) labels, on either path.
+Scale shape: min-label propagation with a pointer jump per round, so
+rounds grow with log(diameter), not diameter (a 100-node chain takes
+~10, real star/clique near-dup graphs ~2); each round is hash-
+partitioned on id and its one driver action reads a label sum. A graph
+whose measured edge count fits one partition (the near-dup rep-pair
+graph at every fixture scale) runs the same rounds as one numpy kernel
+in one task (:func:`_connected_components_single_task`). Exhausting
+``max_iter`` RAISES on either path; labels are never partial.
 """
 
 from __future__ import annotations
@@ -37,11 +28,8 @@ from conversadocs_spark.session import child_session, rebind
 
 # Rounds executed by the most recent connected_components() call in
 # this process (1 = the fused first round alone; +1 per loop round
-# until the early fixpoint). Observability only — the early-fixpoint
-# exit makes round count DATA-dependent (deeper near-dup graphs cost
-# more rounds), and r12 showed a driver-regenerated fixture moving
-# dedup_clusters 2.6 -> 4.1 s with zero code change; bench.py stamps
-# this so "deeper graph -> more rounds" is measured, not inferred.
+# until the early fixpoint). Observability only: the round count is
+# data-dependent, so bench.py and perfbench stamp it per call.
 LAST_RUN_ROUNDS: int | None = None
 
 
@@ -62,19 +50,18 @@ def connected_components(
     (``session.child_session``); the caller's session conf is never
     written, and the labels come back as its DataFrame. At width 1 the
     same rounds run as one numpy kernel in one task instead.
+
+    Both paths read one persisted bidirectional edge list, built in
+    ONE pass over ``pairs`` (each row inlines (src, dst) and (dst,
+    src)). A union of the two directions gives the same rows and types
+    but runs ``pairs``' plan once per branch, and that plan is usually
+    a lazy pipeline: dedup_clusters' MinHash rep pairs ran twice.
     """
     spark = pairs.sparkSession
-    edges_raw = (
-        pairs.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-        .union(
-            pairs.select(
-                F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
-            )
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    edges_raw = pairs.selectExpr(
+        f"inline(array(named_struct('src', `{src_col}`, 'dst', `{dst_col}`),"
+        f" named_struct('src', `{dst_col}`, 'dst', `{src_col}`)))"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     # Scale-adaptive loop width (r15): the iterative joins/aggregates
     # below run at spark.sql.shuffle.partitions width EVERY round, and
     # the cached edge distribution is only reusable when the loop width

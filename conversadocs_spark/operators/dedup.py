@@ -355,6 +355,18 @@ def dedup_ngram_pairs(
     )
 
 
+def _persist_owned(df: DataFrame, cache_holder: list | None) -> DataFrame:
+    """``df`` persisted MEMORY_AND_DISK; appended to ``cache_holder``
+    only when this call created the cache entry, i.e. when no identical
+    plan was cached before (see minhash_rep_near_dups)."""
+    level = df.storageLevel
+    owned = not (level.useMemory or level.useDisk or level.useOffHeap)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if owned and cache_holder is not None:
+        cache_holder.append(df)
+    return df
+
+
 def minhash_rep_near_dups(
     df: DataFrame,
     threshold: float = 0.5,
@@ -385,6 +397,11 @@ def minhash_rep_near_dups(
     eviction (r5 ADVICE). Callers that fully materialize results can
     pass ``cache_holder=[]`` and ``unpersist()`` its entries once
     done (dedup_clusters does, after components converge).
+
+    ``cache_holder`` gets only the entries this call created: cached
+    plans match across queries, and an entry that was already cached
+    (say by an earlier dedup_minhash whose lazy result still reads it)
+    belongs to that query, so it is reused but never listed.
     """
     rows_per_band = num_hashes // bands
     # signature[i] = min over shingles of xxhash64(h(shingle), i),
@@ -429,9 +446,7 @@ def minhash_rep_near_dups(
     # tokenized+shingled+hashed once per consumer. MEMORY_AND_DISK
     # holds one slim (id, array<long>, key) row per doc (~8B/shingle;
     # spills, never OOMs), turning the operator into ONE parse pass +
-    # cache reads. At cluster scale this is the standard compute-once
-    # shape; the cache is LRU-evictable after the query completes (or
-    # released explicitly via cache_holder).
+    # cache reads (released through cache_holder; see the docstring).
     # Identical-content collapse (same pattern as simhash stage 1,
     # r6): group docs by their order-insensitive hashed-shingle SET
     # and run signature/banding/re-check on ONE representative per
@@ -452,24 +467,23 @@ def minhash_rep_near_dups(
     # is unchanged: equal shingle sets still collide exactly, and the
     # accidental-collision budget stays ~n^2/2^64 (pinned vs the
     # string-exact oracle by the test suite).
-    keyed = (
+    keyed = _persist_owned(
         hashed_shingles(df, text_col, id_col, n)
-        .selectExpr("id", "hs", "xxhash64(array_sort(hs)) as ck")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .selectExpr("id", "hs", "xxhash64(array_sort(hs)) as ck"),
+        cache_holder,
     )
-    if cache_holder is not None:
-        cache_holder.append(keyed)
     # ONE groupBy yields both the representative id and its shingle
     # array (min_by rides the same partial aggregation), so no extra
     # join is needed to recover the representative's content. reps is
     # persisted as well: it feeds membership, the signature pass, and
     # both re-check branches — distinct-content-sized, slim.
-    reps = keyed.groupBy("ck").agg(
-        F.min("id").alias("rid"),
-        F.min_by("hs", "id").alias("hs"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_holder is not None:
-        cache_holder.append(reps)
+    reps = _persist_owned(
+        keyed.groupBy("ck").agg(
+            F.min("id").alias("rid"),
+            F.min_by("hs", "id").alias("hs"),
+        ),
+        cache_holder,
+    )
     mem = keyed.join(reps.select("ck", "rid"), "ck").select("id", "rid")
     rep_hs = reps.selectExpr("rid as id", "hs")
     sig = minhash_signatures(rep_hs, num_hashes)
@@ -553,7 +567,8 @@ def minhash_near_dups(
     construction); intra pairs within an identical-content group are
     jaccard 1.0 exactly. Pinned by
     tests/test_dedup.py::test_minhash_collapse_on_duplicated_corpus.
-    See minhash_rep_near_dups for the cache_holder contract.
+    See minhash_rep_near_dups for the cache_holder contract: it lists
+    only the cache entries this call created, never a shared one.
     """
     rep_pairs, mem = minhash_rep_near_dups(
         df,

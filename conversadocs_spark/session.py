@@ -4,6 +4,9 @@ Defaults assume local[N] testing but are written for cluster scale:
 AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 Arrow enabled for the pandas_udf hot paths, and shuffle partitions
 sized by env so the same code runs at sf0.001 and at 100 TB.
+Env is read when ``get_spark`` runs, never at import: the shuffle
+width is ``SPARK_GRAFT_CPUS`` at session build (32 when unset), also
+for a caller that imports the package before setting the variable.
 """
 
 from __future__ import annotations
@@ -12,8 +15,6 @@ import os
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 #: ``spark.sql.codegen.cache.maxEntries``, the size of the JVM-wide LRU
 #: cache of Janino-compiled classes (a static conf: it takes effect only
@@ -37,6 +38,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
+    - Shuffle width: ``shuffle_partitions``, else ``SPARK_GRAFT_CPUS``
+      read now (the same variable sizes ``local[N]``), else 32.
+      Adaptive execution coalesces shuffle reads but not a persisted
+      relation's partitions, so a width above the core count costs a
+      task per extra partition on every cache read.
     - AQE: runtime coalescing + skew-join handling; at 100 TB this is
       what turns a bad static shuffle count into a workable one.
     - Arrow: all pandas_udf / mapInPandas traffic is Arrow-batched.
@@ -62,37 +68,32 @@ def get_spark(
       would explode into ~12M tasks. SPARK_GRAFT_MAX_PARTITION_BYTES
       overrides in either mode.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     # Local-test split tuning must not leak to cluster deployments: the
     # env var wins if set, local mode gets 8m, a real master keeps
     # Spark's own default.
     max_part = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES") or (
         "8m" if master is None else None
     )
-    # Shuffle writer choice (r16, measured): with <=200 reduce
-    # partitions Spark picks BypassMergeSortShuffleWriter, which
-    # writes one FILE PER REDUCE PARTITION per map task and then
-    # concatenates them (FileChannel.map/transferTo). On a many-core
-    # local VM that is ~32 tiny file creates + an mmap/munmap pair per
-    # map task — measured as a CPU storm that scales with concurrent
-    # map tasks (set_ops: 2.03 s wall / 28.6 CPU-s -> 0.82 / 7.7 with
-    # the sort-based writer, which writes ONE spill file + index per
-    # map task). Local mode therefore forces the sort writer; a
-    # cluster deployment keeps Spark's default (its wide shuffles
-    # exceed the threshold anyway, and its executors munmap across
-    # far fewer cores). SPARK_GRAFT_BYPASS_MERGE_THRESHOLD overrides.
+    # Shuffle writer (r16, measured): with <=200 reduce partitions Spark
+    # picks BypassMergeSortShuffleWriter, one FILE PER REDUCE PARTITION
+    # per map task, then an mmap'd concatenation: on a many-core local
+    # VM a CPU storm (set_ops 2.03 s / 28.6 CPU-s -> 0.82 / 7.7 with the
+    # sort writer's one spill file + index). Local mode forces the sort
+    # writer; a cluster keeps Spark's default (its wide shuffles exceed
+    # the threshold). SPARK_GRAFT_BYPASS_MERGE_THRESHOLD overrides.
     bypass_thr = os.environ.get(
         "SPARK_GRAFT_BYPASS_MERGE_THRESHOLD"
     ) or ("1" if master is None else None)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{cpus or '*'}]")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or int(cpus or 32)),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
@@ -111,12 +112,9 @@ def get_spark(
         builder
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # env-var override HOOK only: the default below IS Spark's
-        # own 1g default, so plain get_spark() callers see no change.
-        # Verification harnesses that collect FULL query outputs to
-        # hash-compare against DuckDB (scale_gate sets 8g) export
-        # SPARK_GRAFT_MAX_RESULT_SIZE before building the session.
-        # Operators themselves never collect (lint-pinned).
+        # override hook only: the default IS Spark's own 1g. Harnesses
+        # that collect full outputs for the oracle (scale_gate: 8g)
+        # export it first; operators never collect (lint-pinned).
         .config(
             "spark.driver.maxResultSize",
             os.environ.get("SPARK_GRAFT_MAX_RESULT_SIZE", "1g"),

@@ -25,7 +25,10 @@ script runs ONLY the cheap invariants (no SparkSession, no data):
      session.child_session),
  11. the `SPARK_GRAFT_*` names under conversadocs_spark/ equal
      ENGINE_ENV_KNOBS: a new env knob fails until it is listed, and a
-     deleted one until the list shrinks.
+     deleted one until the list shrinks,
+ 12. no `os.environ` / `os.getenv` under conversadocs_spark/ outside a
+     function body: an import-time read freezes the value the
+     process had when it first imported the package.
 
 Usage: python scripts/preflight.py   (exit 0 = safe to snapshot)
 Run it before every snapshot-sized commit; the full pytest suite
@@ -34,6 +37,7 @@ remains the real bar, this is the "can't land obviously broken" gate.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
@@ -60,8 +64,37 @@ ENGINE_ENV_KNOBS = frozenset({
     "SPARK_GRAFT_MAX_PARTITION_BYTES",
     "SPARK_GRAFT_MAX_RESULT_SIZE",
     "SPARK_GRAFT_REAL_EMBED",
-    "SPARK_GRAFT_SF_DIR",
 })
+
+
+def import_time_env_reads(source: str) -> list[int]:
+    """Line numbers of ``os.environ`` / ``os.getenv`` references in
+    ``source`` that are not inside a function body (module level, class
+    bodies, decorators and default argument values all run at import)."""
+    lines: list[int] = []
+
+    def visit(node: ast.AST, in_body: bool) -> None:
+        if (
+            not in_body and isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name) and node.value.id == "os"
+            and node.attr in ("environ", "getenv")
+        ):
+            lines.append(node.lineno)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for dec in node.decorator_list:
+                visit(dec, in_body)
+            visit(node.args, in_body)
+            for stmt in node.body:
+                visit(stmt, True)
+        elif isinstance(node, ast.Lambda):
+            visit(node.args, in_body)
+            visit(node.body, True)
+        else:
+            for child in ast.iter_child_nodes(node):
+                visit(child, in_body)
+
+    visit(ast.parse(source), False)
+    return sorted(lines)
 
 
 def check(ok: bool, msg: str) -> None:
@@ -235,6 +268,20 @@ def main() -> int:
           f"SPARK_GRAFT_* names in conversadocs_spark/ == ENGINE_ENV_KNOBS "
           f"(unlisted: {sorted(knobs - ENGINE_ENV_KNOBS) or '[]'}, "
           f"unused: {sorted(ENGINE_ENV_KNOBS - knobs) or '[]'})")
+
+    # Env is read when the engine runs, not when it is imported: a
+    # module-level read keeps whatever the process had at first import.
+    import_reads = []
+    for full in sources:
+        rel = os.path.relpath(full, REPO).replace(os.sep, "/")
+        if rel.startswith("conversadocs_spark/") and rel.endswith(".py"):
+            import_reads += [
+                f"{rel}:{line}"
+                for line in import_time_env_reads(open(full).read())
+            ]
+    check(not import_reads,
+          f"no import-time env read in conversadocs_spark/ "
+          f"(offenders: {import_reads or '[]'})")
 
     if FAILS:
         print(f"\npreflight: {len(FAILS)} FAILURE(S) — do not snapshot")

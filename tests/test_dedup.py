@@ -538,6 +538,28 @@ def test_hot_bucket_cap_bounds_candidates_and_keeps_recall(spark):
     assert all(a >= 10000 and b >= 10000 for a, b in found)
 
 
+def test_clusters_keep_a_cache_they_share_with_minhash(
+    spark, sf_oracle_dir
+):
+    """dedup_minhash returns lazily over its persisted hashed-shingle
+    relations. A later dedup_clusters over the same corpus finds the
+    same plans in the session's cache and reuses them, but it releases
+    only the entries it created, so dedup_minhash's result still reads
+    the shared cache afterwards and still matches its oracle."""
+    from conversadocs_spark.plans import ORACLES, QUERIES
+    from tests.oracle import mismatch, run_duckdb
+
+    minhash = QUERIES["dedup_minhash"](spark, sf_oracle_dir)
+    assert QUERIES["dedup_clusters"](spark, sf_oracle_dir).count() > 0
+    plan = minhash._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan, plan
+    diff = mismatch(
+        minhash.columns, [tuple(r) for r in minhash.collect()],
+        *run_duckdb(ORACLES["dedup_minhash"], sf_oracle_dir),
+    )
+    assert diff is None, diff
+
+
 def test_ppjoin_equals_brute_force(spark, sf_oracle_dir):
     """Prefix filtering must be EXACT: the PPJoin result equals the
     all-pairs Jaccard join at the same threshold, pair for pair,

@@ -470,6 +470,41 @@ def test_components_kernel_matches_loop(spark):
         assert components.LAST_RUN_ROUNDS == 2
 
 
+@pytest.mark.parametrize("edges_per_partition", [1_000_000, 1])
+def test_components_read_pairs_once(spark, tmp_path, edges_per_partition):
+    """The bidirectional edge list comes from ONE pass over ``pairs``,
+    on the kernel path (default width) and on the distributed loop
+    (edges_per_partition=1): every row of a parquet pairs file goes
+    through the source plan once per call. A union of the two
+    directions runs the plan once per branch, so it counts each row
+    twice."""
+    from conversadocs_spark.operators.components import (
+        connected_components,
+    )
+
+    rows = [(i, i + 1) for i in range(0, 60, 2)]
+    rows += [(i, i + 3) for i in range(0, 60, 6)]
+    path = str(tmp_path / "pairs.parquet")
+    spark.createDataFrame(rows, "id1 bigint, id2 bigint").write.parquet(
+        path
+    )
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    pairs = spark.read.parquet(path).mapInPandas(
+        counted, "id1 bigint, id2 bigint"
+    )
+    labels = connected_components(
+        pairs, edges_per_partition=edges_per_partition
+    ).collect()
+    assert len(labels) == len({n for r in rows for n in r})
+    assert seen.value == len(rows)
+
+
 def test_group_topk_exact_budget_per_stratum(spark):
     """k=20 rows per language, ranks 1..k dense, and the salted
     two-phase plan is a pure function of (seed, doc_id): a

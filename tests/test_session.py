@@ -3,6 +3,9 @@ sessions that keep one query's conf out of every other query's."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import threading
 import time
 
@@ -181,3 +184,35 @@ def test_replay_keeps_the_session_width(spark):
     assert out and out[0] > 0
     assert seen == [before], f"the calling session saw tuning: {seen}"
     assert _conf(shared) == before
+
+
+def test_shuffle_width_is_read_when_the_session_is_built(tmp_path):
+    """get_spark reads SPARK_GRAFT_CPUS when it builds the session, not
+    when the package is imported: a caller that imports the registry
+    first and sets the variable afterwards (perfbench/run.py does) gets
+    its width. It runs in a child process because this process's JVM
+    already holds a session."""
+    code = (
+        "import os\n"
+        "import conversadocs_spark.plans\n"
+        "from conversadocs_spark.session import get_spark\n"
+        "os.environ['SPARK_GRAFT_CPUS'] = '3'\n"
+        "spark = get_spark()\n"
+        "print('width', spark.conf.get('spark.sql.shuffle.partitions'))\n"
+        "spark.stop()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_CPUS", "PYSPARK_SUBMIT_ARGS")
+    }
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    env["SPARK_GRAFT_DRIVER_MEM"] = "512m"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "width 3" in out.stdout.splitlines(), out.stdout
