@@ -231,9 +231,7 @@ def bench_layout(sf_dir: str) -> str:
         # extra row groups (still one task) but pays per-row-group
         # reader overhead on every scan — measured as a broad ~5-10%
         # tax across the headline set when everything was re-grouped.
-        min_bytes = int(
-            os.environ.get("SPARK_GRAFT_LAYOUT_MIN_BYTES", str(4 << 20))
-        )
+        min_bytes = 4 << 20
         for fname in sorted(os.listdir(abs_dir)):
             if not fname.endswith(".parquet"):
                 continue

@@ -1,95 +1,139 @@
-"""Top-k cosine similarity search — the reference's core query.
+"""Top-k retrieval core — the reference's one retrieval loop.
 
 Reference: ``db.as_retriever(search_type="similarity", search_kwargs=
-{"k": k})`` over an in-memory exact store
-(/root/reference/conversadocs/bones.py:74, bones.py:78) — embed the
-query, exact cosine against ALL vectors, keep the k best (k in [1,5],
-default 3; /root/reference/app.py:116).
+{"k": k})`` over an in-memory exact store (reference bones.py:74,
+bones.py:78) — embed the query, exact cosine against ALL vectors, keep
+the k best (k in [1,5], default 3; reference app.py:116), optionally
+rescoring a shortlist first.
 
-Spark-first design:
-- Single query vector: the vector becomes a literal/broadcast scalar —
-  the scan streams once, computes sim per row JVM-side, and a
-  TakeOrderedAndProject keeps the global top-k (no full sort, no
-  shuffle of the data — only k rows per partition reach the driver
-  stage). This is exactly the plan that survives 100 TB: a full scan
-  with a constant-memory reducer.
-- Batch of queries: broadcast the (small) query side, per-query window
-  top-k. See ``knn_per_query``.
+The exact-retrieval plans (the knn_* and multivec_maxsim* builders
+in plans/vector.py, knn_per_query and its callers, hybrid_rrf's dense
+list) keep their k best rows through :func:`topk`, and every
+shortlist -> rescore -> top-k through :func:`two_stage_topk`
+(:func:`rescore` is its middle stage; knn_filtered_int8_batch keeps
+its tie-aware band shortlist and uses the other two), so the
+single-query / batch plan choice is made in one place:
+
+- One query (``by=None``): ``orderBy(*order).limit(k)``, which
+  Catalyst plans as TakeOrderedAndProject — the scan streams once and
+  only k rows per partition reach the driver stage: no full sort, no
+  shuffle of the data. This is the plan that survives 100 TB: a full
+  scan with a constant-memory reducer.
+- A query batch (``by="query_id"``): a ``row_number()`` window per
+  query plus a ``<= k`` filter. The window partitions by the query key
+  (Q groups), so only the caller's skinny scored projection shuffles,
+  never the corpus; the single-query TakeOrdered has no multi-query
+  analog.
+
+Scoring stays with the caller: the core never builds a similarity
+expression, it ranks the one it is given. :func:`row_cosine` and
+:func:`knn_per_query` are the exact-cosine scorers of the single-query
+and batch forms.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from conversadocs_spark.functions.vector import dot_product, l2_norm
 
 
-def knn_topk(
-    vectors: DataFrame,
-    query_vec: list[float],
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def topk(
+    df: DataFrame,
+    k: int,
+    order: list[Column],
+    by: str | None = None,
+    rank: str = "rank",
 ) -> DataFrame:
-    """Exact top-k by cosine similarity to a literal query vector.
+    """The k best rows of ``df`` under ``order`` (best first, the last
+    key a unique tie-break), over the whole relation or per ``by``
+    group. The grouped form numbers each group's rows 1.. in column
+    ``rank``; callers that do not return the number drop it (a no-op
+    on the single-query form, which adds no column)."""
+    if by is None:
+        return df.orderBy(*order).limit(k)
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).where(
+        F.col(rank) <= k
+    )
 
-    Returns (id_col, sim) with sim rounded to 6 decimals
-    (oracle float rule) and deterministic tie-break on id.
 
-    The query's norm is folded DRIVER-side: higher-order functions
-    over literal arrays are not constant-folded by Catalyst, so the
-    inline form re-evaluates the 64-element fold once per corpus row.
-    The Python replacement is the same IEEE-double left fold in the
-    same element order (Python floats ARE doubles), so the division
-    sees bit-identical values and oracle hashes are unchanged.
-    """
-    import math
+def rescore(
+    shortlist: DataFrame,
+    coarse: str,
+    sim: Column,
+    by: str | None = None,
+    vectors: DataFrame | None = None,
+    queries: DataFrame | None = None,
+) -> DataFrame:
+    """([by,] vec_id, coarse, sim): a shortlist's rows rescored with the
+    exact ``sim`` expression.
 
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    acc = 0.0
-    for x in query_vec:
-        acc = acc + float(x) * float(x)
-    qn = math.sqrt(acc)
-    sim = dot_product(F.col(vec_col), q) / (
-        l2_norm(F.col(vec_col)) * F.lit(qn)
+    The relation ``sim`` reads is the caller's choice: a shortlist
+    that carries the float vector along is rescored in place;
+    otherwise the shortlist is broadcast back into ``vectors`` on
+    ``vec_id`` (the corpus side is never hashed or shuffled), and
+    ``queries`` — one row per ``by`` key — is broadcast onto it on
+    ``by``. Both broadcast sides are bounded by the query batch: the
+    shortlist's rows per query and one query row per query."""
+    keys = ["vec_id"] if by is None else [by, "vec_id"]
+    if vectors is not None:
+        shortlist = F.broadcast(shortlist).join(vectors, "vec_id")
+    if queries is not None:
+        shortlist = shortlist.join(F.broadcast(queries), by)
+    return shortlist.select(*keys, coarse, sim.alias("sim"))
+
+
+def two_stage_topk(
+    scored: DataFrame,
+    n: int,
+    k: int,
+    coarse: str,
+    sim: Column,
+    by: str | None = None,
+    vectors: DataFrame | None = None,
+    queries: DataFrame | None = None,
+) -> DataFrame:
+    """Shortlist -> rescore -> top-k: the ``n`` best rows of ``scored`` by
+    its coarse score column ``coarse``, rescored (:func:`rescore`, same
+    arguments), and the ``k`` best of those by ``sim``; ties go to the
+    lower ``vec_id`` at both stages. Returns ([by,] vec_id, coarse,
+    sim)."""
+    shortlist = topk(
+        scored, n, [F.desc(coarse), F.asc("vec_id")], by, rank="rn"
+    ).drop("rn")
+    rescored = rescore(shortlist, coarse, sim, by, vectors, queries)
+    return topk(
+        rescored, k, [F.desc("sim"), F.asc("vec_id")], by, rank="rk"
+    ).drop("rk")
+
+
+def row_cosine(
+    corpus: DataFrame, vectors: DataFrame, query_id: int
+) -> DataFrame:
+    """(vec_id, sim): every ``corpus`` row except ``query_id`` scored by
+    cosine against the stored vector ``query_id`` of ``vectors``, sim
+    rounded to 6 decimals (the oracle float rule). The query row is
+    looked up in ``vectors``, so a query outside a filtered corpus
+    still works.
+
+    The 1-row query side is cross-joined via broadcast — Catalyst
+    plans a BroadcastNestedLoopJoin with a single broadcast row, so the
+    corpus streams exactly once — and carries the query norm, computed
+    ONCE there: an inline cosine would re-fold it per corpus row (same
+    expression tree, bit-identical values)."""
+    q = vectors.where(F.col("vec_id") == query_id).select(
+        F.col("embedding").alias("_qvec"),
+        l2_norm(F.col("embedding")).alias("_qn"),
+    )
+    sim = dot_product(F.col("embedding"), F.col("_qvec")) / (
+        l2_norm(F.col("embedding")) * F.col("_qn")
     )
     return (
-        vectors.select(F.col(id_col), F.round(sim, 6).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def knn_self(
-    vectors: DataFrame,
-    query_id: int,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k neighbours of one row of the table itself (query-by-id).
-
-    The 1-row query side is cross-joined via broadcast — Catalyst folds
-    it into a BroadcastNestedLoopJoin with a single broadcast row, so
-    the big side still streams exactly once.
-    """
-    q = vectors.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("_qvec"),
-        # query norm computed ONCE on the 1-row broadcast side — the
-        # inline cosine would re-fold it per corpus row (same hoisted
-        # expression tree, bit-identical values)
-        l2_norm(F.col(vec_col)).alias("_qn"),
-    )
-    sim = dot_product(F.col(vec_col), F.col("_qvec")) / (
-        l2_norm(F.col(vec_col)) * F.col("_qn")
-    )
-    return (
-        vectors.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(sim, 6).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc(id_col))
-        .limit(k)
+        corpus.crossJoin(F.broadcast(q))
+        .where(F.col("vec_id") != query_id)
+        .select("vec_id", F.round(sim, 6).alias("sim"))
     )
 
 
@@ -97,26 +141,22 @@ def knn_per_query(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     exclude_self: bool = False,
 ) -> DataFrame:
-    """Exact top-k per query for a BATCH of query vectors.
+    """Exact cosine top-k per query for a BATCH of query vectors
+    ((query_id, query_vec) rows): (query_id, vec_id, sim, rank).
 
     ``exclude_self=True`` drops corpus rows whose id equals the
-    query's id BEFORE the rank window (so k still fills) — the same
-    contract ivf_search / ivfpq_topk apply unconditionally. The
-    planner dispatches (operators/planner.py) set it so the physical
-    strategy choice can never change results for callers whose query
-    ids overlap corpus ids; the default stays False for the plain
+    query's id BEFORE the top-k (so k still fills) — the same contract
+    ivf_search / ivfpq_topk apply unconditionally. The planner
+    dispatches (operators/planner.py) set it so the physical strategy
+    choice can never change results for callers whose query ids
+    overlap corpus ids; the default stays False for the plain
     disjoint-id retrieval queries whose oracles do not exclude.
 
-    Plan shape: broadcast(queries) × vectors → sim → per-query window
-    top-k. The corpus never shuffles; only Q×N sim rows flow into the
-    rank filter, and the window partitions by query_id (Q groups).
-    At scale, swap the crossJoin for an LSH bucket join
+    Plan shape: broadcast(queries) × vectors → sim → :func:`topk` per
+    query. The corpus never shuffles; only Q×N sim rows flow into the
+    rank filter. At scale, swap the crossJoin for an LSH bucket join
     (operators/lsh.py) when Q×N is too large — same downstream shape.
 
     Norms are hoisted ABOVE the Q×N fan-out (the MaxSim r11 lesson:
@@ -128,80 +168,18 @@ def knn_per_query(
     doubles, so results — and every downstream oracle hash — are
     unchanged.
     """
-    q = F.broadcast(
-        queries.withColumn("_qn", l2_norm(F.col(query_vec_col)))
-    )
-    sim = dot_product(F.col(vec_col), F.col(query_vec_col)) / (
+    q = F.broadcast(queries.withColumn("_qn", l2_norm(F.col("query_vec"))))
+    sim = dot_product(F.col("embedding"), F.col("query_vec")) / (
         F.col("_n") * F.col("_qn")
     )
-    w = (
-        Window.partitionBy(query_id_col)
-        .orderBy(F.desc("sim"), F.asc(id_col))
-    )
-    pairs = vectors.withColumn("_n", l2_norm(F.col(vec_col))).crossJoin(q)
+    pairs = vectors.withColumn(
+        "_n", l2_norm(F.col("embedding"))
+    ).crossJoin(q)
     if exclude_self:
-        pairs = pairs.where(F.col(id_col) != F.col(query_id_col))
-    return (
-        pairs.select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(sim, 6).alias("sim"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        pairs = pairs.where(F.col("vec_id") != F.col("query_id"))
+    scored = pairs.select(
+        "query_id", "vec_id", F.round(sim, 6).alias("sim")
     )
-
-
-def knn_filtered(
-    vectors: DataFrame,
-    allowed_ids: DataFrame,
-    query_id: int,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Metadata-FILTERED top-k: neighbours of ``query_id`` restricted
-    to ids present in ``allowed_ids`` (single column named ``id_col``).
-
-    This is the "filtered vector search" production shape (the
-    reference's retriever has no filter arg — bones.py:74 retrieves
-    over the whole store — but any multi-tenant / language-scoped
-    deployment of it needs one). Two classic strategies:
-
-    - PRE-filter (this implementation): semi-join the corpus against
-      the allowed-id set BEFORE computing similarities, then run the
-      same scan + TakeOrderedAndProject as the unfiltered path.
-      Correct for any selectivity — top-k is exact over the filtered
-      corpus, never under-filled.
-    - POST-filter (ANN then discard): only sound when the index
-      over-fetches enough to survive the discard; with a selective
-      predicate it silently returns < k rows. We deliberately do NOT
-      ship that shape as the default.
-
-    Scale: the semi-join carries NO broadcast hint — Catalyst picks a
-    LEFT SEMI BroadcastHashJoin when the allowed-id side's estimated
-    size clears autoBroadcastJoinThreshold (the common case: a pushed
-    filter over a dimension scan), and falls back to a shuffled
-    semi-join when the predicate set is itself huge. An unconditional
-    hint would force a >8 GB broadcast / driver OOM on a large tenant
-    set instead of degrading to the corpus-linear shuffle. The query
-    row is looked up from the UNfiltered table so a query outside its
-    own filter still works.
-    """
-    q = vectors.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("_qvec"),
-        l2_norm(F.col(vec_col)).alias("_qn"),  # once, not per row
-    )
-    kept = vectors.join(
-        allowed_ids.select(id_col), id_col, "left_semi"
-    )
-    sim = dot_product(F.col(vec_col), F.col("_qvec")) / (
-        l2_norm(F.col(vec_col)) * F.col("_qn")
-    )
-    return (
-        kept.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(sim, 6).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc(id_col))
-        .limit(k)
+    return topk(
+        scored, k, [F.desc("sim"), F.asc("vec_id")], by="query_id"
     )

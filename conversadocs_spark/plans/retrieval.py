@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from conversadocs_spark import io
-from conversadocs_spark.operators.knn import knn_self
+from conversadocs_spark.operators.knn import row_cosine, topk
 from conversadocs_spark.plans.registry import register
 
 # Fixed keyword query: terms from the corpus vocabulary so the ranking
@@ -237,12 +237,13 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("lex_rank") <= _N_PER_LIST)
     )
     emb = io.table(spark, sf_dir, "embeddings")
+    order = [F.desc("sim"), F.asc("vec_id")]
     dense = (
-        knn_self(emb, query_id=0, k=_N_PER_LIST)
+        topk(row_cosine(emb, emb, 0), _N_PER_LIST, order)
         .select(
             F.col("vec_id").alias("doc_id"),
             F.row_number()
-            .over(Window.orderBy(F.desc("sim"), F.asc("vec_id")))
+            .over(Window.orderBy(*order))
             .cast("int")
             .alias("dense_rank"),
         )
@@ -374,8 +375,10 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: stage 1 is the vocab_topk shape — explode trigrams,
     map-side-combined count, TakeOrdered(1); the 1-row phrase then
     broadcasts into stage 2, a single corpus scan whose match
-    count/position are codegen array ops (filter/array_position on
-    the per-row gram array) — no second shuffle, no UDF. The
+    count/position are JVM array ops on the per-row gram array
+    (filter runs interpreted — Spark 4.1's ArrayFilter is
+    CodegenFallback — and array_position in generated code) — no
+    second shuffle, no UDF. The
     posting-list alternative (explode (doc, pos) once, self-join on
     pos offsets) is the right shape when MANY phrase queries share
     one positional index; for a single ad-hoc phrase the scan plan

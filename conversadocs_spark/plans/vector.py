@@ -11,7 +11,13 @@ from pyspark.sql import functions as F
 from conversadocs_spark import io
 from conversadocs_spark.functions.vector import cosine_similarity
 from conversadocs_spark.operators.ivf import ivf_topk
-from conversadocs_spark.operators.knn import knn_per_query, knn_self
+from conversadocs_spark.operators.knn import (
+    knn_per_query,
+    rescore,
+    row_cosine,
+    topk,
+    two_stage_topk,
+)
 from conversadocs_spark.operators.lsh import ann_topk_lsh
 from conversadocs_spark.plans.registry import register
 
@@ -64,18 +70,20 @@ def knn_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval query (R9 top-k cosine + R15 provenance projection).
 
     Query vector = embeddings row vec_id=0; exact cosine against all
-    other rows (zip_with+aggregate, codegen'd); global top-3 with
-    deterministic tie-break; left join to documents for `source`.
+    other rows (operators/knn.py:row_cosine; zip_with+aggregate,
+    interpreted JVM-side); global top-3 with deterministic tie-break;
+    left join to documents for `source`.
 
     Plan: broadcast 1-row query side -> single scan of embeddings ->
-    TakeOrderedAndProject(k=3) -> broadcast join to documents.
-    No full sort, no wide shuffle: survives a 100 TB corpus.
+    TakeOrderedAndProject(k=3) (operators/knn.py:topk) -> broadcast
+    join to documents. No full sort, no wide shuffle: survives a
+    100 TB corpus.
     """
     emb = io.table(spark, sf_dir, "embeddings")
     docs = io.table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "source"
     )
-    top = knn_self(emb, query_id=0, k=3)
+    top = topk(row_cosine(emb, emb, 0), 3, [F.desc("sim"), F.asc("vec_id")])
     return top.join(F.broadcast(docs), "vec_id", "left").select(
         "vec_id", "sim", "source"
     )
@@ -881,11 +889,14 @@ def _staged_ivf_index(
     records the stage version, the source parquet's (mtime_ns, size),
     AND the build module's (mtime_ns, size) — so editing
     operators/ivf.py invalidates stale indexes even if nobody
-    remembers to bump _IVF_STAGE_VER. The build lands in a
-    pid-suffixed temp dir and is published with one os.rename; if a
-    concurrent process won the publish race (rename fails because the
-    path reappeared), its stage is validated against the same stamp
-    and used — the loser's work is discarded, never a torn index.
+    remembers to bump _IVF_STAGE_VER. Each build lands in a temp dir
+    of its own (``tempfile.mkdtemp`` beside the stage — a pid suffix
+    is not unique: two threads of one session share the pid and would
+    delete each other's build) and is published with one os.rename;
+    if a concurrent stager won the publish race (rename fails because
+    the path reappeared), its stage is validated against the same
+    stamp and used — the loser's work is discarded, never a torn
+    index.
 
     Reuse runs ZERO Spark jobs (pinned in tests/test_planner.py):
     the stamp check is a driver-side file read, exactly like the
@@ -894,6 +905,7 @@ def _staged_ivf_index(
     import json
     import os
     import shutil
+    import tempfile
 
     import conversadocs_spark.operators.ivf as ivf_mod
     from conversadocs_spark.operators.ivf import (
@@ -957,8 +969,10 @@ def _staged_ivf_index(
                 shutil.rmtree(
                     os.path.join(stage_root, d), ignore_errors=True
                 )
-    tmp = f"{path}.build.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(stage_root, exist_ok=True)
+    tmp = tempfile.mkdtemp(
+        dir=stage_root, prefix=f".{os.path.basename(path)}.build."
+    )
     assigned, centroids = ivf_build(corpus, n_lists=n_lists)
     ivf_write_index(assigned, centroids, tmp, dim=dim, n_lists=n_lists)
     with open(os.path.join(tmp, "_stage_stamp.json"), "w") as f:
@@ -1179,20 +1193,14 @@ def knn_label_eval(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    from conversadocs_spark.operators.knn import knn_per_query
-
     corpus = emb.select("vec_id", "embedding")
     top = knn_per_query(corpus, queries, k=6)  # k=5 + possible self
     top = top.where(F.col("vec_id") != F.col("query_id"))
     from pyspark.sql import Window
 
-    rew = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    top5 = (
-        top.withColumn("rn", F.row_number().over(rew))
-        .where(F.col("rn") <= 5)
-        .join(emb.select("vec_id", "label"), "vec_id")
+    order = [F.desc("sim"), F.asc("vec_id")]
+    top5 = topk(top, 5, order, by="query_id", rank="rn").join(
+        emb.select("vec_id", "label"), "vec_id"
     )
     votes = top5.groupBy("query_id", "label").agg(
         F.count("*").alias("c")
@@ -1733,28 +1741,35 @@ def knn_filtered_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     language-scoped variant of the reference's retriever (bones.py:74
     retrieves unfiltered; any scoped deployment needs this).
 
-    PRE-filter strategy (operators/knn.py:knn_filtered): the predicate
-    runs on the documents scan (PushedFilters on lang/source), the
-    surviving doc-id set semi-joins into the embeddings scan as a
-    LEFT SEMI join — unhinted, so Catalyst broadcasts it from size
-    statistics when small (the plan test pins BroadcastHashJoin here)
-    and degrades to a shuffled semi-join when the tenant set is
-    itself huge (its own test pins that fallback). Then the same
-    scan -> codegen cosine -> TakeOrderedAndProject(5) pipeline as
-    knn_topk runs over the filtered corpus. Exact over the filter at
-    any selectivity — a post-filtered ANN would under-fill k whenever
-    the predicate is selective. The corpus never shuffles; the k-row
-    result (not the unbounded documents side) is the broadcast side
-    of the provenance annotation join.
-    """
-    from conversadocs_spark.operators.knn import knn_filtered
+    PRE-filter strategy: the predicate runs on the documents scan
+    (PushedFilters on lang/source), the surviving doc-id set
+    semi-joins into the embeddings scan as a LEFT SEMI join BEFORE any
+    similarity is computed. Then the same scan -> cosine ->
+    TakeOrderedAndProject(5) pipeline as knn_topk runs over the
+    filtered corpus (operators/knn.py: row_cosine + topk; the query
+    row is looked up from the UNfiltered table, so a query outside its
+    own filter still works). Exact over the filter at any selectivity
+    — top-k is never under-filled, whereas a post-filtered ANN (ANN,
+    then discard) silently returns < k rows whenever the predicate is
+    selective, so that shape is deliberately not shipped.
 
+    The semi-join carries NO broadcast hint: Catalyst broadcasts the
+    allowed-id side from size statistics when small (the plan test
+    pins BroadcastHashJoin here; the common case is a pushed filter
+    over a dimension scan) and degrades to a shuffled semi-join when
+    the tenant set is itself huge (its own test pins that fallback).
+    An unconditional hint would force a >8 GB broadcast / driver OOM
+    on a large tenant set instead. The corpus never shuffles; the
+    k-row result (not the unbounded documents side) is the broadcast
+    side of the provenance annotation join.
+    """
     emb = io.table(spark, sf_dir, "embeddings")
     docs = io.table(spark, sf_dir, "documents")
     allowed = docs.where(
         (F.col("lang") == "en") & (F.col("source") != "src0")
     ).select(F.col("doc_id").alias("vec_id"))
-    top = knn_filtered(emb, allowed, query_id=0, k=5)
+    kept = emb.join(allowed, "vec_id", "left_semi")
+    top = topk(row_cosine(kept, emb, 0), 5, [F.desc("sim"), F.asc("vec_id")])
     prov = docs.select(
         F.col("doc_id").alias("vec_id"), "lang", "source"
     )
@@ -2014,8 +2029,9 @@ def knn_int8_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one scan computing codes JVM-side (no shuffle,
     no Python), broadcast 1-row dequantized query,
-    TakeOrderedAndProject(5) — identical scaling to knn_topk with a
-    quarter of the bytes read in a real quantized-storage deployment.
+    TakeOrderedAndProject(5) via operators/knn.py:topk — identical
+    scaling to knn_topk with a quarter of the bytes read in a real
+    quantized-storage deployment.
     """
     from conversadocs_spark.operators.quant import (
         dequantized,
@@ -2023,23 +2039,17 @@ def knn_int8_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = io.table(spark, sf_dir, "embeddings")
-    quant = quantize_int8(emb).select(
-        "vec_id", "qmin", "qscale", "q"
-    )
-    deq = quant.select(
-        "vec_id", dequantized().alias("xh")
-    )
+    deq = quantize_int8(emb).select("vec_id", dequantized().alias("xh"))
     qv = deq.where(F.col("vec_id") == 0).select(
         F.col("xh").alias("_qvec")
     )
     sim = cosine_similarity(F.col("xh"), F.col("_qvec"))
-    return (
+    scored = (
         deq.crossJoin(F.broadcast(qv))
         .where(F.col("vec_id") != 0)
         .select("vec_id", F.round(sim, 6).alias("sim_q"))
-        .orderBy(F.desc("sim_q"), F.asc("vec_id"))
-        .limit(5)
     )
+    return topk(scored, 5, [F.desc("sim_q"), F.asc("vec_id")])
 
 
 # --------------------------------------------------------------------------
@@ -2107,14 +2117,15 @@ def knn_binary_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole query is ORACLE-BACKED (the trained families are rows-only
     with recall audits by design).
 
-    Scale: the Hamming pass scans ONLY the packed-code column — at
-    384-dim float32 that is 48 bytes/vector instead of 1536, and the
-    scan is XOR+POPCNT with no float math; shortlist is
-    TakeOrderedAndProject(50) (integer key, vec_id tie-break — no
-    rounding ambiguity); the float rescore touches 50 rows. In a real
-    deployment the rescore is an id-join back into the float table;
-    the fixture carries both columns through one scan. The corpus
-    never shuffles.
+    Scale (the operators/knn.py:two_stage_topk shape): the Hamming
+    pass scans ONLY the packed-code column — at 384-dim float32 that
+    is 48 bytes/vector instead of 1536, and the scan is XOR+POPCNT
+    with no float math; shortlist is TakeOrderedAndProject(50)
+    (integer key, vec_id tie-break — no rounding ambiguity); the float
+    rescore touches 50 rows. In a real deployment the rescore is an
+    id-join back into the float table; the fixture carries both
+    columns through one scan, so the shortlist is rescored in place.
+    The corpus never shuffles.
     """
     from conversadocs_spark.operators.quant import (
         binarize_sign,
@@ -2138,17 +2149,8 @@ def knn_binary_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("matches"),
         )
     )
-    shortlist = cand.orderBy(
-        F.desc("matches"), F.asc("vec_id")
-    ).limit(50)
-    rescored = shortlist.select(
-        "vec_id",
-        "matches",
-        F.round(
-            cosine_similarity(F.col("embedding"), F.col("_qv")), 6
-        ).alias("sim"),
-    )
-    return rescored.orderBy(F.desc("sim"), F.asc("vec_id")).limit(5)
+    sim = F.round(cosine_similarity(F.col("embedding"), F.col("_qv")), 6)
+    return two_stage_topk(cand, 50, 5, "matches", sim)
 
 
 _KNN_BINARY_BATCH_ORACLE = """
@@ -2219,7 +2221,8 @@ def knn_binary_batch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     query batch, the rest as the corpus; per query: Hamming top-50
     shortlist on the packed sign bits, exact float rescore, top-3.
 
-    Scale shape, in order:
+    Scale shape, in order (stages 2-4 are
+    operators/knn.py:two_stage_topk with ``by="query_id"``):
     1. ONE corpus scan computes the packed codes and XOR+POPCNT
        Hamming matches against all Q broadcast query codes (corpus ×
        Q candidate rows, but only the 3-integer projection
@@ -2241,8 +2244,6 @@ def knn_binary_batch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q-sized chunks over the SAME corpus scan cadence rather than
     growing the broadcast.
     """
-    from pyspark.sql import Window
-
     from conversadocs_spark.operators.quant import (
         binarize_sign,
         hamming_matches,
@@ -2265,38 +2266,14 @@ def knn_binary_batch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("matches"),
         )
     )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc("matches"), F.asc("vec_id")
-    )
-    shortlist = (
-        cand.withColumn("rn", F.row_number().over(w_short))
-        .where(F.col("rn") <= 50)
-        .select("query_id", "vec_id", "matches")
-    )
     qv = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("_qv"),
     )
-    rescored = (
-        F.broadcast(shortlist)
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "matches",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("_qv")), 6
-            ).alias("sim"),
-        )
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(w_final))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "vec_id", "matches", "sim")
+    sim = F.round(cosine_similarity(F.col("embedding"), F.col("_qv")), 6)
+    return two_stage_topk(
+        cand, 50, 3, "matches", sim, by="query_id",
+        vectors=emb.select("vec_id", "embedding"), queries=qv,
     )
 
 
@@ -2359,12 +2336,13 @@ def knn_matryoshka_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id tie-break), rescore those 50 with full-dimension cosine,
     return the top 5 with both scores.
 
-    Scale: the coarse pass reads a quarter of the vector bytes — in a
-    real deployment the prefix lives in its own (sub)column so the
-    scan is dim-proportional, the same lever as knn_binary's packed
-    column; the refine is a 50-row broadcast id-join back into the
-    full-width table (broadcast side = the k-row shortlist, never the
-    corpus). The corpus never shuffles; both stages end in
+    Scale (the operators/knn.py:two_stage_topk shape): the coarse
+    pass reads a quarter of the vector bytes — in a real deployment
+    the prefix lives in its own (sub)column so the scan is
+    dim-proportional, the same lever as knn_binary's packed column;
+    the refine is a 50-row broadcast id-join back into the full-width
+    table (broadcast side = the k-row shortlist, never the corpus).
+    The corpus never shuffles; both stages end in
     TakeOrderedAndProject.
     """
     emb = io.table(spark, sf_dir, "embeddings")
@@ -2386,22 +2364,10 @@ def knn_matryoshka_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_qv",
         )
     )
-    shortlist = coarse.orderBy(
-        F.desc("sim_coarse"), F.asc("vec_id")
-    ).limit(50)
-    refined = F.broadcast(shortlist).join(
-        emb.select("vec_id", "embedding"), "vec_id"
-    )
-    return (
-        refined.select(
-            "vec_id",
-            "sim_coarse",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("_qv")), 6
-            ).alias("sim"),
-        )
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(5)
+    sim = F.round(cosine_similarity(F.col("embedding"), F.col("_qv")), 6)
+    return two_stage_topk(
+        coarse, 50, 5, "sim_coarse", sim,
+        vectors=emb.select("vec_id", "embedding"),
     )
 
 
@@ -2435,6 +2401,41 @@ ORDER BY maxsim DESC, doc_id ASC LIMIT 5
 """
 
 
+def _maxsim_scores(
+    corpus: DataFrame, qv: DataFrame, keys: list[str], tok: str
+) -> DataFrame:
+    """(*keys, maxsim): ColBERT MaxSim of ``corpus`` token rows (with
+    doc_id) against the broadcast query token rows ``qv`` (``tok``,
+    ``_qv``, ``_qn`` and any query key in ``keys``) — the scorer both
+    multivec_maxsim forms hand to operators/knn.py:topk.
+
+    The corpus token's norm is hoisted ABOVE the |Q|-way fan-out:
+    inlined cosine would recompute sqrt(sum(x^2)) once per (token,
+    query token) pair — |Q| identical 64-element aggregates per token
+    (Catalyst has no CSE across projected expressions). dot/( _n * _qn
+    ) is the same expression tree cosine_similarity builds, evaluated
+    on the identical doubles, so oracle hashes are unchanged; measured
+    at the sf100 spot-gate scale (2M corpus tokens x 30 query tokens,
+    the batch form): 47.0 s before, 19.9 s after."""
+    from conversadocs_spark.functions.vector import dot_product, l2_norm
+
+    pairs = (
+        corpus.withColumn("_n", l2_norm(F.col("embedding")))
+        .crossJoin(F.broadcast(qv))
+        .select(
+            *keys,
+            tok,
+            F.round(
+                dot_product(F.col("embedding"), F.col("_qv"))
+                / (F.col("_n") * F.col("_qn")),
+                6,
+            ).alias("s"),
+        )
+    )
+    per_q = pairs.groupBy(*keys, tok).agg(F.max("s").alias("m"))
+    return per_q.groupBy(*keys).agg(F.round(F.sum("m"), 6).alias("maxsim"))
+
+
 @register(
     "multivec_maxsim", oracle=_MULTIVEC_MAXSIM_ORACLE, tags=("vector",)
 )
@@ -2450,14 +2451,16 @@ def multivec_maxsim_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation order) and the 10-term sum is rounded again.
 
     Scale: the query bag (tens of vectors) broadcasts; one pass over
-    the corpus token vectors computes |Q| cosines per token inside
-    codegen; then two MAP-SIDE-COMBINABLE aggregations — max per
-    (doc, query-token), sum per doc — shuffle only doc-count-sized
-    relations on the doc key. The token table never shuffles; this is
+    the corpus token vectors computes |Q| cosines per token JVM-side
+    (interpreted zip_with/aggregate); then two MAP-SIDE-COMBINABLE
+    aggregations — max per (doc, query-token), sum per doc — shuffle
+    only doc-count-sized relations on the doc key (_maxsim_scores),
+    and operators/knn.py:topk keeps the top 5 with a
+    TakeOrderedAndProject. The token table never shuffles; this is
     the standard late-interaction serving shape (candidate generation
     via ann_* families composes in front at 100 TB).
     """
-    from conversadocs_spark.functions.vector import dot_product, l2_norm
+    from conversadocs_spark.functions.vector import l2_norm
 
     emb = io.table(spark, sf_dir, "embeddings").withColumn(
         "doc_id", F.expr("CAST(vec_id DIV 10 AS BIGINT)")
@@ -2467,34 +2470,10 @@ def multivec_maxsim_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("_qv"),
         l2_norm(F.col("embedding")).alias("_qn"),
     )
-    # hoist the corpus token's norm ABOVE the |Q|-way fan-out: inlined
-    # cosine would recompute sqrt(sum(x^2)) once per (token, q_id)
-    # pair — |Q| identical 64-element aggregates per token (Catalyst
-    # has no CSE across projected expressions). dot/( _n * _qn ) is
-    # the same expression tree cosine_similarity builds, evaluated on
-    # the identical doubles, so oracle hashes are unchanged.
-    pairs = (
-        emb.where(F.col("doc_id") != 0)
-        .withColumn("_n", l2_norm(F.col("embedding")))
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "doc_id",
-            "vec_id",
-            "q_id",
-            F.round(
-                dot_product(F.col("embedding"), F.col("_qv"))
-                / (F.col("_n") * F.col("_qn")),
-                6,
-            ).alias("s"),
-        )
+    scores = _maxsim_scores(
+        emb.where(F.col("doc_id") != 0), qv, ["doc_id"], "q_id"
     )
-    per_q = pairs.groupBy("doc_id", "q_id").agg(F.max("s").alias("m"))
-    return (
-        per_q.groupBy("doc_id")
-        .agg(F.round(F.sum("m"), 6).alias("maxsim"))
-        .orderBy(F.desc("maxsim"), F.asc("doc_id"))
-        .limit(5)
-    )
+    return topk(scores, 5, [F.desc("maxsim"), F.asc("doc_id")])
 
 
 _KNN_INT8_BATCH_ORACLE = """
@@ -2550,16 +2529,15 @@ def knn_int8_batch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     error is the quantization's, not a shortlist's), which keeps the
     batch form to exactly two stages.
 
-    Scale shape: one corpus scan computes the dequantized codes in
-    codegen and scores all Q broadcast queries; only the 3-column
-    integer/double projection (query_id, vec_id, sim_q) reaches the
-    per-query top-5 window — the corpus floats never shuffle, same
+    Scale shape: one corpus scan computes the dequantized codes
+    JVM-side (interpreted transform) and scores all Q broadcast
+    queries; only the 3-column integer/double projection (query_id,
+    vec_id, sim_q) reaches the per-query top-5 window
+    (operators/knn.py:topk) — the corpus floats never shuffle, same
     contract as knn_binary_batch's stage 2 (plan-pinned). Q bound:
     Q x dim dequantized doubles in the broadcast — thousands of
     queries per pass at 384 dims; bigger batches chunk over the same
     scan cadence."""
-    from pyspark.sql import Window
-
     from conversadocs_spark.operators.quant import (
         dequantized,
         quantize_int8,
@@ -2583,14 +2561,7 @@ def knn_int8_batch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim_q"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_q"), F.asc("vec_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "vec_id", "sim_q", "rank")
-    )
+    return topk(sims, 5, [F.desc("sim_q"), F.asc("vec_id")], by="query_id")
 
 
 _KNN_FILTERED_INT8_BATCH_ORACLE = """
@@ -2721,7 +2692,12 @@ def knn_filtered_int8_batch_query(
     corpus exchange) and the Q-row fp32 query batch into that, so
     exact cosine runs over the query-bounded candidate rows only.
     The Q x 5 result — never the unbounded documents side — is the
-    broadcast side of the provenance join."""
+    broadcast side of the provenance join.
+
+    The tie-aware band shortlist is this query's own, so it is written
+    here; the refine and the final per-query top-5 are the core's
+    (operators/knn.py: rescore + topk, the two_stage_topk stages
+    after the shortlist)."""
     from pyspark.sql import Window
 
     from conversadocs_spark.operators.quant import (
@@ -2789,27 +2765,12 @@ def knn_filtered_int8_batch_query(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("_q"),
     )
-    refined = (
-        F.broadcast(shortlist)
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qraw), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "sim_q",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("_q")), 6
-            ).alias("sim"),
-        )
+    sim = F.round(cosine_similarity(F.col("embedding"), F.col("_q")), 6)
+    refined = rescore(
+        shortlist, "sim_q", sim, by="query_id",
+        vectors=emb.select("vec_id", "embedding"), queries=qraw,
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    top = (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "vec_id", "sim_q", "sim", "rank")
-    )
+    top = topk(refined, 5, [F.desc("sim"), F.asc("vec_id")], by="query_id")
     prov = docs.select(
         F.col("doc_id").alias("vec_id"), "lang", "source"
     )
@@ -2879,8 +2840,9 @@ def knn_matryoshka_batch_query(
     above): per query, coarse top-50 on the 16-dim prefix, exact
     full-dimension rescore, top-3 with both scores.
 
-    Scale shape mirrors knn_binary_batch stage for stage: one corpus
-    scan computes the prefix cosine against all Q broadcast prefix
+    Scale shape mirrors knn_binary_batch stage for stage (both are
+    operators/knn.py:two_stage_topk per query): one corpus scan
+    computes the prefix cosine against all Q broadcast prefix
     queries and emits only the skinny (query_id, vec_id, sim_coarse)
     projection; the per-query top-50 window is map-side pruned; the
     Q x 50 shortlist is broadcast back into the full-width table for
@@ -2889,8 +2851,6 @@ def knn_matryoshka_batch_query(
     quarter of the vector bytes, and in a real deployment the prefix
     lives in its own subcolumn so the batch scan cost is
     dim-proportional."""
-    from pyspark.sql import Window
-
     emb = io.table(spark, sf_dir, "embeddings")
     qc = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -2910,38 +2870,14 @@ def knn_matryoshka_batch_query(
             ).alias("sim_coarse"),
         )
     )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_coarse"), F.asc("vec_id")
-    )
-    shortlist = (
-        coarse.withColumn("rn", F.row_number().over(w_short))
-        .where(F.col("rn") <= 50)
-        .select("query_id", "vec_id", "sim_coarse")
-    )
     qv = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("_qv"),
     )
-    rescored = (
-        F.broadcast(shortlist)
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            "sim_coarse",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("_qv")), 6
-            ).alias("sim"),
-        )
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(w_final))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "vec_id", "sim_coarse", "sim")
+    sim = F.round(cosine_similarity(F.col("embedding"), F.col("_qv")), 6)
+    return two_stage_topk(
+        coarse, 50, 3, "sim_coarse", sim, by="query_id",
+        vectors=emb.select("vec_id", "embedding"), queries=qv,
     )
 
 
@@ -3000,10 +2936,9 @@ def multivec_maxsim_batch_query(
     only shuffled relations are doc-count-sized per query, never the
     token table. Per-token cosines round to 6 BEFORE the max (both
     engines pick the same argmax) and the sum rounds again before
-    the per-query rank."""
-    from pyspark.sql import Window
-
-    from conversadocs_spark.functions.vector import dot_product, l2_norm
+    the per-query rank (operators/knn.py:topk). The scorer is
+    _maxsim_scores, shared with the single-query form."""
+    from conversadocs_spark.functions.vector import l2_norm
 
     emb = io.table(spark, sf_dir, "embeddings").withColumn(
         "doc_id", F.expr("CAST(vec_id DIV 10 AS BIGINT)")
@@ -3014,40 +2949,8 @@ def multivec_maxsim_batch_query(
         F.col("embedding").alias("_qv"),
         l2_norm(F.col("embedding")).alias("_qn"),
     )
-    # corpus-token norm hoisted above the Q*10-way fan-out (see
-    # multivec_maxsim): inlined cosine recomputes the token's norm
-    # once per broadcast query token — 30 identical 64-element
-    # aggregates per corpus row at the fixture batch. Values are
-    # bit-identical (same expression tree, hoisted), oracle unchanged;
-    # measured at the sf100 spot-gate scale (2M corpus tokens x 30
-    # query tokens): 47.0 s before, 19.9 s after — the heaviest
-    # serving query cut 2.4x.
-    pairs = (
-        emb.where(F.col("doc_id") >= 3)
-        .withColumn("_n", l2_norm(F.col("embedding")))
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "query_id",
-            "doc_id",
-            "q_tok",
-            F.round(
-                dot_product(F.col("embedding"), F.col("_qv"))
-                / (F.col("_n") * F.col("_qn")),
-                6,
-            ).alias("s"),
-        )
+    scores = _maxsim_scores(
+        emb.where(F.col("doc_id") >= 3), qv, ["query_id", "doc_id"], "q_tok"
     )
-    per_q = pairs.groupBy("query_id", "doc_id", "q_tok").agg(
-        F.max("s").alias("m")
-    )
-    scores = per_q.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum("m"), 6).alias("maxsim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("maxsim"), F.asc("doc_id")
-    )
-    return (
-        scores.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "doc_id", "maxsim")
-    )
+    order = [F.desc("maxsim"), F.asc("doc_id")]
+    return topk(scores, 3, order, by="query_id", rank="rk").drop("rk")

@@ -62,29 +62,14 @@ def get_spark(
     - maxPartitionBytes: scan-split size. Spark's 128m default makes a
       sf0.1 fixture file a 3-way split, so 3 of local[32] cores do the
       partial aggregate; 8m splits it ~16 ways (measured 2x on the Q1
-      shape). The 8m override is applied ONLY when running local[N]
-      (master is None): a cluster deployment through
-      get_spark(master=...) keeps Spark's 128m default — 8m at 100 TB
-      would explode into ~12M tasks. SPARK_GRAFT_MAX_PARTITION_BYTES
-      overrides in either mode.
+      shape). The 8m value is set ONLY when running local[N] (master
+      is None): a cluster deployment through get_spark(master=...)
+      keeps Spark's 128m default — 8m at 100 TB would explode into
+      ~12M tasks.
+    - Shuffle writer: bypassMergeThreshold 1 under local[N] only, for
+      the same reason (see the comment at the setting).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    # Local-test split tuning must not leak to cluster deployments: the
-    # env var wins if set, local mode gets 8m, a real master keeps
-    # Spark's own default.
-    max_part = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES") or (
-        "8m" if master is None else None
-    )
-    # Shuffle writer (r16, measured): with <=200 reduce partitions Spark
-    # picks BypassMergeSortShuffleWriter, one FILE PER REDUCE PARTITION
-    # per map task, then an mmap'd concatenation: on a many-core local
-    # VM a CPU storm (set_ops 2.03 s / 28.6 CPU-s -> 0.82 / 7.7 with the
-    # sort writer's one spill file + index). Local mode forces the sort
-    # writer; a cluster keeps Spark's default (its wide shuffles exceed
-    # the threshold). SPARK_GRAFT_BYPASS_MERGE_THRESHOLD overrides.
-    bypass_thr = os.environ.get(
-        "SPARK_GRAFT_BYPASS_MERGE_THRESHOLD"
-    ) or ("1" if master is None else None)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus or '*'}]")
@@ -100,14 +85,19 @@ def get_spark(
             "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
         )
     )
-    if max_part is not None:
+    if master is None:
+        # Local-test tuning must not leak to cluster deployments: a real
+        # master keeps Spark's own defaults for both.
+        # Shuffle writer (r16, measured): with <=200 reduce partitions
+        # Spark picks BypassMergeSortShuffleWriter, one FILE PER REDUCE
+        # PARTITION per map task, then an mmap'd concatenation: on a
+        # many-core local VM a CPU storm (set_ops 2.03 s / 28.6 CPU-s ->
+        # 0.82 / 7.7 with the sort writer's one spill file + index).
+        # Local mode forces the sort writer; a cluster keeps Spark's
+        # default (its wide shuffles exceed the threshold).
         builder = builder.config(
-            "spark.sql.files.maxPartitionBytes", max_part
-        )
-    if bypass_thr is not None:
-        builder = builder.config(
-            "spark.shuffle.sort.bypassMergeThreshold", bypass_thr
-        )
+            "spark.sql.files.maxPartitionBytes", "8m"
+        ).config("spark.shuffle.sort.bypassMergeThreshold", "1")
     builder = (
         builder
         .config("spark.sql.session.timeZone", "UTC")

@@ -68,12 +68,21 @@ Bounds, per file (reviewed r9):
   construction) and the Q-row raw fp32 query batch — both
   query-bounded, and hinting them is what keeps the second
   embeddings scan a BHJ prune instead of a corpus exchange.
+  Top-k core fold: 25 -> 17. The rescore stage's shortlist and Q-row
+  full-width query-table hints of knn_binary_batch,
+  knn_matryoshka(_batch) and knn_filtered_int8_batch moved into
+  operators/knn.py:rescore (7 sites -> 2 there), and the two
+  multivec_maxsim forms share one query-bag hint (_maxsim_scores).
 - streaming/cdc.py 1: per-micro-batch CDC delta.
 - functions/zorder.py 1: 1-row min/max bounds aggregate.
 - operators/incremental.py 1: O(batch) new-doc signatures.
 - operators/ivf.py 3: k-row centroid table (k ≪ corpus).
-- operators/knn.py 3: 1-row query vector / k-row probe shortlist
-  (the filtered-kNN semi-join side is deliberately UNhinted).
+- operators/knn.py 4: row_cosine's 1-row query vector,
+  knn_per_query's Q-row query batch, and rescore's two sides — the
+  shortlist (at most n rows per query: 50, or the <= 4096-row
+  tie-aware band) and the Q-row rescore query table, all bounded by
+  the query batch. The filtered-kNN semi-join side is deliberately
+  UNhinted (plans/vector.py knn_filtered, knn_filtered_int8_batch).
 - operators/lsh.py 6: hyperplane matrix + 1-row query signature;
   r15 lsh_exact_md5 mirrors the production trio (integer planes
   frame on both bucketing sides + the Q-row bucketed query batch —
@@ -90,7 +99,7 @@ BROADCAST_ALLOWED: dict[str, int] = {
     "functions/zorder.py": 1,
     "operators/incremental.py": 1,
     "operators/ivf.py": 3,
-    "operators/knn.py": 3,
+    "operators/knn.py": 4,
     "operators/lsh.py": 6,
     "operators/pagerank.py": 2,
     "operators/pq.py": 11,
@@ -105,6 +114,6 @@ BROADCAST_ALLOWED: dict[str, int] = {
     "plans/retrieval.py": 4,
     "plans/streamqueries.py": 2,
     "plans/text.py": 2,
-    "plans/vector.py": 25,
+    "plans/vector.py": 17,
     "streaming/cdc.py": 1,
 }

@@ -11,17 +11,37 @@ $PLAN_TAG (default "before"). Data dir from $SPARK_GRAFT_SF_DIR
 
 The captured plan is the ANALYZED/optimized physical plan before
 execution (AdaptiveSparkPlan isFinalPlan=false where AQE applies);
-that is the artifact the judge diff-checks plan claims against
-(guide §1.1 / §7.2).
+that is the artifact plan claims are diff-checked against.
+
+Expression ids (``#123``, ``#123L``), ``plan_id=123``, lambda
+variable names (``lambda x_539``) and RDD ids
+(``MapPartitionsRDD[360]``) are numbered by JVM-wide counters, so
+they are written as ``#N`` / ``#NL``, ``plan_id=N``, ``lambda x_N``
+and ``RDD[N]``: two runs of the same code give byte-identical files,
+and a plain ``diff`` of two captures shows only real plan changes.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+_EXPR_ID = re.compile(r"#\d+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+_LAMBDA_VAR = re.compile(r"(lambda [A-Za-z]+)_\d+")
+_RDD_ID = re.compile(r"RDD\[\d+\]")
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with counter-numbered ids replaced by placeholders."""
+    plan = _EXPR_ID.sub("#N", plan)
+    plan = _PLAN_ID.sub("plan_id=N", plan)
+    plan = _LAMBDA_VAR.sub(r"\1_N", plan)
+    return _RDD_ID.sub("RDD[N]", plan)
 
 
 def main() -> int:
@@ -52,7 +72,7 @@ def main() -> int:
         buf = _io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        plan = buf.getvalue()
+        plan = normalize(buf.getvalue())
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -58,10 +58,8 @@ ENV_KNOB_RE = re.compile(r"SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]")
 #: every env knob the engine reads; each one is a code path that a
 #: measurement or a test needs
 ENGINE_ENV_KNOBS = frozenset({
-    "SPARK_GRAFT_BYPASS_MERGE_THRESHOLD",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_MAX_PARTITION_BYTES",
     "SPARK_GRAFT_MAX_RESULT_SIZE",
     "SPARK_GRAFT_REAL_EMBED",
 })

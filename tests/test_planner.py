@@ -454,3 +454,65 @@ def test_stage_sweep_spares_current_layout_stages(spark):
     )
     for p in legacy:
         assert not os.path.isdir(p), f"superseded layout kept: {p}"
+
+
+def test_concurrent_stagers_build_in_their_own_dirs(spark, monkeypatch):
+    """Two threads of one session staging the same fresh index both
+    get a stamp-valid stage that reads. Each build writes into a temp
+    dir of its own: a pid-suffixed build dir is shared by every thread
+    of the process, so one stager's cleanup and publish tore down the
+    other's half-written build. The barrier holds both builds inside
+    ivf_write_index at once."""
+    import json
+    import os
+    import shutil
+    import threading
+    import uuid
+
+    import conversadocs_spark.operators.ivf as ivf_mod
+    from conversadocs_spark.plans.vector import _staged_ivf_index
+
+    emb = io.table(spark, SF_ORACLE, "embeddings")
+    corpus = emb.where(F.col("vec_id") >= 5)
+    name = f"ivf_race_{uuid.uuid4().hex[:8]}"
+    barrier = threading.Barrier(2, timeout=300)
+    write_index = ivf_mod.ivf_write_index
+
+    def gated_write(*args, **kwargs):
+        barrier.wait()
+        return write_index(*args, **kwargs)
+
+    paths, errors = [], []
+
+    def stage():
+        try:
+            paths.append(_staged_ivf_index(SF_ORACLE, corpus, name))
+        except Exception as e:  # reported by the assertion below
+            errors.append(repr(e))
+            barrier.abort()
+
+    monkeypatch.setattr(ivf_mod, "ivf_write_index", gated_write)
+    threads = [threading.Thread(target=stage) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    monkeypatch.undo()
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert errors == [] and len(paths) == 2 and paths[0] == paths[1]
+        path = paths[0]
+        with open(os.path.join(path, "_stage_stamp.json")) as f:
+            assert json.load(f)["sf_dir"] == os.path.abspath(SF_ORACLE)
+        # a reuse hit: the published stamp is valid for this source
+        assert _staged_ivf_index(SF_ORACLE, corpus, name) == path
+        assigned, _centroids, manifest = ivf_mod.ivf_read_index(spark, path)
+        assert assigned.count() == corpus.count() == manifest["n"]
+    finally:
+        stage_root = os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            ".stream_stage",
+        )
+        for d in os.listdir(stage_root):
+            if name in d:  # the stage and any leftover build dir
+                shutil.rmtree(os.path.join(stage_root, d))

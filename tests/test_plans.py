@@ -73,6 +73,20 @@ def test_topk_queries_use_take_ordered(spark):
     vocab = _plan(spark, "vocab_topk")
     assert "TakeOrderedAndProject(limit=100" in vocab
     assert "partial_count" in vocab  # map-side combine before shuffle
+    # every single-query vector form keeps its k (and its shortlist's
+    # 50) through operators/knn.py:topk's TakeOrderedAndProject shape,
+    # never through the batch forms' per-query window
+    for name, limits in (
+        ("knn_filtered", (5,)),
+        ("knn_int8", (5,)),
+        ("knn_binary", (50, 5)),
+        ("knn_matryoshka", (50, 5)),
+        ("multivec_maxsim", (5,)),
+    ):
+        plan = _plan(spark, name)
+        for k in limits:
+            assert f"TakeOrderedAndProject(limit={k}," in plan, name
+        assert "Window" not in plan, name
 
 
 def test_gopher_repetition_is_two_stacked_aggregates(spark):

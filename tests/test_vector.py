@@ -414,19 +414,21 @@ def test_knn_filtered_selective_predicate_stays_exact(spark, sf_oracle_dir):
     returns exactly those 3 ranked by sim (never under-filled relative
     to the filtered corpus, never leaking out-of-filter ids)."""
     from conversadocs_spark import io
-    from conversadocs_spark.operators.knn import knn_filtered, knn_self
+    from conversadocs_spark.operators.knn import row_cosine, topk
 
     emb = io.table(spark, sf_oracle_dir, "embeddings")
     keep = [7, 11, 13]
     allowed = spark.createDataFrame(
         [(i,) for i in keep], "vec_id long"
     )
-    got = knn_filtered(emb, allowed, query_id=0, k=5).collect()
+    order = [F.desc("sim"), F.asc("vec_id")]
+    kept = emb.join(allowed, "vec_id", "left_semi")
+    got = topk(row_cosine(kept, emb, 0), 5, order).collect()
     assert [set([r.vec_id for r in got]), len(got)] == [set(keep), 3]
     # sims agree with the unfiltered exact scorer restricted to keep
     full = {
         r.vec_id: r.sim
-        for r in knn_self(emb, query_id=0, k=10**6).collect()
+        for r in topk(row_cosine(emb, emb, 0), 10**6, order).collect()
     }
     for r in got:
         assert r.sim == full[r.vec_id]
@@ -446,6 +448,43 @@ def test_knn_filtered_plan_is_semi_join_no_shuffle(spark, sf_oracle_dir):
     assert "LeftSemi" in plan and "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_topk_take_ordered_and_window_keep_the_same_rows(spark):
+    """The core's two top-k shapes agree: over one query, the
+    ``orderBy().limit()`` form (by=None) and the per-query
+    ``row_number`` window (by="query_id") keep the same rows in the
+    same order — ties on the score go to the lower id, and a group
+    with fewer than k rows keeps all of them."""
+    from conversadocs_spark.operators.knn import topk
+
+    scored = spark.createDataFrame(
+        [(0, 7, 0.5), (0, 3, 0.9), (0, 5, 0.5), (0, 1, 0.5), (0, 9, 0.1)],
+        "query_id long, vec_id long, sim double",
+    )
+    order = [F.desc("sim"), F.asc("vec_id")]
+    for k, want in ((3, [3, 1, 5]), (10, [3, 1, 5, 7, 9])):
+        flat = [tuple(r) for r in topk(scored, k, order).collect()]
+        ranked = topk(scored, k, order, by="query_id").collect()
+        windowed = [
+            (r.query_id, r.vec_id, r.sim)
+            for r in sorted(ranked, key=lambda r: r.rank)
+        ]
+        assert flat == windowed
+        assert [r[1] for r in flat] == want
+        assert sorted(r.rank for r in ranked) == list(range(1, len(want) + 1))
+    # a second, smaller group keeps every row; the first keeps its k
+    two = scored.union(
+        spark.createDataFrame(
+            [(1, 4, 0.2), (1, 2, 0.2)],
+            "query_id long, vec_id long, sim double",
+        )
+    )
+    got = {
+        (r.query_id, r.vec_id, r.rank)
+        for r in topk(two, 3, order, by="query_id").collect()
+    }
+    assert got == {(0, 3, 1), (0, 1, 2), (0, 5, 3), (1, 2, 1), (1, 4, 2)}
 
 
 def _mmr_reference(ids, rels, vecs, k, lam):
@@ -621,11 +660,14 @@ def test_knn_int8_recall_vs_exact(spark, sf_oracle_dir):
     """SQ8's ~0.4% component error must not wreck retrieval: the
     quantized top-5 recovers >= 4 of the exact float top-5."""
     from conversadocs_spark import io
-    from conversadocs_spark.operators.knn import knn_self
+    from conversadocs_spark.operators.knn import row_cosine, topk
     from conversadocs_spark.plans import QUERIES
 
     emb = io.table(spark, sf_oracle_dir, "embeddings")
-    exact = {r.vec_id for r in knn_self(emb, query_id=0, k=5).collect()}
+    order = [F.desc("sim"), F.asc("vec_id")]
+    exact = {
+        r.vec_id for r in topk(row_cosine(emb, emb, 0), 5, order).collect()
+    }
     quant = {
         r.vec_id
         for r in QUERIES["knn_int8"](spark, sf_oracle_dir).collect()
@@ -675,17 +717,24 @@ def test_knn_filtered_no_hint_degrades_to_shuffled_semi_join(
     plan degrades to a shuffled semi-join instead of forcing a
     driver-OOM broadcast. The companion plan test proves the same
     join DOES auto-broadcast from statistics when the side is small.
+    The registered query's own semi-join is checked too: its only
+    hinted broadcast is the k-row provenance side.
     """
     from conversadocs_spark import io
-    from conversadocs_spark.operators.knn import knn_filtered
+    from conversadocs_spark.operators.knn import row_cosine, topk
+    from conversadocs_spark.plans import QUERIES
 
     emb = io.table(spark, sf_oracle_dir, "embeddings")
     allowed = emb.select("vec_id")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = knn_filtered(emb, allowed, query_id=0, k=5)
+        kept = emb.join(allowed, "vec_id", "left_semi")
+        order = [F.desc("sim"), F.asc("vec_id")]
+        df = topk(row_cosine(kept, emb, 0), 5, order)
         plan = df._jdf.queryExecution().executedPlan().toString()
+        query = QUERIES["knn_filtered"](spark, sf_oracle_dir)
+        query_plan = query._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "LeftSemi" in plan
@@ -693,6 +742,8 @@ def test_knn_filtered_no_hint_degrades_to_shuffled_semi_join(
         "semi-join still forces a broadcast with auto-broadcast off "
         "— the unconditional hint is back"
     )
+    semi = [ln for ln in query_plan.splitlines() if "LeftSemi" in ln]
+    assert semi and not any("Broadcast" in ln for ln in semi), semi
 
 
 def test_knn_int8_oracle_guards_constant_vectors(spark, tmp_path):
