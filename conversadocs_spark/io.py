@@ -152,14 +152,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df
     return read_parquet(spark, path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All fixture tables as a dict of lazy DataFrames."""
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

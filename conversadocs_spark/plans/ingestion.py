@@ -1,7 +1,9 @@
 """Driver-visible ingestion queries: the reference's entry point
 (R1/R2/R3 multi-format scan), its index lifecycle (R7/R8 overwrite
-build), and structured text-format sources (CSV / JSON lines), run
-against scratch directories under the repo.
+build), and structured text-format sources (CSV / JSON lines). Each
+call writes under a directory of its own from ``scratch.call_dir``,
+so a returned lazy read of those files is never rewritten by a later
+call.
 
 The directory-scan and index-lifecycle queries are rows-only (file
 scanning and parquet writes aren't SQL-expressible over the fixture
@@ -15,12 +17,10 @@ failure mode of text sources.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conversadocs_spark import io
+from conversadocs_spark import io, scratch
 from conversadocs_spark.plans.registry import register
 from conversadocs_spark.sources.ingest import (
     scan_documents,
@@ -31,20 +31,13 @@ from conversadocs_spark.sources.sink import (
     read_index,
 )
 
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".ingest_stage",
-)
-
-
 @register("ingest_scan_text", tags=("ingest", "rows-only"))
 def ingest_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-format directory scan: 50 fixture docs staged as loose
     .txt/.md/.html files plus an unsupported-extension decoy; the scan
     must parse exactly the 50 supported files (R1 dispatch + R2
     unknown-ext filter) with provenance columns."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    corpus_dir = os.path.join(_SCRATCH, f"corpus_{tag}")
+    corpus_dir = scratch.call_dir("corpus")
     stage_text_corpus(spark, sf_dir, corpus_dir, n_docs=50)
     docs = scan_documents(spark, corpus_dir)
     return docs.select(
@@ -76,8 +69,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference is a full extra pass over the data), and hash-check the
     parsed rows against the parquet ground truth. Exercises doubles,
     timestamp_ntz with microseconds, and quoted strings."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH, f"csv_{tag}")
+    path = scratch.call_dir("csv")
     cols = [
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority",
@@ -118,8 +110,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The props column is itself a JSON string, so the round-trip
     exercises nested quoting/escaping; value is a raw double (Jackson
     shortest-round-trip repr must parse back bit-identical)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH, f"json_{tag}")
+    path = scratch.call_dir("json")
     (
         io.table(spark, sf_dir, "events")
         .where(F.col("event_id") % 101 == 0)
@@ -160,8 +151,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate-pushdown-capable; the slice filter is applied before the
     write so the staged file is the slice, and the read-back plan is a
     plain pruned columnar scan."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH, f"orc_{tag}")
+    path = scratch.call_dir("orc")
     cols = [
         "l_orderkey", "l_partkey", "l_linenumber", "l_quantity",
         "l_extendedprice", "l_returnflag", "l_shipdate",
@@ -182,8 +172,7 @@ def index_build_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, then REBUILD it from a larger one at the same path — the
     read-back must reflect only the second build (the reference's
     'previous DB discarded' semantics, bones.py:112-114)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    index_path = os.path.join(_SCRATCH, f"index_{tag}")
+    index_path = scratch.call_dir("index")
     docs = io.table(spark, sf_dir, "documents")
     build_vector_index(
         docs.where(F.col("doc_id") < 20), index_path, chunk_size=120,
@@ -237,8 +226,7 @@ def scan_json_corrupt_tolerant(
     PERMISSIVE + explicit corrupt-record column is the Spark-native
     quarantine pattern (FAILFAST would kill a day-long job on one bad
     line; DROPMALFORMED lies about coverage)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH, f"json_corrupt_{tag}")
+    path = scratch.call_dir("json_corrupt")
     line = F.to_json(
         F.struct("event_id", "event_type", "value")
     )
@@ -305,8 +293,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     should register the superset schema in the catalog and read with
     an explicit schema instead (documented here as the deployment
     guidance; the operator proves the engine handles the layout)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH, f"evolve_{tag}")
+    path = scratch.call_dir("evolve")
     base = (
         io.table(spark, sf_dir, "orders")
         .where(F.col("o_orderkey") % 89 == 0)
@@ -349,11 +336,7 @@ def index_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_versioned,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH, f"tt_{tag}")
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch.call_dir("tt")
     docs = io.table(spark, sf_dir, "documents").select("doc_id", "text")
     v1 = write_versioned(docs.where(F.col("doc_id") < 20), path)
     v2 = write_versioned(docs.where(F.col("doc_id") < 60), path)
@@ -378,8 +361,7 @@ def ingest_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME kernels as the mapInPandas path.
     tests/test_ingest.py::test_datasource_scan_equals_mapinpandas pins
     row-for-row (and doc_id-for-doc_id) parity between the two."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    corpus_dir = os.path.join(_SCRATCH, f"corpus_{tag}")
+    corpus_dir = scratch.call_dir("corpus")
     stage_text_corpus(spark, sf_dir, corpus_dir, n_docs=50)
     from conversadocs_spark.sources.datasource import scan_documents_ds
 
@@ -407,17 +389,13 @@ def index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the current-marker version is always retained even when
     keep_last would drop it (rollback safety — pinned by
     tests/test_ingest.py)."""
-    import shutil
-
     from conversadocs_spark.sources.sink import (
         read_versioned,
         vacuum_versions,
         write_versioned,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH, f"vac_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch.call_dir("vac")
     docs = io.table(spark, sf_dir, "documents").select("doc_id", "text")
     for cut in (10, 20, 40, 60):
         write_versioned(docs.where(F.col("doc_id") < cut), path)

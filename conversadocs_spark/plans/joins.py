@@ -517,13 +517,13 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SUBQUERY_SQL = """
 SELECT c.c_custkey, c.c_acctbal,
-       (SELECT CAST(count(*) AS BIGINT) FROM orders o
+       (SELECT CAST(count(*) AS BIGINT) FROM {orders} o
         WHERE o.o_custkey = c.c_custkey)               AS n_orders
-FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
+FROM {customer} c
+WHERE EXISTS (SELECT 1 FROM {orders} o
               WHERE o.o_custkey = c.c_custkey
                 AND o.o_totalprice > 100000)
-  AND NOT EXISTS (SELECT 1 FROM orders o
+  AND NOT EXISTS (SELECT 1 FROM {orders} o
                   WHERE o.o_custkey = c.c_custkey
                     AND o.o_orderstatus = 'F'
                     AND o.o_totalprice < 1000)
@@ -531,12 +531,15 @@ WHERE EXISTS (SELECT 1 FROM orders o
 
 
 @register(
-    "sql_correlated_subqueries", oracle=_SUBQUERY_SQL, tags=("join",)
+    "sql_correlated_subqueries",
+    oracle=_SUBQUERY_SQL.format(customer="customer", orders="orders"),
+    tags=("join",),
 )
 def sql_correlated_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS / NOT EXISTS / scalar subqueries — the SQL
     forms users actually write, executed VERBATIM on both engines
-    (the oracle string IS the Spark SQL string): Catalyst de-correlates
+    (the oracle string IS the Spark SQL string with its table names
+    filled in): Catalyst de-correlates
     them into left-semi, left-anti, and aggregate-then-left-join plans
     — i.e., exactly the `join_semi`/`join_anti`/grouped-agg operators
     this engine already pins, reached through the SQL front door. The
@@ -545,9 +548,10 @@ def sql_correlated_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere in the plan (subqueries that survive to execution as
     loops are the classic correctness-preserving, scale-destroying
     fallback)."""
-    for t in ("customer", "orders"):
-        io.table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SUBQUERY_SQL)
+    return spark.sql(
+        _SUBQUERY_SQL,
+        **{t: io.table(spark, sf_dir, t) for t in ("customer", "orders")},
+    )
 
 
 # --------------------------------------------------------------------------
@@ -556,10 +560,10 @@ def sql_correlated_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_TOPK_SQL = """
 SELECT o.o_orderkey, t.l_partkey, t.l_extendedprice
-FROM orders o,
+FROM {orders} o,
 LATERAL (
     SELECT l_partkey, l_extendedprice
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_orderkey = o.o_orderkey
     ORDER BY l_extendedprice DESC, l_partkey ASC
     LIMIT 2
@@ -569,13 +573,16 @@ WHERE o.o_orderkey < 100
 
 
 @register(
-    "sql_lateral_topk", oracle=_LATERAL_TOPK_SQL, tags=("join",)
+    "sql_lateral_topk",
+    oracle=_LATERAL_TOPK_SQL.format(orders="orders", lineitem="lineitem"),
+    tags=("join",),
 )
 def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI LATERAL subquery with correlated ORDER BY + LIMIT — the
     "top 2 line items per order" form users write directly — executed
     VERBATIM on both engines (the oracle string IS the Spark SQL
-    string, like sql_correlated_subqueries / sql_recursive_cte).
+    string with its table names filled in, like
+    sql_correlated_subqueries / sql_recursive_cte).
 
     The point is the REWRITE: a lateral correlated LIMIT is the
     classic per-row-re-execution trap, and Catalyst instead
@@ -588,9 +595,10 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan you'd hand-write with window_rank, reached through the
     SQL front door; tests pin WindowGroupLimit presence so a Spark
     upgrade can't silently regress this into a loop."""
-    for t in ("orders", "lineitem"):
-        io.table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_LATERAL_TOPK_SQL)
+    return spark.sql(
+        _LATERAL_TOPK_SQL,
+        **{t: io.table(spark, sf_dir, t) for t in ("orders", "lineitem")},
+    )
 
 
 # --------------------------------------------------------------------------
@@ -632,8 +640,10 @@ def join_bucketed_colocated(
     Scale notes: 8 buckets suits the fixtures — a real deployment
     sizes buckets toward HDFS-block-sized files (hundreds to
     thousands); bucket counts must MATCH (or divide) across tables
-    for the zip. Writes land in the session warehouse under unique
-    per-SF table names, rewritten idempotently per call."""
+    for the zip. Writes land in the session warehouse as catalog
+    tables named after the fixture basename; each call drops and
+    rewrites them, so two calls on fixtures of the same basename share
+    the tables."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     t_orders, t_items = f"b_orders_{tag}", f"b_lineitem_{tag}"
     import shutil

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conversadocs_spark import io
+from conversadocs_spark import io, scratch
 from conversadocs_spark.plans.registry import register
 
 # --------------------------------------------------------------------------
@@ -345,13 +345,9 @@ def lake_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance job — one range shuffle on the interleaved key, file
     count/size set by the writer, and every later 2-D predicate scan
     prunes at the file level before a row is read."""
-    import os as _os
-
     from conversadocs_spark.functions.zorder import write_zordered
-    from conversadocs_spark.plans.ingestion import _SCRATCH
 
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    path = _os.path.join(_SCRATCH, f"zorder_{tag}")
+    path = scratch.call_dir("zorder")
     orders = io.table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -399,13 +395,8 @@ def lake_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(rows / maxRecordsPerFile) per task. The file-count collapse
     (64 -> handful) is asserted in tests/test_lake.py, not here, so
     the driver row stays a pure content check."""
-    import os as _os
-
-    from conversadocs_spark.plans.ingestion import _SCRATCH
-
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    frag = _os.path.join(_SCRATCH, f"frag_{tag}")
-    compacted = _os.path.join(_SCRATCH, f"compact_{tag}")
+    d = scratch.call_dir("compact")
+    frag, compacted = f"{d}/frag", f"{d}/compacted"
     cols = [
         "l_orderkey", "l_partkey", "l_linenumber", "l_quantity",
         "l_extendedprice",
@@ -470,22 +461,18 @@ def lake_optimize_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional to version count, never rows.
     """
     import os as _os
-    import shutil as _shutil
 
     from conversadocs_spark.functions.zorder import (
         _scale_to_bits,
         z_value,
     )
-    from conversadocs_spark.plans.ingestion import _SCRATCH
     from conversadocs_spark.sources.sink import (
         read_versioned,
         vacuum_versions,
         write_versioned,
     )
 
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    table = _os.path.join(_SCRATCH, f"lifecycle_{tag}")
-    _shutil.rmtree(table, ignore_errors=True)
+    table = scratch.call_dir("lifecycle")
 
     cols = [
         "l_orderkey", "l_partkey", "l_linenumber", "l_quantity",

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conversadocs_spark import io
+from conversadocs_spark import io, scratch
 from conversadocs_spark.plans.registry import register
 
 _LM_BIGRAM_ORACLE = """
@@ -379,9 +379,6 @@ def quality_lr_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests pin serve == direct sigmoid of the trained weights and the
     manifest round-trip exactness (JSON doubles are repr-exact).
     """
-    import os
-    import shutil
-
     from conversadocs_spark.operators.logreg import lr_predict, lr_train
     from conversadocs_spark.sources.sink import (
         read_manifest,
@@ -428,11 +425,7 @@ def quality_lr_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         train.unpersist()
 
     # ---- versioned model publish (train-time) -------------------
-    from conversadocs_spark.plans.ingestion import _SCRATCH
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    model_path = os.path.join(_SCRATCH, f"lrmodel_{tag}")
-    shutil.rmtree(model_path, ignore_errors=True)
+    model_path = scratch.call_dir("lrmodel")
     weights_df = spark.createDataFrame(
         list(zip(cols, w)), "feature string, weight double"
     )

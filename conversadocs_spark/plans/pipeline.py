@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conversadocs_spark import io
+from conversadocs_spark import io, scratch
 from conversadocs_spark.operators.dedup import (
     hashed_shingles,
     minhash_near_dups,
@@ -889,10 +889,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's rebuild-everything-per-upload
     (/root/reference/conversadocs/bones.py:107-119) becomes an
     append-mode index absorb."""
-    import os
-    import shutil
-    import tempfile
-
     from conversadocs_spark.operators.incremental import (
         minhash_incremental_pairs,
         minhash_index_build,
@@ -901,13 +897,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = io.table(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") < 400)
     batch = d.where(F.col("doc_id") >= 400)
-    # per-(user, sf_dir) scratch: rebuilt each run, so the query is
-    # idempotent; a real deployment builds once and absorbs appends
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        f"cds_minhash_idx_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(idx, ignore_errors=True)
+    # built fresh per call; a real deployment builds once and absorbs
+    # appends
+    idx = scratch.call_dir("minhash_idx")
     minhash_index_build(corpus, idx)
     return minhash_incremental_pairs(spark, batch, idx).select(
         "id1", "id2", "jaccard_sim"
@@ -1439,18 +1431,7 @@ def training_order_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count; tests/test_pipeline.py proves the three ordering
     invariants (per-file sortedness, cross-file range disjointness,
     exhaustiveness) from the files themselves."""
-    import os as _os
-
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    out = _os.path.join(
-        _os.path.dirname(
-            _os.path.dirname(
-                _os.path.dirname(_os.path.abspath(__file__))
-            )
-        ),
-        ".ingest_stage",
-        f"train_order_{tag}",
-    )
+    out = scratch.call_dir("train_order")
     split = corpus_split_shuffle(spark, sf_dir)
     train = split.where(F.col("split") == "train").select(
         "doc_id", "shuffle_key"

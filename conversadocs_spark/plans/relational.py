@@ -493,7 +493,7 @@ def ansi_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RECURSIVE_CTE_SQL = """
 WITH RECURSIVE walk(custkey, node, depth) AS (
-    SELECT c_custkey, c_custkey, 0 FROM customer
+    SELECT c_custkey, c_custkey, 0 FROM {customer}
     WHERE c_custkey < 100000
     UNION ALL
     SELECT custkey, CAST(floor(node / 10.0) AS BIGINT), depth + 1
@@ -508,11 +508,14 @@ GROUP BY custkey
 
 
 @register(
-    "sql_recursive_cte", oracle=_RECURSIVE_CTE_SQL, tags=("relational",)
+    "sql_recursive_cte",
+    oracle=_RECURSIVE_CTE_SQL.format(customer="customer"),
+    tags=("relational",),
 )
 def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI ``WITH RECURSIVE`` executed VERBATIM on both engines (the
-    oracle string IS the Spark SQL string, the
+    oracle string IS the Spark SQL string with its table name filled
+    in, the
     sql_correlated_subqueries pattern): walk every customer's ancestor
     chain in the synthetic decimal-shift hierarchy parent(k) =
     floor(k/10) down to its root, then aggregate (root id, depth) per
@@ -539,7 +542,6 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     semdedup_prune's vec_id bound); a production hierarchy walk raises
     the conf explicitly rather than having this engine silently weaken
     the backstop session-wide."""
-    io.table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer"
+    return spark.sql(
+        _RECURSIVE_CTE_SQL, customer=io.table(spark, sf_dir, "customer")
     )
-    return spark.sql(_RECURSIVE_CTE_SQL)

@@ -9,9 +9,12 @@ pipeline's *semantics* are hash-checked via its batch twin
 stream-replay == batch on the same data. Together those give the
 strongest available correctness story for the streaming surface.
 
-Staging/checkpoints live under the repo's .stream_stage/ scratch dir
-(gitignored); memory-sink table names are unique per invocation so the
-driver can call each query repeatedly.
+Each call stages its files, tables and checkpoints under a directory
+of its own from ``scratch.call_dir``, so a checkpoint is always fresh
+(reusing one would resume the prior query instead of reprocessing) and
+a returned lazy read is never rewritten by a later call; memory-sink
+table names are unique per invocation so each query can be called
+repeatedly.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
+from conversadocs_spark import scratch
 from conversadocs_spark.plans.registry import register
 from conversadocs_spark.session import child_session, rebind
 from conversadocs_spark.streaming.ops import (
@@ -35,91 +39,13 @@ from conversadocs_spark.streaming.source import (
 )
 from conversadocs_spark.streaming.state import session_chat
 
-_STAGE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".stream_stage",
-)
 _COUNTER = itertools.count()
 
 
-#: scratch families this module mints (the first token of every
-#: _scratch prefix). The sweep below deletes ONLY names in these
-#: families — a new consumer must add its family here, and _scratch
-#: fails fast if it doesn't (a loud error beats a silent forever-leak
-#: OR an over-broad sweep deleting someone else's data).
-_SCRATCH_FAMILIES = ("fb_ckpt", "ivf_ckpt", "hll", "upd", "cdc", "decay")
-
-
-def _scratch(prefix: str) -> str:
-    """Per-run scratch path under .stream_stage:
-    ``{prefix}_{pid}_{counter}`` — and SELF-SWEEPING (VERDICT r12 #7,
-    the ADVICE r11 unbounded-accumulation defect, already fixed for
-    the IVF index stages, applied to every streaming scratch
-    consumer). The pid+counter suffix is load-bearing: streaming
-    checkpoints must be FRESH per run (reusing one resumes the prior
-    query instead of reprocessing) and two concurrent processes
-    (pytest + bench) must never share a dir — so the names cannot
-    simply be made deterministic. Instead, each call removes every
-    sibling minted by THIS helper — names anchored to a registered
-    ``_SCRATCH_FAMILIES`` prefix with the ``_{pid}_{n}`` shape and an
-    optional chg/tbl/ckpt suffix — whose embedded pid is no longer
-    alive: leftovers of finished processes, deletable by definition.
-    The prefix anchor is load-bearing (ADVICE r13): an unanchored
-    ``*_{digits}_{digits}`` sweep would also match names this helper
-    never minted — a staged fixture dir like ``run_2024_01``, or an
-    IVF stage whose tag ends in digits and whose dirhash happens to
-    be all-decimal — and delete live data when the misparsed 'pid'
-    is dead. Only registered-family names are ever touched; the
-    stage root stays bounded at one dir set per LIVE process.
-    """
-    import re
-    import shutil
-
-    if not any(
-        prefix.startswith(f + "_") and len(prefix) > len(f) + 1
-        for f in _SCRATCH_FAMILIES
-    ):
-        # the tag remainder must be NON-EMPTY too (ADVICE r14): a
-        # bare "fam_" prefix would mint "fam__<pid>_<n>" names; the
-        # sweep regex below now matches those, but rejecting them at
-        # mint time keeps every name round-trippable by construction.
-        raise ValueError(
-            f"unregistered or empty-tag scratch prefix {prefix!r}: "
-            "use '<family>_<tag>' with a registered family and a "
-            "non-empty tag, or its dirs leak forever"
-        )
-    os.makedirs(_STAGE_ROOT, exist_ok=True)
-    fam = "|".join(_SCRATCH_FAMILIES)
-    # `.*` (not `.+`) so historical empty-tag names minted before the
-    # non-empty-tag check are still sweepable (ADVICE r14); the
-    # trailing _(\d+)_\d+ anchor keeps the prefix-anchored safety.
-    pat = re.compile(
-        rf"^(?:{fam})_.*_(\d+)_\d+(_(chg|tbl|ckpt))?$"
-    )
-    for d in os.listdir(_STAGE_ROOT):
-        m = pat.match(d)
-        if not m or int(m.group(1)) == os.getpid():
-            continue
-        try:
-            os.kill(int(m.group(1)), 0)
-        except ProcessLookupError:
-            shutil.rmtree(
-                os.path.join(_STAGE_ROOT, d), ignore_errors=True
-            )
-        except PermissionError:
-            pass  # pid alive under another uid: not ours to sweep
-    return os.path.join(
-        _STAGE_ROOT, f"{prefix}_{os.getpid()}_{next(_COUNTER)}"
-    )
-
-
 def _stage(spark: SparkSession, sf_dir: str, duplicate_rows: bool) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) + (
-        "_dup" if duplicate_rows else ""
-    )
-    out = os.path.join(_STAGE_ROOT, tag)
     return stage_events_files(
-        spark, sf_dir, out, n_files=3, duplicate_rows=duplicate_rows
+        spark, sf_dir, scratch.call_dir("events"), n_files=3,
+        duplicate_rows=duplicate_rows,
     )
 
 
@@ -204,17 +130,13 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     index; rows must equal the staged input
     (tests/test_streaming.py::test_foreachbatch_sink_idempotent also
     re-delivers a batch and asserts no duplication)."""
-    import shutil
-
     from conversadocs_spark.streaming.ops import (
         foreach_batch_index_writer,
     )
 
     path = _stage(spark, sf_dir, duplicate_rows=False)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    index_dir = os.path.join(_STAGE_ROOT, f"fb_index_{tag}")
-    ckpt = _scratch(f"fb_ckpt_{tag}")
-    shutil.rmtree(index_dir, ignore_errors=True)
+    d = scratch.call_dir("fb")
+    index_dir, ckpt = f"{d}/index", f"{d}/ckpt"
     ev = read_events_stream(spark, path)
     _run_available_now(
         ev,
@@ -242,8 +164,6 @@ def streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch `_assign` of the same vectors against the
     same centroids, a redelivered batch must not duplicate, and a
     probe over the grown index must retrieve a streamed vector."""
-    import shutil
-
     from conversadocs_spark import io
     from conversadocs_spark.operators.ivf import ivf_build
     from conversadocs_spark.streaming.ivf_maintain import (
@@ -253,12 +173,10 @@ def streaming_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import functions as F
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    arrivals = os.path.join(_STAGE_ROOT, f"ivf_arrivals_{tag}")
-    index_dir = os.path.join(_STAGE_ROOT, f"ivf_index_{tag}")
-    ckpt = _scratch(f"ivf_ckpt_{tag}")
-    shutil.rmtree(index_dir, ignore_errors=True)
-    shutil.rmtree(arrivals, ignore_errors=True)
+    d = scratch.call_dir("ivf")
+    arrivals, index_dir, ckpt = (
+        f"{d}/arrivals", f"{d}/index", f"{d}/ckpt"
+    )
 
     emb = io.table(spark, sf_dir, "embeddings")
     # sf-agnostic split: 75% built corpus / 25% streamed arrivals
@@ -324,8 +242,6 @@ def streaming_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch EXACTLY (HLL union is register-max, order- and
     batching-independent) — pinned with the redelivery no-op in
     tests/test_streaming.py."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from conversadocs_spark import io
@@ -335,10 +251,8 @@ def streaming_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _stage(spark, sf_dir, duplicate_rows=False)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    table = _scratch(f"hll_{tag}")
-    ckpt = table + "_ckpt"
-    shutil.rmtree(table, ignore_errors=True)
+    d = scratch.call_dir("hll")
+    table, ckpt = f"{d}/table", f"{d}/ckpt"
     ev = read_events_stream(spark, path)
     _run_available_now(
         ev,
@@ -379,8 +293,7 @@ def streaming_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from conversadocs_spark.streaming.state import timeout_sessions
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = os.path.join(_STAGE_ROOT, f"sess_to_{tag}")
+    stage = scratch.call_dir("sess_to")
     stage_events_with_sentinels(spark, sf_dir, stage, n_files=3)
     # keep the sentinel (user -1) flowing through the watermark node;
     # drop its own session rows from the output
@@ -441,18 +354,14 @@ def streaming_update_mode_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     == batch, and that update mode really emitted incrementally
     (more than one batch wrote rows, no batch re-emitted an
     unchanged window)."""
-    import shutil
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from conversadocs_spark.streaming.ops import stream_tumbling_agg
 
     path = _stage(spark, sf_dir, duplicate_rows=False)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = _scratch(f"upd_{tag}")
-    ckpt = out + "_ckpt"
-    shutil.rmtree(out, ignore_errors=True)
+    d = scratch.call_dir("upd")
+    out, ckpt = f"{d}/log", f"{d}/ckpt"
     ev = read_events_stream(spark, path)
     agg = stream_tumbling_agg(ev)
 
@@ -494,8 +403,6 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     applying the same batches sequentially in batch mode and (b)
     redelivering a batch is a no-op (idempotent merge + versioned
     commits = exactly-once without a transaction log)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from conversadocs_spark import io
@@ -508,13 +415,8 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         foreach_batch_cdc_applier,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = _scratch(f"cdc_{tag}")
-    changes_dir, table, ckpt = (
-        base + "_chg", base + "_tbl", base + "_ckpt"
-    )
-    for p in (changes_dir, table, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    d = scratch.call_dir("cdc")
+    changes_dir, table, ckpt = f"{d}/chg", f"{d}/table", f"{d}/ckpt"
     c = io.table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
@@ -583,8 +485,6 @@ def streaming_decay_replay(
     tests/test_streaming.py, with the redelivery no-op pinned
     separately. State is one row per user; each micro-batch costs
     one user-keyed merge join — no history rescan at any scale."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from conversadocs_spark.sources.sink import read_versioned
@@ -594,10 +494,8 @@ def streaming_decay_replay(
 
     tau_us = 604800.0 * 1e6
     path = _stage(spark, sf_dir, duplicate_rows=False)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    table = _scratch(f"decay_{tag}")
-    ckpt = table + "_ckpt"
-    shutil.rmtree(table, ignore_errors=True)
+    d = scratch.call_dir("decay")
+    table, ckpt = f"{d}/table", f"{d}/ckpt"
     ev = read_events_stream(spark, path)
     _run_available_now(
         ev,

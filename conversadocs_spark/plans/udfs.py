@@ -383,14 +383,12 @@ def udtf_chunk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield seq, text[start : start + size]
 
     spark.udtf.register("fixed_chunker", FixedChunker)
-    io.table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "udtf_chunk_src"
-    )
     return spark.sql(
         """
         SELECT d.doc_id, c.seq, c.chunk
-        FROM udtf_chunk_src d, LATERAL fixed_chunker(d.text) c
-        """
+        FROM {src} d, LATERAL fixed_chunker(d.text) c
+        """,
+        src=io.table(spark, sf_dir, "documents"),
     )
 
 
@@ -556,12 +554,10 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield tuple((toks + [None] * n)[:n])
 
     spark.udtf.register("first_tokens", FirstTokens)
-    io.table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "udtf_dyn_src"
-    )
     return spark.sql(
         """
         SELECT d.doc_id, t.tok0, t.tok1, t.tok2, t.tok3
-        FROM udtf_dyn_src d, LATERAL first_tokens(d.text, 4) t
-        """
+        FROM {src} d, LATERAL first_tokens(d.text, 4) t
+        """,
+        src=io.table(spark, sf_dir, "documents"),
     )

@@ -880,7 +880,8 @@ def _staged_ivf_index(
     deployment never would (ivf_build once per corpus version,
     ivf_search many).
 
-    The stage lives under ``.stream_stage/{name}_{tag}_{dirhash}`` —
+    The stage lives under ``scratch.STAGE_ROOT`` (the checkout's
+    ``.stream_stage/``) as ``{name}_{tag}_{dirhash}`` —
     pid-FREE (ADVICE r11: pid-suffixed dirs from prior runs
     accumulated unboundedly) but keyed by a hash of the ABSOLUTE
     sf_dir too, so two fixture dirs sharing a basename (e.g.
@@ -912,15 +913,11 @@ def _staged_ivf_index(
         ivf_build,
         ivf_write_index,
     )
+    from conversadocs_spark.scratch import STAGE_ROOT as stage_root
 
     abs_dir = os.path.abspath(sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
     dirhash = hashlib.md5(abs_dir.encode()).hexdigest()[:8]
-    stage_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        ".stream_stage",
-    )
     path = os.path.join(stage_root, f"{name}_{tag}_{dirhash}")
     src = os.path.join(sf_dir, "embeddings.parquet")
     st = os.stat(src)
@@ -1194,12 +1191,9 @@ def knn_label_eval(spark, sf_dir):
         F.col("embedding").alias("query_vec"),
     )
     corpus = emb.select("vec_id", "embedding")
-    top = knn_per_query(corpus, queries, k=6)  # k=5 + possible self
-    top = top.where(F.col("vec_id") != F.col("query_id"))
     from pyspark.sql import Window
 
-    order = [F.desc("sim"), F.asc("vec_id")]
-    top5 = topk(top, 5, order, by="query_id", rank="rn").join(
+    top5 = knn_per_query(corpus, queries, k=5, exclude_self=True).join(
         emb.select("vec_id", "label"), "vec_id"
     )
     votes = top5.groupBy("query_id", "label").agg(

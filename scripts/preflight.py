@@ -28,7 +28,14 @@ script runs ONLY the cheap invariants (no SparkSession, no data):
      deleted one until the list shrinks,
  12. no `os.environ` / `os.getenv` under conversadocs_spark/ outside a
      function body: an import-time read freezes the value the
-     process had when it first imported the package.
+     process had when it first imported the package,
+ 13. no `createOrReplaceTempView` / `createOrReplaceGlobalTempView`
+     under conversadocs_spark/: a view named after a table is shared
+     by every caller of the session (pass frames to
+     `spark.sql(text, name=df)` instead),
+ 14. no `basename(sf_dir` / `gettempdir(` under conversadocs_spark/plans/
+     outside SHARED_NAME_ALLOWED: a query's files go under
+     `scratch.call_dir`, never a path named after the fixture.
 
 Usage: python scripts/preflight.py   (exit 0 = safe to snapshot)
 Run it before every snapshot-sized commit; the full pytest suite
@@ -55,6 +62,18 @@ SF_READ_RE = re.compile(r"spark\.read\.parquet\([^)]*\bsf_dir", re.S)
 CONF_WRITE_RE = re.compile(r"\.conf\.(?:set|unset)\(")
 #: an engine env knob
 ENV_KNOB_RE = re.compile(r"SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]")
+#: a session-wide temp view
+TEMP_VIEW_RE = re.compile(r"createOrReplace(?:Global)?TempView")
+#: a file or table name derived from the fixture dir or a shared tmp dir
+SHARED_NAME_RE = re.compile(r"basename\(sf_dir|gettempdir\(")
+#: (file under plans/, enclosing function) -> why its name may be shared
+SHARED_NAME_ALLOWED = {
+    ("vector.py", "_staged_ivf_index"):
+        "content key of a stamp-checked cache, not scratch; the key "
+        "also hashes the absolute sf_dir",
+    ("joins.py", "join_bucketed_colocated"):
+        "catalog table names in the session warehouse, not scratch",
+}
 #: every env knob the engine reads; each one is a code path that a
 #: measurement or a test needs
 ENGINE_ENV_KNOBS = frozenset({
@@ -93,6 +112,19 @@ def import_time_env_reads(source: str) -> list[int]:
 
     visit(ast.parse(source), False)
     return sorted(lines)
+
+
+def enclosing_function(source: str, line: int) -> str | None:
+    """Name of the innermost function whose body spans ``line``."""
+    best = None
+    for node in ast.walk(ast.parse(source)):
+        if (
+            isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and node.lineno <= line <= node.end_lineno
+            and (best is None or node.lineno > best.lineno)
+        ):
+            best = node
+    return best and best.name
 
 
 def check(ok: bool, msg: str) -> None:
@@ -280,6 +312,32 @@ def main() -> int:
     check(not import_reads,
           f"no import-time env read in conversadocs_spark/ "
           f"(offenders: {import_reads or '[]'})")
+
+    # A query must not assume it is the session's only caller: a temp
+    # view named after a table, or a file path named after the fixture,
+    # is read and rewritten by every concurrent caller.
+    views, shared = [], []
+    for full in sources:
+        rel = os.path.relpath(full, REPO).replace(os.sep, "/")
+        if not (rel.startswith("conversadocs_spark/") and rel.endswith(".py")):
+            continue
+        text = open(full).read()
+        views += [
+            f"{rel}:{text.count(chr(10), 0, m.start()) + 1}"
+            for m in TEMP_VIEW_RE.finditer(text)
+        ]
+        if rel.startswith("conversadocs_spark/plans/"):
+            for m in SHARED_NAME_RE.finditer(text):
+                line = text.count(chr(10), 0, m.start()) + 1
+                key = (rel.rsplit("/", 1)[1], enclosing_function(text, line))
+                if key not in SHARED_NAME_ALLOWED:
+                    shared.append(f"{rel}:{line}")
+    check(not views,
+          f"no createOrReplace*TempView in conversadocs_spark/ "
+          f"(offenders: {views or '[]'})")
+    check(not shared,
+          f"no basename(sf_dir / gettempdir( in conversadocs_spark/plans/ "
+          f"outside SHARED_NAME_ALLOWED (offenders: {shared or '[]'})")
 
     if FAILS:
         print(f"\npreflight: {len(FAILS)} FAILURE(S) — do not snapshot")

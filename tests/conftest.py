@@ -24,3 +24,20 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_oracle_dir():
     return SF_ORACLE
+
+
+@pytest.fixture
+def call_dirs(monkeypatch):
+    """Every directory ``scratch.call_dir`` hands out during the test,
+    listed per kind in call order."""
+    from conversadocs_spark import scratch
+
+    made: dict[str, list[str]] = {}
+    real = scratch.call_dir
+
+    def record(kind: str) -> str:
+        made.setdefault(kind, []).append(real(kind))
+        return made[kind][-1]
+
+    monkeypatch.setattr(scratch, "call_dir", record)
+    return made

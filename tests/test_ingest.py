@@ -185,21 +185,16 @@ def test_compact_table_collapses_small_files(spark, tmp_path):
     assert compact_table(spark, path, target_file_bytes=10**9) == 1
 
 
-def test_corrupt_json_lines_are_quarantined_verbatim(spark):
+def test_corrupt_json_lines_are_quarantined_verbatim(spark, call_dirs):
     """The PERMISSIVE read must keep every malformed line's raw text
     in _corrupt_record (so a quarantine replay is possible) and parse
     no fields from it."""
     from conversadocs_spark.plans import QUERIES  # noqa: F401 (registers)
-    import os
-
-    from conversadocs_spark.plans.ingestion import _SCRATCH
     from tests.conftest import SF_ORACLE
 
     # the registered query stages the file as a side effect
     QUERIES["scan_json_corrupt_tolerant"](spark, SF_ORACLE).collect()
-    path = os.path.join(
-        _SCRATCH, f"json_corrupt_{os.path.basename(SF_ORACLE)}"
-    )
+    (path,) = call_dirs["json_corrupt"]
     parsed = (
         spark.read.schema(
             "event_id bigint, event_type string, value double, "
@@ -219,19 +214,19 @@ def test_corrupt_json_lines_are_quarantined_verbatim(spark):
         assert r["event_type"] is None and r["value"] is None
 
 
-def test_orc_roundtrip_matches_oracle_and_writes_orc(spark):
+def test_orc_roundtrip_matches_oracle_and_writes_orc(spark, call_dirs):
     """The staged ORC slice must parse back cell-identical to the
     parquet ground truth, and the staged files must really be ORC
     (not a silently-defaulted format)."""
     import glob
     import os
 
-    from conversadocs_spark.plans.ingestion import _SCRATCH
     from tests.conftest import SF_ORACLE
     from tests.oracle import assert_query_matches_oracle
 
     assert_query_matches_oracle(spark, "scan_orc_roundtrip", SF_ORACLE)
-    files = glob.glob(os.path.join(_SCRATCH, "orc_sf0.01", "part-*"))
+    (orc_dir,) = call_dirs["orc"]
+    files = glob.glob(os.path.join(orc_dir, "part-*"))
     assert files and all(f.endswith(".orc") for f in files)
 
 

@@ -105,20 +105,19 @@ def test_lake_compact_files_matches_oracle(spark, sf_oracle_dir):
     assert_query_matches_oracle(spark, "lake_compact_files", sf_oracle_dir)
 
 
-def test_lake_compact_collapses_file_count(spark, sf_oracle_dir):
+def test_lake_compact_collapses_file_count(spark, sf_oracle_dir, call_dirs):
     """The staged fragmentation (64 shards) must collapse to the
     4-partition target; every surviving file respects
     maxRecordsPerFile; row totals are unchanged."""
     import os
 
     from conversadocs_spark.plans import QUERIES
-    from conversadocs_spark.plans.ingestion import _SCRATCH
 
     df = QUERIES["lake_compact_files"](spark, sf_oracle_dir)
     n = df.count()
-    tag = os.path.basename(sf_oracle_dir.rstrip("/"))
-    frag = os.path.join(_SCRATCH, f"frag_{tag}")
-    compacted = os.path.join(_SCRATCH, f"compact_{tag}")
+    (d,) = call_dirs["compact"]
+    frag = os.path.join(d, "frag")
+    compacted = os.path.join(d, "compacted")
 
     def parquet_files(p):
         return [f for f in os.listdir(p) if f.endswith(".parquet")]
@@ -137,7 +136,7 @@ def test_lake_compact_collapses_file_count(spark, sf_oracle_dir):
 
 
 def test_lake_optimize_lifecycle_preserves_rows_and_vacuums(
-    spark, sf_oracle_dir
+    spark, sf_oracle_dir, call_dirs
 ):
     """The composed write->compact->zorder->vacuum cadence: every
     stage carries the identical row count and order-insensitive
@@ -149,7 +148,6 @@ def test_lake_optimize_lifecycle_preserves_rows_and_vacuums(
 
     from conversadocs_spark import io
     from conversadocs_spark.plans import QUERIES
-    from conversadocs_spark.plans.ingestion import _SCRATCH
     from conversadocs_spark.sources.sink import read_versioned
     from pyspark.sql import functions as F
 
@@ -169,8 +167,7 @@ def test_lake_optimize_lifecycle_preserves_rows_and_vacuums(
     assert rows["v2_compacted"].n_files <= 8
     assert rows["v3_zordered"].n_files <= 8
 
-    tag = os.path.basename(sf_oracle_dir.rstrip("/"))
-    table = os.path.join(_SCRATCH, f"lifecycle_{tag}")
+    (table,) = call_dirs["lifecycle"]
     assert not os.path.exists(os.path.join(table, "v=1"))
     assert os.path.exists(os.path.join(table, "v=2"))
 

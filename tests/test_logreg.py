@@ -123,7 +123,7 @@ def test_lr_train_one_job_per_iteration(spark):
     )
 
 
-def test_quality_lr_serve_manifest_roundtrip(spark, sf_oracle_dir):
+def test_quality_lr_serve_manifest_roundtrip(spark, sf_oracle_dir, call_dirs):
     """Serve path: scores must equal the sigmoid of the manifest
     weights against independently recomputed features (JSON doubles
     round-trip repr-exact), keep == score >= 0.5, and roughly half
@@ -133,7 +133,6 @@ def test_quality_lr_serve_manifest_roundtrip(spark, sf_oracle_dir):
     import os
 
     from conversadocs_spark.plans import QUERIES
-    from conversadocs_spark.plans.ingestion import _SCRATCH
 
     rows = QUERIES["quality_lr_serve"](spark, sf_oracle_dir).collect()
     n = len(rows)
@@ -142,9 +141,8 @@ def test_quality_lr_serve_manifest_roundtrip(spark, sf_oracle_dir):
     for r in rows:
         assert r.keep == (r.lr_score >= 0.5)
 
-    tag = os.path.basename(sf_oracle_dir.rstrip("/"))
-    mpath = os.path.join(_SCRATCH, f"lrmodel_{tag}", "v=1",
-                         "_manifest.json")
+    (model_dir,) = call_dirs["lrmodel"]
+    mpath = os.path.join(model_dir, "v=1", "_manifest.json")
     with open(mpath) as fh:
         m = json.load(fh)
     assert m["features"] == ["f_bias", "f_lensat", "f_uniq", "f_punct"]

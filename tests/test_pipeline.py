@@ -830,14 +830,12 @@ def test_observed_clean_metrics_match_recompute(spark, sf_oracle_dir):
 
 
 def test_training_order_write_realizes_global_order(
-    spark, sf_oracle_dir
+    spark, sf_oracle_dir, call_dirs
 ):
     """The written training set must hold the global shuffle order
     WITHOUT a global sort: per-file key ranges are pairwise disjoint
     (so file order = global order), every file is internally sorted,
     and the union of files is exactly the train split."""
-    import os
-
     from pyspark.sql import functions as F
 
     from conversadocs_spark.plans import QUERIES
@@ -848,14 +846,7 @@ def test_training_order_write_realizes_global_order(
     ranges = sorted((r["key_lo"], r["key_hi"]) for r in stats)
     for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
         assert lo1 <= hi1 < lo2
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "conversadocs_spark",
-    )
-    base = os.path.join(
-        os.path.dirname(out), ".ingest_stage",
-        f"train_order_{os.path.basename(sf_oracle_dir.rstrip('/'))}",
-    )
+    (base,) = call_dirs["train_order"]
     written = spark.read.parquet(base)
     # per-file sortedness
     per_file = written.select(

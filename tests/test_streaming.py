@@ -260,7 +260,7 @@ def test_foreachbatch_replay_covers_input(spark, sf_dir):
     assert idx.select("batch_id").distinct().count() >= 2
 
 
-def test_ivf_append_stream_equals_batch_assign(spark):
+def test_ivf_append_stream_equals_batch_assign(spark, call_dirs):
     """Streamed assignments must equal the batch _assign of the same
     vectors against the same frozen centroids; every staged vector
     appears exactly once; a probe over the grown index retrieves a
@@ -289,11 +289,7 @@ def test_ivf_append_stream_equals_batch_assign(spark):
     assert len(got) == streamed.count()  # each vector exactly once
 
     # probe: a query equal to a streamed vector must come back rank 1
-    index_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".stream_stage",
-        "ivf_index_sf0.01",
-    )
+    index_dir = os.path.join(call_dirs["ivf"][0], "index")
     assignments = spark.read.parquet(index_dir).select(
         "vec_id", "embedding", "list_id"
     )
@@ -541,15 +537,10 @@ def test_timeout_sessions_tws_parity(spark, sf_oracle_dir):
     import pytest
 
     pytest.importorskip("google.protobuf.descriptor")
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from conversadocs_spark.plans.streamqueries import (
-        _STAGE_ROOT,
-        _replay,
-    )
+    from conversadocs_spark import scratch
+    from conversadocs_spark.plans.streamqueries import _replay
     from conversadocs_spark.streaming.source import (
         read_events_stream,
         stage_events_with_sentinels,
@@ -559,8 +550,7 @@ def test_timeout_sessions_tws_parity(spark, sf_oracle_dir):
         timeout_sessions_tws,
     )
 
-    stage = os.path.join(_STAGE_ROOT, "sess_tws_parity")
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = scratch.call_dir("sess_tws")
     stage_events_with_sentinels(spark, sf_oracle_dir, stage, n_files=3)
     ev = read_events_stream(spark, stage).where(F.col("user_id") < 20)
     new = {
@@ -850,73 +840,3 @@ def test_streaming_decay_bounded_parity_and_redelivery_noop(
         (u, ne) for u, _, ne, _ in v1
     )[u] for u, n in v3.items())
 
-
-def test_scratch_stage_self_sweeps_dead_pid_dirs():
-    """_scratch (VERDICT r12 #7): pid-suffixed scratch dirs from
-    FINISHED processes are swept on the next call — ANY scratch
-    prefix, so stale tags can't leak forever; dirs of live pids and
-    non-scratch shapes (staged events, hash-suffixed IVF stages)
-    survive."""
-    from conversadocs_spark.plans.streamqueries import (
-        _STAGE_ROOT,
-        _scratch,
-    )
-
-    os.makedirs(_STAGE_ROOT, exist_ok=True)
-    dead_pid = 2**22 + 11  # above default pid_max: never alive
-    dead = os.path.join(_STAGE_ROOT, f"cdc_sfT_{dead_pid}_0_tbl")
-    dead_other = os.path.join(_STAGE_ROOT, f"hll_sfT_{dead_pid}_0")
-    live = os.path.join(_STAGE_ROOT, f"cdc_sfT_{os.getpid()}_999_tbl")
-    plain = os.path.join(_STAGE_ROOT, "cdc_sfT_not_a_pid")
-    ivf_stage = os.path.join(_STAGE_ROOT, "ivf_sfT_abcd1234")
-    for p in (dead, dead_other, live, plain, ivf_stage):
-        os.makedirs(p, exist_ok=True)
-    try:
-        out = _scratch("cdc_sfT")
-        assert not os.path.isdir(dead), "dead-pid dir must be swept"
-        assert not os.path.isdir(dead_other), (
-            "dead-pid dirs of OTHER prefixes must be swept too"
-        )
-        assert os.path.isdir(live), "live-pid dir must survive"
-        assert os.path.isdir(plain), "non-pid names untouched"
-        assert os.path.isdir(ivf_stage), "hash-layout stages untouched"
-        assert os.path.basename(out).startswith(
-            f"cdc_sfT_{os.getpid()}_"
-        )
-    finally:
-        import shutil
-
-        for p in (dead, dead_other, live, plain, ivf_stage):
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def test_scratch_rejects_empty_tag_and_sweeps_legacy_empty_tags():
-    """ADVICE r14: a bare 'fam_' prefix would mint 'fam__<pid>_<n>'
-    names; mint-time now rejects the empty tag remainder, and the
-    sweep regex (relaxed .+ -> .*) still collects any such legacy
-    dirs left by older code."""
-    import pytest
-
-    from conversadocs_spark.plans.streamqueries import (
-        _STAGE_ROOT,
-        _scratch,
-    )
-
-    with pytest.raises(ValueError, match="empty-tag"):
-        _scratch("hll_")
-    with pytest.raises(ValueError, match="unregistered"):
-        _scratch("hll")  # bare family name, no separator at all
-
-    os.makedirs(_STAGE_ROOT, exist_ok=True)
-    dead_pid = 2**22 + 13  # above default pid_max: never alive
-    legacy = os.path.join(_STAGE_ROOT, f"hll__{dead_pid}_0")
-    os.makedirs(legacy, exist_ok=True)
-    try:
-        _scratch("hll_sfT")
-        assert not os.path.isdir(legacy), (
-            "legacy empty-tag dead-pid dir must be swept"
-        )
-    finally:
-        import shutil
-
-        shutil.rmtree(legacy, ignore_errors=True)
