@@ -34,7 +34,7 @@ it unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from conversadocs_spark.functions.vector import (
@@ -42,27 +42,42 @@ from conversadocs_spark.functions.vector import (
     dot_product,
     l2_norm,
 )
+from conversadocs_spark.operators.knn import cosine_topk, topk
+
+
+def _md5_60bit(s: Column) -> Column:
+    """The first 15 hex chars of ``md5(s)`` as a positive 60-bit
+    BIGINT (so ``pmod == %``): the seed arithmetic of the md5 twins,
+    which DuckDB replays as ``CAST(('0x' || substr(md5(s), 1, 15)) AS
+    BIGINT)``."""
+    return F.conv(
+        F.substring(F.md5(s.cast("binary")), 1, 15), 16, 10
+    ).cast("long")
 
 
 def _cell_means(
-    assigned: DataFrame, id_col: str, vec_col: str
+    assigned: DataFrame,
+    keys: tuple[str, ...] = ("list_id",),
+    vec: str = "embedding",
 ) -> DataFrame:
-    """Per-cell element-wise mean -> (list_id, centroid array<double>).
+    """Per-cell element-wise mean of the ``vec`` arrays, a cell being
+    one value of ``keys`` -> (*keys, centroid array<double>): IVF's
+    cells (list_id) and PQ's (sub, code).
 
     posexplode multiplies rows by dim for the build only (never at
     query time); the decimal-cast sum makes the mean exact and thus
     partition-order independent.
     """
     exploded = assigned.select(
-        "list_id", F.posexplode(vec_col).alias("pos", "x")
+        *keys, F.posexplode(vec).alias("pos", "x")
     )
-    means = exploded.groupBy("list_id", "pos").agg(
+    means = exploded.groupBy(*keys, "pos").agg(
         (
             F.sum(F.col("x").cast("decimal(28,10)")).cast("double")
             / F.count("*")
         ).alias("m")
     )
-    return means.groupBy("list_id").agg(
+    return means.groupBy(*keys).agg(
         F.transform(
             F.array_sort(
                 F.collect_list(F.struct(F.col("pos"), F.col("m")))
@@ -73,11 +88,7 @@ def _cell_means(
 
 
 def _assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    digits: int = 9,
+    vectors: DataFrame, centroids: DataFrame, digits: int = 9
 ) -> DataFrame:
     """Nearest-centroid assignment with ZERO shuffle: fold the K
     centroids into ONE array-of-structs row, broadcast it, and take
@@ -123,7 +134,7 @@ def _assign(
             F.col("cents"),
             lambda c: F.struct(
                 F.round(
-                    dot_product(F.col(vec_col), c["centroid"])
+                    dot_product(F.col("embedding"), c["centroid"])
                     / (F.col("_vn") * c["cn"]),
                     digits,
                 ).alias("csim"),
@@ -132,26 +143,48 @@ def _assign(
         )
     )
     return (
-        vectors.withColumn("_vn", l2_norm(F.col(vec_col)))
+        vectors.withColumn("_vn", l2_norm(F.col("embedding")))
         .crossJoin(F.broadcast(packed))
         .select(
-            id_col,
-            vec_col,
+            "vec_id",
+            "embedding",
             (-best["neg_list"]).cast("int").alias("list_id"),
         )
     )
 
 
+def _lloyd(
+    vectors: DataFrame, seed: Column, refine_iters: int, digits: int
+) -> tuple[DataFrame, DataFrame]:
+    """(assignments, centroids): Lloyd k-means over ``vectors`` from
+    the initial cell ids ``seed``, ``refine_iters`` rounds of
+    :func:`_assign` (cosine rounded to ``digits``) and
+    :func:`_cell_means`.
+
+    Each round's K-row centroid relation is eagerly
+    localCheckpointed: without it round r's assignment plan embeds
+    EVERY prior round's means+argmax lineage and Catalyst re-derives
+    the whole chain per action (measured 25 s for a 500-vector
+    fixture; build + ivf_write_index at sf0.1 ran 26 -> 21 jobs).
+    Values are identical (checkpointing only truncates lineage); the
+    state is K rows, so the non-reliable-storage caveat is immaterial
+    (re-running the build is one corpus pass)."""
+    assigned = vectors.select(
+        "vec_id", "embedding", seed.cast("int").alias("list_id")
+    )
+    centroids = _cell_means(assigned).localCheckpoint(eager=True)
+    for _ in range(refine_iters):
+        assigned = _assign(vectors, centroids, digits)
+        centroids = _cell_means(assigned).localCheckpoint(eager=True)
+    return assigned, centroids
+
+
 def ivf_build(
-    vectors: DataFrame,
-    n_lists: int = 16,
-    refine_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, n_lists: int = 16, refine_iters: int = 2
 ) -> tuple[DataFrame, DataFrame]:
     """Build the inverted file: returns (assignments, centroids).
 
-    assignments: (id_col, vec_col, list_id) — at 100 TB this is the
+    assignments: (vec_id, embedding, list_id) — at 100 TB this is the
     table you persist, bucketed/partitioned by list_id so a probe is a
     partition-pruned scan. centroids: (list_id, centroid) — K rows,
     always broadcastable.
@@ -160,26 +193,8 @@ def ivf_build(
     plus one dim-exploded aggregation; no step shuffles on anything
     wider than (list_id, pos).
     """
-    init = vectors.select(
-        id_col,
-        vec_col,
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_lists))
-        .cast("int")
-        .alias("list_id"),
-    )
-    # eager-localCheckpoint each step's K-row centroids (as in
-    # ivf_exact_md5), or every action on the result re-runs the Lloyd
-    # chain: build + ivf_write_index at sf0.1 ran 26 -> 21 jobs.
-    centroids = _cell_means(init, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    assigned = init
-    for _ in range(refine_iters):
-        assigned = _assign(vectors, centroids, id_col, vec_col)
-        centroids = _cell_means(
-            assigned, id_col, vec_col
-        ).localCheckpoint(eager=True)
-    return assigned, centroids
+    seed = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_lists))
+    return _lloyd(vectors, seed, refine_iters, digits=9)
 
 
 def ivf_exact_md5(
@@ -189,31 +204,26 @@ def ivf_exact_md5(
     refine_iters: int = 2,
     k: int = 3,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Oracle-REPLAYABLE IVF twin (the dedup minhash_near_dups_md5
     recipe, operators/dedup.py, applied to the ANN ladder — VERDICT
-    r14 #3): the same build->refine->probe pipeline as
-    :func:`ivf_build` + :func:`ivf_search`, but every
-    non-replayable ingredient swapped for one DuckDB can recompute
+    r14 #3): it runs the production Lloyd loop (:func:`_lloyd`, as
+    :func:`ivf_build` does) and :func:`ivf_search`, with the two
+    non-replayable ingredients swapped for ones DuckDB can recompute
     bit for bit:
 
     - seeding: ``list_id0 = md5_60bit(id) % n_lists`` instead of
-      xxhash64 (md5 exists on both engines; 15 hex chars -> positive
-      60-bit BIGINT, so ``pmod == %``);
-    - a FIXED number of Lloyd rounds (no convergence test — the
-      recursion-free chained-CTE replay needs a static plan);
-    - per-cell means through exact DECIMAL(28,10) sums (the
-      production :func:`_cell_means` already does this — partition-
-      order independent, so both engines produce the same doubles);
-    - every cosine rounded to 6 decimals BEFORE any argmax/rank
-      (round(9) would leave ~1e-14 summation-order noise within one
-      rounding step of a boundary often enough to flip an argmax at
-      corpus scale; at 6 the noise is 8 orders of magnitude inside
-      the step), ties broken on lowest list_id / vec_id.
+      xxhash64 (:func:`_md5_60bit`; md5 exists on both engines);
+    - every cosine rounded to 6 decimals BEFORE any argmax/rank, in
+      the assignment and in the probe (round(9) would leave ~1e-14
+      summation-order noise within one rounding step of a boundary
+      often enough to flip an argmax at corpus scale; at 6 the noise
+      is 8 orders of magnitude inside the step).
+
+    The rest replays as is: a FIXED number of Lloyd rounds (no
+    convergence test), per-cell means through exact DECIMAL(28,10)
+    sums (partition-order independent, so both engines produce the
+    same doubles), ties broken on lowest list_id / vec_id.
 
     The checkable contract is the PIPELINE: assignment after each
     round, the probed cells, and the in-cell exact top-k all replay
@@ -221,56 +231,35 @@ def ivf_exact_md5(
     production path stays :func:`ivf_build`/:func:`ivf_search` with
     its recall audits; this twin is for bounded value-checked
     fixtures."""
-    init = vectors.select(
-        id_col,
-        vec_col,
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.col(id_col).cast("string").cast("binary")),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(n_lists),
-        )
-        .cast("int")
-        .alias("list_id"),
+    seed = F.pmod(
+        _md5_60bit(F.col("vec_id").cast("string")), F.lit(n_lists)
     )
-    assigned = init
-    # eager-localCheckpoint each round's K-row centroid relation:
-    # without it round r's assignment plan embeds EVERY prior round's
-    # means+argmax lineage and Catalyst re-derives the whole chain
-    # per action (measured 25 s for a 500-vector fixture); with it
-    # each round is one broadcast-join corpus pass over a K-row leaf.
-    # Values are identical (checkpointing only truncates lineage) —
-    # the pagerank cadence note, applied to a K-row state. Executes
-    # at build time; K rows, so the non-reliable-storage caveat is
-    # immaterial (re-running the build is one corpus pass).
-    centroids = _cell_means(init, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    for _ in range(refine_iters):
-        assigned = _assign(
-            vectors, centroids, id_col, vec_col, digits=6
-        )
-        centroids = _cell_means(
-            assigned, id_col, vec_col
-        ).localCheckpoint(eager=True)
+    assigned, centroids = _lloyd(vectors, seed, refine_iters, digits=6)
     return ivf_search(
-        assigned,
-        centroids,
-        queries,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        probe_digits=6,
+        assigned, centroids, queries, k=k, nprobe=nprobe, probe_digits=6
     )
+
+
+def _probe(
+    queries: DataFrame,
+    centroids: DataFrame,
+    nprobe: int,
+    digits: int = 9,
+    qvec: str = "query_vec",
+) -> DataFrame:
+    """The IVF probe: each query row once per cell among its
+    ``nprobe`` nearest, by centroid cosine of column ``qvec`` rounded
+    to ``digits``, ties to the lowest list_id -> the query columns +
+    list_id. queries x centroids is a broadcast nested loop over K
+    rows per query."""
+    qsim = cosine_similarity(F.col(qvec), F.col("centroid"))
+    scored = queries.crossJoin(F.broadcast(centroids)).select(
+        *queries.columns, "list_id", F.round(qsim, digits).alias("qsim")
+    )
+    return topk(
+        scored, nprobe, [F.desc("qsim"), F.asc("list_id")],
+        by="query_id", rank="rn",
+    ).select(*queries.columns, "list_id")
 
 
 def ivf_search(
@@ -279,65 +268,36 @@ def ivf_search(
     queries: DataFrame,
     k: int = 3,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     probe_digits: int = 9,
 ) -> DataFrame:
-    """Probe the ``nprobe`` nearest cells per query, exact-cosine
-    re-rank their members: (query_id, vec_id, sim, rank<=k).
+    """Probe the ``nprobe`` nearest cells per (query_id, query_vec)
+    query, exact-cosine re-rank their members: (query_id, vec_id,
+    sim, rank<=k).
 
-    Scale shape: queries x centroids is a broadcast nested loop over K
-    rows per query; the candidate fetch is an equi-join on list_id
-    against the (bucketed) assignments table — the corpus outside the
-    probed cells is never read. Recall/nprobe tradeoff is the standard
-    IVF knob; tests/test_vector.py enforces a recall floor vs the exact
-    knn_per_query on the (worst-case, near-uniform) fixtures.
+    Scale shape: the probe (:func:`_probe`) is a broadcast nested loop
+    over K rows per query; the candidate fetch is an equi-join on
+    list_id against the (bucketed) assignments table — the corpus
+    outside the probed cells is never read. Recall/nprobe tradeoff is
+    the standard IVF knob; tests/test_vector.py enforces a recall
+    floor vs the exact knn_per_query on the (worst-case, near-uniform)
+    fixtures.
     """
-    qsim = cosine_similarity(F.col(query_vec_col), F.col("centroid"))
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.desc("qsim"), F.asc("list_id")
-    )
-    probed = (
-        queries.crossJoin(F.broadcast(centroids))
-        .select(
-            query_id_col,
-            query_vec_col,
-            "list_id",
-            F.round(qsim, probe_digits).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select(query_id_col, query_vec_col, "list_id")
-    )
+    probed = _probe(queries, centroids, nprobe, probe_digits)
     # rescore with hoisted norms: a member of a cell probed by P
     # queries would re-fold its norm P times, and each query's norm
     # once per candidate (the r11 CSE rule); identical values.
     cand = (
-        assignments.withColumn("_n", l2_norm(F.col(vec_col)))
+        assignments.withColumn("_n", l2_norm(F.col("embedding")))
         .join(
             F.broadcast(
-                probed.withColumn(
-                    "_qn", l2_norm(F.col(query_vec_col))
-                )
+                probed.withColumn("_qn", l2_norm(F.col("query_vec")))
             ),
             on="list_id",
             how="inner",
         )
-        .where(F.col(id_col) != F.col(query_id_col))
+        .where(F.col("vec_id") != F.col("query_id"))
     )
-    sim = dot_product(F.col(vec_col), F.col(query_vec_col)) / (
-        F.col("_n") * F.col("_qn")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    return (
-        cand.select(query_id_col, id_col, F.round(sim, 6).alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return cosine_topk(cand, k)
 
 
 def ivf_topk(
@@ -347,32 +307,14 @@ def ivf_topk(
     n_lists: int = 16,
     nprobe: int = 4,
     refine_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Build + search in one call (the registered-query form). Real
     deployments split these: build once per corpus version (R7/R8
     overwrite lifecycle), search many times."""
     assigned, centroids = ivf_build(
-        vectors,
-        n_lists=n_lists,
-        refine_iters=refine_iters,
-        id_col=id_col,
-        vec_col=vec_col,
+        vectors, n_lists=n_lists, refine_iters=refine_iters
     )
-    return ivf_search(
-        assigned,
-        centroids,
-        queries,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    )
+    return ivf_search(assigned, centroids, queries, k=k, nprobe=nprobe)
 
 
 def ivf_write_index(
@@ -381,7 +323,6 @@ def ivf_write_index(
     index_path: str,
     dim: int,
     n_lists: int,
-    id_col: str = "vec_id",
 ) -> int:
     """Persist a built IVF index as two versioned tables under
     ``index_path`` — ``assignments/`` partitioned by list_id (so a

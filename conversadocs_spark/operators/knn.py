@@ -8,7 +8,9 @@ rescoring a shortlist first.
 
 The exact-retrieval plans (the knn_* and multivec_maxsim* builders
 in plans/vector.py, knn_per_query and its callers, hybrid_rrf's dense
-list) keep their k best rows through :func:`topk`, and every
+list) and the ANN ladder (operators/ivf.py's cell probe and re-rank,
+operators/pq.py's ADC pool and refine, operators/lsh.py's bucket
+re-rank) keep their k best rows through :func:`topk`, and every
 shortlist -> rescore -> top-k through :func:`two_stage_topk`
 (:func:`rescore` is its middle stage; knn_filtered_int8_batch keeps
 its tie-aware band shortlist and uses the other two), so the
@@ -28,7 +30,8 @@ single-query / batch plan choice is made in one place:
 Scoring stays with the caller: the core never builds a similarity
 expression, it ranks the one it is given. :func:`row_cosine` and
 :func:`knn_per_query` are the exact-cosine scorers of the single-query
-and batch forms.
+and batch forms; :func:`cosine_topk` is the batch form's scorer over
+candidate pairs, shared with the IVF and LSH re-ranks.
 """
 
 from __future__ import annotations
@@ -169,14 +172,25 @@ def knn_per_query(
     unchanged.
     """
     q = F.broadcast(queries.withColumn("_qn", l2_norm(F.col("query_vec"))))
-    sim = dot_product(F.col("embedding"), F.col("query_vec")) / (
-        F.col("_n") * F.col("_qn")
-    )
     pairs = vectors.withColumn(
         "_n", l2_norm(F.col("embedding"))
     ).crossJoin(q)
     if exclude_self:
         pairs = pairs.where(F.col("vec_id") != F.col("query_id"))
+    return cosine_topk(pairs, k)
+
+
+def cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, sim, rank<=k): each query's k best candidate
+    ``pairs`` by exact cosine of ``embedding`` and ``query_vec``, sim
+    rounded to 6 decimals, ties to the lower vec_id.
+
+    The pairs carry both norms, ``_n`` (per corpus row) and ``_qn``
+    (per query), computed once on their own sides before the fan-out
+    (the r11 CSE rule in :func:`knn_per_query`'s docstring)."""
+    sim = dot_product(F.col("embedding"), F.col("query_vec")) / (
+        F.col("_n") * F.col("_qn")
+    )
     scored = pairs.select(
         "query_id", "vec_id", F.round(sim, 6).alias("sim")
     )

@@ -16,11 +16,14 @@ SimHash family), which matches the reference's similarity function.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from conversadocs_spark.functions.vector import dot_product, l2_norm
+from conversadocs_spark.functions.vector import l2_norm
+from conversadocs_spark.operators.knn import cosine_topk
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -43,13 +46,15 @@ def planes_frame(
     )
 
 
-def bucket_expr(vec_col: F.Column, planes_col: F.Column) -> F.Column:
-    """Bucket id = integer of sign bits of <v, r_j> over the planes
-    array: one aggregate pass with a nested dot-product lambda —
-    expression size independent of dim and n_planes. Horner fold over
-    descending j (acc*2 + bit_j) reproduces sum(2^j * bit_j) exactly
-    (shiftleft needs a literal shift, so it can't consume the lambda
-    index)."""
+def _sign_bits(
+    vec_col: F.Column, planes_col: F.Column, mul, zero: F.Column
+) -> F.Column:
+    """Integer of the sign bits of <v, r_j> over the planes array, the
+    dot summed as ``mul(v_i, r_ji)`` from ``zero``: one aggregate pass
+    with a nested dot-product lambda — expression size independent of
+    dim and n_planes. Horner fold over descending j (acc*2 + bit_j)
+    reproduces sum(2^j * bit_j) exactly (shiftleft needs a literal
+    shift, so it can't consume the lambda index)."""
     idx_desc = F.sequence(
         F.size(planes_col) - 1, F.lit(0), F.lit(-1)
     )
@@ -60,11 +65,9 @@ def bucket_expr(vec_col: F.Column, planes_col: F.Column) -> F.Column:
         + F.when(
             F.aggregate(
                 F.zip_with(
-                    vec_col,
-                    F.element_at(planes_col, j + 1),
-                    lambda a, b: a.cast("double") * b,
+                    vec_col, F.element_at(planes_col, j + 1), mul
                 ),
-                F.lit(0.0),
+                zero,
                 lambda s, x: s + x,
             )
             > 0,
@@ -73,7 +76,60 @@ def bucket_expr(vec_col: F.Column, planes_col: F.Column) -> F.Column:
     )
 
 
+def bucket_expr(vec_col: F.Column, planes_col: F.Column) -> F.Column:
+    """Bucket id = integer of sign bits of the double dot <v, r_j>
+    over the planes array (:func:`_sign_bits`)."""
+    return _sign_bits(
+        vec_col, planes_col, lambda a, b: a.cast("double") * b,
+        F.lit(0.0),
+    )
+
+
 DEFAULT_SEEDS: tuple[int, ...] = tuple(range(101, 109))
+
+
+def _lsh_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    planes: DataFrame,
+    bucket: Callable[[F.Column], F.Column],
+    k: int,
+) -> DataFrame:
+    """The LSH candidate pipeline: bucket both sides under each seed
+    of ``planes`` (``bucket(vector column)`` against the seed's
+    ``planes`` column), join on (seed, bucket), drop self and
+    duplicate pairs, exact-cosine re-rank -> (query_id, vec_id, sim,
+    rank<=k)."""
+
+    def bucketed(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+        return df.crossJoin(F.broadcast(planes)).select(
+            id_col,
+            vec_col,
+            "seed",
+            bucket(F.col(vec_col)).alias("bucket"),
+        )
+
+    # rescore with hoisted norms (the r11 CSE rule): the bucket join's
+    # candidate set is a corpus-scale fraction, and a row colliding
+    # with several queries (or in several seeds, pre-dedup) would
+    # re-fold its norm per occurrence; the query norm likewise per
+    # candidate. Identical expression tree, identical values.
+    cand = (
+        bucketed(vectors, "vec_id", "embedding")
+        .withColumn("_n", l2_norm(F.col("embedding")))
+        .join(
+            F.broadcast(
+                bucketed(queries, "query_id", "query_vec").withColumn(
+                    "_qn", l2_norm(F.col("query_vec"))
+                )
+            ),
+            on=["seed", "bucket"],
+            how="inner",
+        )
+        .where(F.col("vec_id") != F.col("query_id"))
+        .dropDuplicates(["query_id", "vec_id"])
+    )
+    return cosine_topk(cand, k)
 
 
 def ann_topk_lsh(
@@ -83,14 +139,10 @@ def ann_topk_lsh(
     k: int = 3,
     n_planes: int = 3,
     seeds: tuple[int, ...] = DEFAULT_SEEDS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Approximate per-query top-k: bucket both sides under each seed
     (multi-probe improves recall), join on (seed, bucket), exact-cosine
-    re-rank the candidates.
+    re-rank the candidates (:func:`_lsh_topk`).
 
     Plan shape at scale: corpus bucketed once per seed (narrow map),
     shuffle only on the bucket key; the final window ranks each query's
@@ -108,64 +160,10 @@ def ann_topk_lsh(
     broadcast (seed, planes) DataFrame, so raising dim or either knob
     grows the broadcast payload, not the plan.
     """
-    from pyspark.sql import Window
-
-    spark = vectors.sparkSession
-    pf = planes_frame(spark, dim, n_planes, seeds)
-
-    v_bucketed = (
-        vectors.crossJoin(F.broadcast(pf))
-        .select(
-            id_col,
-            vec_col,
-            "seed",
-            bucket_expr(F.col(vec_col), F.col("planes")).alias("bucket"),
-        )
-    )
-
-    q_bucketed = (
-        queries.crossJoin(F.broadcast(pf))
-        .select(
-            query_id_col,
-            query_vec_col,
-            "seed",
-            bucket_expr(
-                F.col(query_vec_col), F.col("planes")
-            ).alias("bucket"),
-        )
-    )
-
-    # rescore with hoisted norms (the r11 CSE rule): the bucket join's
-    # candidate set is a corpus-scale fraction, and a row colliding
-    # with several queries (or in several seeds, pre-dedup) would
-    # re-fold its norm per occurrence; the query norm likewise per
-    # candidate. Identical expression tree, identical values.
-    cand = (
-        v_bucketed.withColumn("_n", l2_norm(F.col(vec_col)))
-        .join(
-            F.broadcast(
-                q_bucketed.withColumn(
-                    "_qn", l2_norm(F.col(query_vec_col))
-                )
-            ),
-            on=["seed", "bucket"],
-            how="inner",
-        )
-        .where(F.col(id_col) != F.col(query_id_col))
-        .dropDuplicates([query_id_col, id_col])
-    )
-    sim = dot_product(F.col(vec_col), F.col(query_vec_col)) / (
-        F.col("_n") * F.col("_qn")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    return (
-        cand.select(
-            query_id_col, id_col, F.round(sim, 6).alias("sim")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    planes = planes_frame(vectors.sparkSession, dim, n_planes, seeds)
+    return _lsh_topk(
+        vectors, queries, planes,
+        lambda v: bucket_expr(v, F.col("planes")), k,
     )
 
 
@@ -215,29 +213,14 @@ def planes_frame_md5(
 
 def bucket_expr_int(vint_col: F.Column, planes_col: F.Column) -> F.Column:
     """Integer twin of :func:`bucket_expr`: sign bits of the exact
-    BIGINT dot <round(v*1e6), p> folded Horner-style. All-integer
+    BIGINT dot <round(v*1e6), p> (:func:`_sign_bits`). All-integer
     arithmetic makes the bucket partition-order- AND engine-exact
     (float dots near zero could flip under summation reordering;
     BIGINT sums cannot). |round(v*1e6)| <= ~1e7 and |p| <= 1e6 over
     dim<=64 keeps the dot under ~6e14 — no int64 overflow."""
-    idx_desc = F.sequence(F.size(planes_col) - 1, F.lit(0), F.lit(-1))
-    return F.aggregate(
-        idx_desc,
+    return _sign_bits(
+        vint_col, planes_col, lambda a, b: a * b,
         F.lit(0).cast("long"),
-        lambda acc, j: acc * 2
-        + F.when(
-            F.aggregate(
-                F.zip_with(
-                    vint_col,
-                    F.element_at(planes_col, j + 1),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0).cast("long"),
-                lambda s, x: s + x,
-            )
-            > 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
     )
 
 
@@ -248,19 +231,16 @@ def lsh_exact_md5(
     k: int = 3,
     n_planes: int = 4,
     seeds: tuple[int, ...] = (0, 1),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Oracle-REPLAYABLE hyperplane-LSH twin of :func:`ann_topk_lsh`
-    (VERDICT r14 #3's recipe, extended to the LSH leg): identical
-    pipeline — bucket both sides per seed, join on (seed, bucket),
-    dedup, exact-cosine top-k — with the two non-replayable
-    ingredients swapped for engine-exact ones:
+    (VERDICT r14 #3's recipe, extended to the LSH leg): it runs the
+    production candidate pipeline (:func:`_lsh_topk`) — bucket both
+    sides per seed, join on (seed, bucket), dedup, exact-cosine top-k
+    — with the two non-replayable ingredients swapped for
+    engine-exact ones:
 
     - the numpy Gaussian projection matrix becomes md5-derived
-      integer planes (:func:`_md5_plane_int`);
+      integer planes (:func:`planes_frame_md5`);
     - the float sign-bit dot becomes an exact BIGINT dot over
       round(v*1e6) fixed-point components (:func:`bucket_expr_int`),
       so a near-zero projection can never flip a bucket bit across
@@ -270,54 +250,12 @@ def lsh_exact_md5(
     vec_id tie-break — the same contract every oracle-checked knn
     query ships. Production stays :func:`ann_topk_lsh` with its
     recall audits; this twin is for bounded value-checked fixtures."""
-    from pyspark.sql import Window
+    planes = planes_frame_md5(vectors.sparkSession, dim, n_planes, seeds)
 
-    spark = vectors.sparkSession
-    pf = planes_frame_md5(spark, dim, n_planes, seeds)
-    vint = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * 1000000.0, 0).cast("long"),
-    )
-    qint = F.transform(
-        F.col(query_vec_col),
-        lambda x: F.round(x.cast("double") * 1000000.0, 0).cast("long"),
-    )
-    v_bucketed = vectors.crossJoin(F.broadcast(pf)).select(
-        id_col,
-        vec_col,
-        "seed",
-        bucket_expr_int(vint, F.col("planes")).alias("bucket"),
-    )
-    q_bucketed = queries.crossJoin(F.broadcast(pf)).select(
-        query_id_col,
-        query_vec_col,
-        "seed",
-        bucket_expr_int(qint, F.col("planes")).alias("bucket"),
-    )
-    cand = (
-        v_bucketed.withColumn("_n", l2_norm(F.col(vec_col)))
-        .join(
-            F.broadcast(
-                q_bucketed.withColumn(
-                    "_qn", l2_norm(F.col(query_vec_col))
-                )
-            ),
-            on=["seed", "bucket"],
-            how="inner",
+    def bucket(v: F.Column) -> F.Column:
+        vint = F.transform(
+            v, lambda x: F.round(x.cast("double") * 1000000.0, 0).cast("long")
         )
-        .where(F.col(id_col) != F.col(query_id_col))
-        .dropDuplicates([query_id_col, id_col])
-    )
-    sim = dot_product(F.col(vec_col), F.col(query_vec_col)) / (
-        F.col("_n") * F.col("_qn")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    return (
-        cand.select(
-            query_id_col, id_col, F.round(sim, 6).alias("sim")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        return bucket_expr_int(vint, F.col("planes"))
+
+    return _lsh_topk(vectors, queries, planes, bucket, k)

@@ -260,7 +260,6 @@ def knn_auto_filtered_batch(
     memory_budget_bytes: Optional[int] = None,
     version: Optional[int] = None,
     force: Optional[str] = None,
-    id_col: str = "vec_id",
 ) -> tuple[DataFrame, str]:
     """The COMPOSED production serving path (VERDICT r10 #3): serve a
     BATCH of queries against a PERSISTED, manifest-stamped index, with
@@ -320,7 +319,7 @@ def knn_auto_filtered_batch(
     )
     assignments = read_versioned(spark, apath, version)
     kept = assignments.join(
-        allowed_ids.select(id_col), id_col, "left_semi"
+        allowed_ids.select("vec_id"), "vec_id", "left_semi"
     )
     if strategy == "brute":
         # exclude_self: one contract across dispatches (see knn_auto)

@@ -21,7 +21,8 @@ operators/ivf.py:
 
 - train: per-subspace Lloyd k-means with hash init
   (``xxhash64(id, sub) % ksub``) and exact-decimal means, so the
-  codebook is independent of partitioning and retry-reproducible.
+  codebook is independent of partitioning and retry-reproducible;
+  each round's codebook is eagerly checkpointed.
 - encode: ONE broadcast of the packed codebook (m*ksub*dsub doubles
   in a single row) against the corpus; all ``m`` argmin codes are
   computed inside a single Catalyst expression — the executed plan
@@ -41,21 +42,27 @@ rather than favoring long vectors.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from conversadocs_spark.functions.vector import (
     cosine_similarity,
     l2_normalize,
 )
+from conversadocs_spark.operators.ivf import (
+    _cell_means,
+    _md5_60bit,
+    _probe,
+    ivf_build,
+)
+from conversadocs_spark.operators.knn import topk
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    """Squared euclidean distance between two arrays."""
+def _fold(a: Column, b: Column, term) -> Column:
+    """sum(term(a_i, b_i)) over two arrays, as doubles."""
     return F.aggregate(
         F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
+            a, b, lambda x, y: term(x.cast("double"), y.cast("double"))
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
@@ -88,9 +95,10 @@ def _codes_expr(
                     F.filter(F.col("cb"), lambda e: e["sub"] == j),
                     lambda e: F.struct(
                         F.round(
-                            -_l2sq(
+                            -_fold(
                                 F.slice(vec, j * dsub + 1, F.lit(dsub)),
                                 e["centroid"],
+                                lambda x, y: (x - y) * (x - y),
                             ),
                             digits,
                         ).alias("nd"),
@@ -107,52 +115,80 @@ def pq_encode(
     codebook: DataFrame,
     m: int,
     dsub: int,
-    id_col: str,
-    vec_col: str,
     digits: int = 9,
 ) -> DataFrame:
-    """(id, vec, codes array<int>) — the PQ-compressed corpus. At
-    100 TB you persist (id, codes) and drop the raw vectors from the
-    hot index; here vec rides along for the refine step."""
+    """``normed``'s columns + codes array<int> — the PQ-compressed
+    corpus of (vec_id, embedding[, list_id]) rows. At 100 TB you
+    persist (vec_id, codes) and drop the raw vectors from the hot
+    index; here the vector rides along for training."""
     return normed.crossJoin(F.broadcast(_pack(codebook))).select(
-        id_col,
-        vec_col,
-        _codes_expr(F.col(vec_col), m, dsub, digits=digits).alias(
-            "codes"
-        ),
+        *normed.columns,
+        _codes_expr(F.col("embedding"), m, dsub, digits).alias("codes"),
     )
 
 
-def _means(subs: DataFrame) -> DataFrame:
-    """Per-(sub, code) element-wise mean with exact-decimal sums
-    (partition-order independent), -> (sub, code, centroid)."""
-    exploded = subs.select(
-        "sub", "code", F.posexplode("subvec").alias("pos", "x")
+def _normed(vectors: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, embedding) with the embedding L2-normalized."""
+    return vectors.select(
+        "vec_id", *keep, l2_normalize(F.col("embedding")).alias("embedding")
     )
-    means = exploded.groupBy("sub", "code", "pos").agg(
-        (
-            F.sum(F.col("x").cast("decimal(28,10)")).cast("double")
-            / F.count("*")
-        ).alias("mval")
-    )
-    return means.groupBy("sub", "code").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("mval")))
-            ),
-            lambda s: s.getField("mval"),
-        ).alias("centroid")
-    )
+
+
+def _train(
+    vectors: DataFrame,
+    dim: int,
+    m: int,
+    code0: Column,
+    refine_iters: int,
+    digits: int,
+) -> DataFrame:
+    """Per-subspace Lloyd k-means over (vec_id, embedding) rows ->
+    codebook (sub, code, centroid): initial codes ``code0`` (an
+    expression over vec_id and sub), then ``refine_iters`` rounds of
+    :func:`pq_encode` (argmin distances rounded to ``digits``) and the
+    per-(sub, code) exact-decimal means (ivf._cell_means).
+
+    Each codebook (<= m*ksub rows) is eagerly localCheckpointed, the
+    ivf._lloyd lineage rule: without it a round's plan embeds every
+    earlier round's means + argmin chain per action."""
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    dsub = dim // m
+    subs = vectors.select(
+        "vec_id",
+        F.posexplode(
+            F.array(
+                *[
+                    F.slice(F.col("embedding"), j * dsub + 1, dsub)
+                    for j in range(m)
+                ]
+            )
+        ).alias("sub", "subvec"),
+    ).withColumn("code", code0.cast("int"))
+    cell = ("sub", "code")
+    codebook = _cell_means(subs, cell, "subvec").localCheckpoint(eager=True)
+    for _ in range(refine_iters):
+        assigned = pq_encode(vectors, codebook, m, dsub, digits).select(
+            "embedding", F.posexplode("codes").alias("sub", "code")
+        ).select(
+            "sub",
+            "code",
+            F.slice(
+                F.col("embedding"), F.col("sub") * dsub + 1, F.lit(dsub)
+            ).alias("subvec"),
+        )
+        codebook = _cell_means(assigned, cell, "subvec").localCheckpoint(
+            eager=True
+        )
+    return codebook
 
 
 def pq_train(
     vectors: DataFrame,
+    dim: int,
     m: int = 8,
     ksub: int = 16,
     refine_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Train the per-subspace codebooks: (sub, code, centroid).
 
@@ -160,105 +196,56 @@ def pq_train(
     dim-exploded aggregation — nothing shuffles wider than
     (sub, code, pos). Real systems train on a bounded sample of the
     corpus (the codebook is a statistic, not an index); the full-pass
-    form here keeps the query deterministic end to end. Pass ``dim``
-    when known (a schema fact) to skip the 1-row probe scan.
+    form here keeps the query deterministic end to end. Hash init:
+    deterministic, seedless, no sampling action.
     """
-    if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    normed = vectors.select(
-        id_col, l2_normalize(F.col(vec_col)).alias(vec_col)
+    code0 = F.pmod(
+        F.xxhash64(F.col("vec_id"), F.col("sub")), F.lit(ksub)
     )
-    # hash init: deterministic, seedless, no sampling action
-    subs = normed.select(
-        id_col,
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col(vec_col), j * dsub + 1, dsub)
-                    for j in range(m)
-                ]
-            )
-        ).alias("sub", "subvec"),
-    ).withColumn(
-        "code",
-        F.pmod(F.xxhash64(F.col(id_col), F.col("sub")), F.lit(ksub))
-        .cast("int"),
-    )
-    codebook = _means(subs)
-    for _ in range(refine_iters):
-        enc = pq_encode(normed, codebook, m, dsub, id_col, vec_col)
-        assigned = enc.select(
-            id_col,
-            vec_col,
-            F.posexplode("codes").alias("sub", "code"),
-        ).select(
-            "sub",
-            "code",
-            F.slice(
-                F.col(vec_col),
-                F.col("sub") * dsub + 1,
-                F.lit(dsub),
-            ).alias("subvec"),
-        )
-        codebook = _means(assigned)
-    return codebook
+    return _train(_normed(vectors), dim, m, code0, refine_iters, 9)
 
 
-def pq_topk(
+def _adc_topk(
+    encoded: DataFrame,
+    probes: DataFrame,
+    codebook: DataFrame,
     vectors: DataFrame,
     queries: DataFrame,
-    k: int = 3,
-    m: int = 8,
-    ksub: int = 16,
-    pool: int = 48,
-    refine_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    dim: int | None = None,
+    *,
+    dim: int,
+    m: int,
+    ksub: int,
+    k: int,
+    pool: int,
+    digits: int = 9,
+    table_digits: int | None = 9,
+    on: str | None = None,
 ) -> DataFrame:
-    """ADC scan + exact refine: (query_id, vec_id, sim, rank<=k).
+    """The PQ search: ADC scan, top-``pool`` per query, exact refine
+    -> (query_id, vec_id, sim, rank<=k).
+
+    ``probes`` holds (query_id, query_vec, qv) rows, ``qv`` being the
+    vector the query's ADC table is built from: tab[j][c] = <qv_j,
+    centroid[j][c]>, each entry rounded to ``table_digits`` (None:
+    unrounded); missing codes (cells emptied during Lloyd) fill with
+    -1e9, so an indexed lookup can never silently misalign. Each
+    ``encoded`` row is scored against the tables of every probe row
+    (or, with ``on``, of the probe rows sharing its ``on`` key: an IVF
+    cell) as the sum of its m code lookups, rounded to ``digits``.
 
     Scale shape: the corpus-sized stage reads ONLY (id, codes) and
     emits slim (query_id, vec_id, adc) rows — m lookups per pair, no
-    raw vectors move until the top-``pool`` window prunes to
-    pool*|queries| rows; the exact re-rank joins vectors for just
-    those. recall/pool is the PQ knob exactly as recall/nprobe is
-    IVF's (tests/test_vector.py pins the floor on the uniform-random
-    worst-case fixtures).
-    """
-    if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
+    raw vectors move until the pool prunes to pool*|queries| rows;
+    the exact re-rank joins ``vectors`` for just those."""
     dsub = dim // m
-    codebook = pq_train(
-        vectors, m=m, ksub=ksub, refine_iters=refine_iters,
-        id_col=id_col, vec_col=vec_col, dim=dim,
-    )
-    normed = vectors.select(
-        id_col, l2_normalize(F.col(vec_col)).alias(vec_col)
-    )
-    encoded = pq_encode(normed, codebook, m, dsub, id_col, vec_col)
 
-    # per-query ADC lookup tables: tab[j][c] = <q_j, centroid[j][c]>
-    # (missing codes — cells emptied during Lloyd — fill with -1e9 so
-    # an indexed lookup can never silently misalign)
-    qn = queries.select(
-        query_id_col,
-        query_vec_col,
-        l2_normalize(F.col(query_vec_col)).alias("qv"),
-    )
-    def _dot(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    def entry(j, e):
+        dot = _fold(
+            F.slice(F.col("qv"), j * dsub + 1, F.lit(dsub)),
+            e["centroid"],
+            lambda x, y: x * y,
         )
+        return dot if table_digits is None else F.round(dot, table_digits)
 
     tab = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -274,15 +261,7 @@ def pq_topk(
                             F.col("cb"),
                             lambda e: (e["sub"] == j) & (e["code"] == c),
                         ),
-                        lambda e: F.round(
-                            _dot(
-                                F.slice(
-                                    F.col("qv"), j * dsub + 1, F.lit(dsub)
-                                ),
-                                e["centroid"],
-                            ),
-                            9,
-                        ),
+                        lambda e: entry(j, e),
                     ),
                     0,
                 ),
@@ -290,10 +269,11 @@ def pq_topk(
             ),
         ),
     )
-    qtab = qn.crossJoin(F.broadcast(_pack(codebook))).select(
-        query_id_col, query_vec_col, tab.alias("tab")
+    qtab = F.broadcast(
+        probes.crossJoin(F.broadcast(_pack(codebook))).select(
+            *probes.columns, tab.alias("tab")
+        )
     )
-
     adc = F.aggregate(
         F.zip_with(
             F.col("codes"),
@@ -303,46 +283,67 @@ def pq_topk(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    cand = (
-        encoded.crossJoin(F.broadcast(qtab))
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(adc, 9).alias("adc"),
-        )
+    scanned = encoded.join(qtab, on) if on else encoded.crossJoin(qtab)
+    cand = scanned.where(F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "vec_id", F.round(adc, digits).alias("adc")
     )
-    wpool = Window.partitionBy(query_id_col).orderBy(
-        F.desc("adc"), F.asc(id_col)
+    pooled = topk(
+        cand, pool, [F.desc("adc"), F.asc("vec_id")],
+        by="query_id", rank="rn",
+    ).select("query_id", "vec_id")
+    refined = pooled.join(
+        vectors.select("vec_id", "embedding"), on="vec_id"
+    ).join(
+        F.broadcast(queries.select("query_id", "query_vec")),
+        on="query_id",
     )
-    pooled = (
-        cand.withColumn("rn", F.row_number().over(wpool))
-        .where(F.col("rn") <= pool)
-        .select(query_id_col, id_col)
+    sim = cosine_similarity(F.col("embedding"), F.col("query_vec"))
+    return topk(
+        refined.select("query_id", "vec_id", F.round(sim, 6).alias("sim")),
+        k, [F.desc("sim"), F.asc("vec_id")], by="query_id",
     )
-    refined = (
-        pooled.join(vectors.select(id_col, vec_col), on=id_col)
-        .join(
-            F.broadcast(qn.select(query_id_col, query_vec_col)),
-            on=query_id_col,
-        )
+
+
+def _with_qv(queries: DataFrame) -> DataFrame:
+    """(query_id, query_vec, qv): the L2-normalized query beside the
+    raw one."""
+    return queries.select(
+        "query_id",
+        "query_vec",
+        l2_normalize(F.col("query_vec")).alias("qv"),
     )
-    sim = cosine_similarity(F.col(vec_col), F.col(query_vec_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    return (
-        refined.select(
-            query_id_col, id_col, F.round(sim, 6).alias("sim")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+
+
+def pq_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 3,
+    m: int = 8,
+    ksub: int = 16,
+    pool: int = 48,
+    refine_iters: int = 2,
+) -> DataFrame:
+    """ADC scan + exact refine: (query_id, vec_id, sim, rank<=k).
+
+    Train (:func:`pq_train`), encode the normalized corpus, then the
+    PQ search (:func:`_adc_topk`) against normalized queries.
+    recall/pool is the PQ knob exactly as recall/nprobe is IVF's
+    (tests/test_vector.py pins the floor on the uniform-random
+    worst-case fixtures).
+    """
+    codebook = pq_train(vectors, dim, m, ksub, refine_iters)
+    encoded = pq_encode(_normed(vectors), codebook, m, dim // m)
+    return _adc_topk(
+        encoded, _with_qv(queries), codebook, vectors, queries,
+        dim=dim, m=m, ksub=ksub, k=k, pool=pool,
     )
 
 
 def ivfpq_topk(
     vectors: DataFrame,
     queries: DataFrame,
+    dim: int,
     k: int = 3,
     n_lists: int = 16,
     nprobe: int = 8,
@@ -350,11 +351,6 @@ def ivfpq_topk(
     ksub: int = 16,
     pool: int = 48,
     refine_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF-PQ — the canonical billion-scale ANN pairing (FAISS's
     default index family): IVF's coarse quantizer prunes WHICH vectors
@@ -366,135 +362,23 @@ def ivfpq_topk(
 
     Composition, not new machinery: ivf_build assigns cells
     (operators/ivf.py), pq_train/pq_encode compress members (this
-    module), the probe semi-joins candidate cells exactly like
-    ivf_search, the ADC scan + top-``pool`` window run on the pruned
-    members only, and exact cosine re-ranks the pool. At 100 TB the
-    persisted index is (list_id-partitioned codes) — probes read
-    nprobe partitions of m-byte rows.
+    module), the IVF probe (ivf._probe, on the normalized query)
+    picks each query's cells, and the PQ search (:func:`_adc_topk`)
+    scores only the members of those cells. At 100 TB the persisted
+    index is (list_id-partitioned codes) — probes read nprobe
+    partitions of m-byte rows.
     """
-    from pyspark.sql import Window
-
-    from conversadocs_spark.operators.ivf import ivf_build
-
-    if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
-    dsub = dim // m
     assigned, centroids = ivf_build(
-        vectors, n_lists=n_lists, refine_iters=refine_iters,
-        id_col=id_col, vec_col=vec_col,
+        vectors, n_lists=n_lists, refine_iters=refine_iters
     )
-    codebook = pq_train(
-        vectors, m=m, ksub=ksub, refine_iters=refine_iters,
-        id_col=id_col, vec_col=vec_col, dim=dim,
-    )
-    normed = assigned.select(
-        id_col, "list_id", l2_normalize(F.col(vec_col)).alias(vec_col)
-    )
+    codebook = pq_train(vectors, dim, m, ksub, refine_iters)
     encoded = pq_encode(
-        normed, codebook, m, dsub, id_col, vec_col
-    ).join(assigned.select(id_col, "list_id"), on=id_col)
-
-    # probe: top-nprobe cells per query (identical to ivf_search)
-    qn = queries.select(
-        query_id_col,
-        query_vec_col,
-        l2_normalize(F.col(query_vec_col)).alias("qv"),
+        _normed(assigned, "list_id"), codebook, m, dim // m
     )
-    qsim = cosine_similarity(F.col("qv"), F.col("centroid"))
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.desc("qsim"), F.asc("list_id")
-    )
-    probed = (
-        qn.crossJoin(F.broadcast(centroids))
-        .select(
-            query_id_col, "qv", query_vec_col, "list_id",
-            F.round(qsim, 9).alias("qsim"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select(query_id_col, "qv", query_vec_col, "list_id")
-    )
-
-    # ADC tables per (query, probed cell set) — same expression as
-    # pq_topk, built once per query row
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    tab = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.transform(
-            F.sequence(F.lit(0), F.lit(ksub - 1)),
-            lambda c: F.coalesce(
-                F.get(
-                    F.transform(
-                        F.filter(
-                            F.col("cb"),
-                            lambda e: (e["sub"] == j) & (e["code"] == c),
-                        ),
-                        lambda e: F.round(
-                            _dot(
-                                F.slice(
-                                    F.col("qv"), j * dsub + 1, F.lit(dsub)
-                                ),
-                                e["centroid"],
-                            ),
-                            9,
-                        ),
-                    ),
-                    0,
-                ),
-                F.lit(-1e9),
-            ),
-        ),
-    )
-    qtab = probed.crossJoin(F.broadcast(_pack(codebook))).select(
-        query_id_col, query_vec_col, "list_id", tab.alias("tab")
-    )
-
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("tab"),
-            lambda c, t: F.element_at(t, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cand = (
-        encoded.join(F.broadcast(qtab), on="list_id")
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col, F.round(adc, 9).alias("adc"))
-    )
-    wpool = Window.partitionBy(query_id_col).orderBy(
-        F.desc("adc"), F.asc(id_col)
-    )
-    pooled = (
-        cand.withColumn("rn", F.row_number().over(wpool))
-        .where(F.col("rn") <= pool)
-        .select(query_id_col, id_col)
-    )
-    refined = pooled.join(
-        vectors.select(id_col, vec_col), on=id_col
-    ).join(
-        F.broadcast(queries.select(query_id_col, query_vec_col)),
-        on=query_id_col,
-    )
-    sim = cosine_similarity(F.col(vec_col), F.col(query_vec_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    return (
-        refined.select(
-            query_id_col, id_col, F.round(sim, 6).alias("sim")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    probes = _probe(_with_qv(queries), centroids, nprobe, qvec="qv")
+    return _adc_topk(
+        encoded, probes, codebook, vectors, queries,
+        dim=dim, m=m, ksub=ksub, k=k, pool=pool, on="list_id",
     )
 
 
@@ -506,175 +390,51 @@ def pq_exact_md5(
     ksub: int = 8,
     k: int = 3,
     pool: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Oracle-REPLAYABLE PQ twin (the md5-twin recipe's fourth
     application — simhash r13, MinHash r14, IVF + LSH r15 — closing
-    the ANN ladder): the same train -> encode -> ADC -> pool ->
-    exact-refine pipeline as :func:`pq_train` / :func:`pq_topk`, with
+    the ANN ladder): it runs the production training loop
+    (:func:`_train`, as :func:`pq_train` does), :func:`pq_encode` and
+    the PQ search (:func:`_adc_topk`, as :func:`pq_topk` does), with
     every non-replayable ingredient swapped for one DuckDB recomputes
     bit for bit:
 
     - init: ``code0 = md5_60bit("id:sub") % ksub`` instead of
       xxhash64 (both engines evaluate the identical hex arithmetic);
     - ONE fixed Lloyd refinement round (static chained-CTE plan);
-    - per-(sub, code, pos) means through exact DECIMAL(28,10) sums
-      (the production :func:`_means`, unchanged — raw parquet doubles
-      in, identical doubles out on both engines);
-    - RAW vectors, no L2 normalize: the twin's checkable contract is
-      the quantization machinery (subspace split, cell means, argmin
-      codes, ADC lookups, pool, refine), and dividing by a
-      float-summed norm ahead of the decimal-exact mean stage would
-      inject the one cross-engine noise source the recipe exists to
-      avoid; the exact re-rank stays cosine, so the emitted ranking
-      contract matches the ladder's other twins;
-    - argmin distances and the summed ADC rounded to 6 BEFORE any
-      rank (noise ~1e-15 sits 9 orders inside the step), ties on
-      lowest code / vec_id.
+    - RAW vectors and queries, no L2 normalize: the twin's checkable
+      contract is the quantization machinery (subspace split, cell
+      means, argmin codes, ADC lookups, pool, refine), and dividing
+      by a float-summed norm ahead of the decimal-exact mean stage
+      would inject the one cross-engine noise source the recipe
+      exists to avoid; the exact re-rank stays cosine, so the emitted
+      ranking contract matches the ladder's other twins;
+    - argmin distances rounded to 6, ADC table entries unrounded and
+      their sum rounded to 6 BEFORE any rank (noise ~1e-15 sits 9
+      orders inside the step), ties on lowest code / vec_id.
 
-    Production stays :func:`pq_topk` with its recall audits; this
-    twin is for bounded value-checked fixtures."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    raw = vectors.select(id_col, vec_col)
-    subs = raw.select(
-        id_col,
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col(vec_col), j * dsub + 1, dsub)
-                    for j in range(m)
-                ]
+    Per-(sub, code, pos) means go through the production exact
+    DECIMAL(28,10) sums unchanged. Production stays :func:`pq_topk`
+    with its recall audits; this twin is for bounded value-checked
+    fixtures."""
+    raw = vectors.select("vec_id", "embedding")
+    code0 = F.pmod(
+        _md5_60bit(
+            F.concat_ws(
+                ":",
+                F.col("vec_id").cast("string"),
+                F.col("sub").cast("string"),
             )
-        ).alias("sub", "subvec"),
-    ).withColumn(
-        "code",
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            F.col(id_col).cast("string"),
-                            F.col("sub").cast("string"),
-                        ).cast("binary")
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(ksub),
-        ).cast("int"),
-    )
-    # eager-localCheckpoint each codebook (<= m*ksub rows): the
-    # ivf_exact_md5 lineage rule — without it the refine round's plan
-    # embeds the full init-means chain per action. K-row state, so
-    # the non-reliable-storage caveat is immaterial.
-    c0 = _means(subs).localCheckpoint(eager=True)
-    enc1 = pq_encode(raw, c0, m, dsub, id_col, vec_col, digits=6)
-    a1 = enc1.select(
-        id_col,
-        vec_col,
-        F.posexplode("codes").alias("sub", "code"),
-    ).select(
-        "sub",
-        "code",
-        F.slice(
-            F.col(vec_col), F.col("sub") * dsub + 1, F.lit(dsub)
-        ).alias("subvec"),
-    )
-    c1 = _means(a1).localCheckpoint(eager=True)
-    encoded = pq_encode(raw, c1, m, dsub, id_col, vec_col, digits=6)
-
-    qn = queries.select(query_id_col, query_vec_col)
-
-    def _dot(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    # per-query ADC tables over the UNrounded per-subspace dots; the
-    # summed ADC is rounded to 6 below (one final rounding of the
-    # 64-term total — the cross-engine-safe point)
-    tab = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.transform(
-            F.sequence(F.lit(0), F.lit(ksub - 1)),
-            lambda c: F.coalesce(
-                F.get(
-                    F.transform(
-                        F.filter(
-                            F.col("cb"),
-                            lambda e: (e["sub"] == j) & (e["code"] == c),
-                        ),
-                        lambda e: _dot(
-                            F.slice(
-                                F.col(query_vec_col),
-                                j * dsub + 1,
-                                F.lit(dsub),
-                            ),
-                            e["centroid"],
-                        ),
-                    ),
-                    0,
-                ),
-                F.lit(-1e9),
-            ),
         ),
+        F.lit(ksub),
     )
-    qtab = qn.crossJoin(F.broadcast(_pack(c1))).select(
-        query_id_col, query_vec_col, tab.alias("tab")
+    codebook = _train(raw, dim, m, code0, refine_iters=1, digits=6)
+    encoded = pq_encode(raw, codebook, m, dim // m, digits=6)
+    probes = queries.select(
+        "query_id", "query_vec", F.col("query_vec").alias("qv")
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("tab"),
-            lambda c, t: F.element_at(t, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cand = (
-        encoded.crossJoin(F.broadcast(qtab))
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(adc, 6).alias("adc"),
-        )
-    )
-    wpool = Window.partitionBy(query_id_col).orderBy(
-        F.desc("adc"), F.asc(id_col)
-    )
-    pooled = (
-        cand.withColumn("rn", F.row_number().over(wpool))
-        .where(F.col("rn") <= pool)
-        .select(query_id_col, id_col)
-    )
-    refined = pooled.join(
-        vectors.select(id_col, vec_col), on=id_col
-    ).join(
-        F.broadcast(qn.select(query_id_col, query_vec_col)),
-        on=query_id_col,
-    )
-    sim = cosine_similarity(F.col(vec_col), F.col(query_vec_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim"), F.asc(id_col)
-    )
-    return (
-        refined.select(
-            query_id_col, id_col, F.round(sim, 6).alias("sim")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return _adc_topk(
+        encoded, probes, codebook, vectors, queries,
+        dim=dim, m=m, ksub=ksub, k=k, pool=pool,
+        digits=6, table_digits=None,
     )

@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conversadocs_spark import io
+from conversadocs_spark import io, scratch
 from conversadocs_spark.plans.registry import register
 
 # --------------------------------------------------------------------------
@@ -640,39 +640,33 @@ def join_bucketed_colocated(
     Scale notes: 8 buckets suits the fixtures — a real deployment
     sizes buckets toward HDFS-block-sized files (hundreds to
     thousands); bucket counts must MATCH (or divide) across tables
-    for the zip. Writes land in the session warehouse as catalog
-    tables named after the fixture basename; each call drops and
-    rewrites them, so two calls on fixtures of the same basename share
-    the tables."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    for the zip. Each call writes its two tables under a directory of
+    its own (``scratch.call_dir``) as external catalog tables with
+    names of its own, so a DataFrame returned by one call keeps
+    reading that call's tables whatever later calls write."""
+    base = scratch.call_dir("bucketed")
+    tag = f"{os.getpid()}_{os.path.basename(base).split('-', 1)[1]}"
     t_orders, t_items = f"b_orders_{tag}", f"b_lineitem_{tag}"
-    import shutil
-
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for name, src, key, sort in (
-        (t_orders, "orders", "o_orderkey", "o_orderkey"),
-        (t_items, "lineitem", "l_orderkey", "l_orderkey"),
+    for name, src, key in (
+        (t_orders, "orders", "o_orderkey"),
+        (t_items, "lineitem", "l_orderkey"),
     ):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        # a FRESH session's in-memory catalog doesn't know tables a
-        # previous session left in the warehouse dir — remove the
-        # orphaned location too or saveAsTable refuses
-        shutil.rmtree(os.path.join(warehouse, name),
-                      ignore_errors=True)
         (
             io.table(spark, sf_dir, src)
             .write.bucketBy(8, key)
-            .sortBy(sort)
-            .mode("overwrite")
+            .sortBy(key)
             .format("parquet")
+            .option("path", os.path.join(base, name))
             .saveAsTable(name)
         )
     o = spark.table(t_orders).select("o_orderkey", "o_orderpriority")
     li = spark.table(t_items).select(
         "l_orderkey", disc_price_e4().alias("disc_e4")
     )
+    # the analyzed plans hold the tables' files and bucket spec, so the
+    # catalog entries can go; the files are external and stay
+    for name in (t_orders, t_items):
+        spark.sql(f"DROP TABLE {name}")
     return (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .groupBy("o_orderpriority")

@@ -542,9 +542,8 @@ def ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATCH certifies the distributed Lloyd/probe machinery, not just
     the final ranking. The unbounded xxhash64 production path stays
     `ann_ivf` with its recall audit; scale posture is identical (the
-    twin reuses the production _cell_means/_assign/ivf_search
-    operators, which never shuffle anything wider than
-    (list_id, pos))."""
+    twin calls the production Lloyd loop and ivf_search, which never
+    shuffle anything wider than (list_id, pos))."""
     from conversadocs_spark.operators.ivf import ivf_exact_md5
 
     emb = io.table(spark, sf_dir, "embeddings")
@@ -810,8 +809,8 @@ def ann_pq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cosine top-3 re-rank. The DuckDB oracle replays every stage
     — init hash, both codebooks, both assignments, the ADC lookups,
     the pool, and the refine — as a chained CTE
-    (operators/pq.py:pq_exact_md5 reuses the production
-    _means/_codes_expr/_pack machinery). Scale posture == production
+    (operators/pq.py:pq_exact_md5 calls the production training loop,
+    encoder and PQ search). Scale posture == production
     pq_topk: codebook rides a broadcast, the corpus-sized stage emits
     slim (query_id, vec_id, adc) rows, nothing shuffles wider than
     (sub, code, pos)."""
@@ -942,30 +941,6 @@ def _staged_ivf_index(
 
     if _stamp_valid():
         return path
-    # one-time sweep of superseded layouts before a fresh build:
-    # the pre-r12 pid-suffixed dirs (ADVICE r11), the hashless
-    # pid-free dirs, and the pre-unification ivf_manifest_/
-    # ivf_filtered_ stages (the two callers now share one index).
-    # ONLY names without the current `_{8-hex dirhash}` suffix are
-    # superseded (ADVICE r12): tests actively stage under other
-    # names in the CURRENT layout (e.g. ivf_filtered_{tag}_{hash}),
-    # and a production rebuild must never delete a live
-    # current-layout stage it doesn't own.
-    import re as _re
-
-    current_layout = _re.compile(r"_[0-9a-f]{8}$")
-    if os.path.isdir(stage_root):
-        for d in os.listdir(stage_root):
-            if d != os.path.basename(path) and (
-                d == f"{name}_{tag}"  # pre-hash pid-free layout
-                or (
-                    d.startswith(("ivf_manifest_", "ivf_filtered_"))
-                    and not current_layout.search(d)
-                )
-            ):
-                shutil.rmtree(
-                    os.path.join(stage_root, d), ignore_errors=True
-                )
     os.makedirs(stage_root, exist_ok=True)
     tmp = tempfile.mkdtemp(
         dir=stage_root, prefix=f".{os.path.basename(path)}.build."

@@ -103,7 +103,7 @@ def foreach_batch_ivf_assign(centroids: DataFrame, index_dir: str):
     from conversadocs_spark.operators.ivf import _assign
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = _assign(batch_df, centroids, "vec_id", "embedding")
+        assigned = _assign(batch_df, centroids)
         (
             assigned.select("vec_id", "embedding", "list_id")
             .withColumn("batch_id", F.lit(batch_id))

@@ -76,23 +76,29 @@ Bounds, per file (reviewed r9):
 - streaming/cdc.py 1: per-micro-batch CDC delta.
 - functions/zorder.py 1: 1-row min/max bounds aggregate.
 - operators/incremental.py 1: O(batch) new-doc signatures.
-- operators/ivf.py 3: k-row centroid table (k ≪ corpus).
+- operators/ivf.py 3: the centroids, K rows (K ≪ corpus), packed
+  into one row for the assignment argmax and as the probe's K-row
+  table; the probe's Q x nprobe-row query-cell batch. The md5 twin
+  calls the same three.
 - operators/knn.py 4: row_cosine's 1-row query vector,
   knn_per_query's Q-row query batch, and rescore's two sides — the
   shortlist (at most n rows per query: 50, or the <= 4096-row
   tie-aware band) and the Q-row rescore query table, all bounded by
   the query batch. The filtered-kNN semi-join side is deliberately
   UNhinted (plans/vector.py knn_filtered, knn_filtered_int8_batch).
-- operators/lsh.py 6: hyperplane matrix + 1-row query signature;
-  r15 lsh_exact_md5 mirrors the production trio (integer planes
-  frame on both bucketing sides + the Q-row bucketed query batch —
-  all bounded by seeds x n_planes x dim / the query batch).
+- operators/lsh.py 2: the planes frame (one row per seed, seeds x
+  n_planes x dim numbers; one site shared by both bucketing sides)
+  and the Q x seeds bucketed query batch. ann_topk_lsh and the md5
+  twin run the one candidate pipeline (_lsh_topk); the fold took
+  6 -> 2.
 - operators/pagerank.py 2: 1-row dangling-mass aggregates (float
   pagerank + the fixed-point twin's integer dangling share).
-- operators/pq.py 11: codebooks (m×k rows, model state) + 1-row
-  query codes; r15 pq_exact_md5 mirrors the production trio (packed
-  twin codebook, Q-row ADC table batch, Q-row refine query batch —
-  all bounded by m*ksub / the query batch).
+- operators/pq.py 4: the codebook packed into one row (m*ksub
+  centroids, model state) for the encoder and for the ADC tables;
+  the ADC table batch (Q rows, or Q x nprobe under IVF-PQ) and the
+  Q-row refine query batch. pq_topk, ivfpq_topk and the md5 twin run
+  the one PQ search (_adc_topk); the fold took 11 -> 4 (IVF-PQ's
+  centroid broadcast is now ivf.py's probe).
 """
 
 BROADCAST_ALLOWED: dict[str, int] = {
@@ -100,9 +106,9 @@ BROADCAST_ALLOWED: dict[str, int] = {
     "operators/incremental.py": 1,
     "operators/ivf.py": 3,
     "operators/knn.py": 4,
-    "operators/lsh.py": 6,
+    "operators/lsh.py": 2,
     "operators/pagerank.py": 2,
-    "operators/pq.py": 11,
+    "operators/pq.py": 4,
     "plans/aggregates.py": 6,
     "plans/analytics.py": 11,
     "plans/eventtime.py": 1,

@@ -35,7 +35,10 @@ script runs ONLY the cheap invariants (no SparkSession, no data):
      `spark.sql(text, name=df)` instead),
  14. no `basename(sf_dir` / `gettempdir(` under conversadocs_spark/plans/
      outside SHARED_NAME_ALLOWED: a query's files go under
-     `scratch.call_dir`, never a path named after the fixture.
+     `scratch.call_dir`, never a path named after the fixture,
+ 15. no `Window.partitionBy(` in the ANN ladder (operators/ivf.py,
+     pq.py, lsh.py): its per-query ranks go through
+     operators/knn.py's `topk`.
 
 Usage: python scripts/preflight.py   (exit 0 = safe to snapshot)
 Run it before every snapshot-sized commit; the full pytest suite
@@ -71,9 +74,9 @@ SHARED_NAME_ALLOWED = {
     ("vector.py", "_staged_ivf_index"):
         "content key of a stamp-checked cache, not scratch; the key "
         "also hashes the absolute sf_dir",
-    ("joins.py", "join_bucketed_colocated"):
-        "catalog table names in the session warehouse, not scratch",
 }
+#: the ANN ladder, whose per-query ranks go through knn.topk
+ANN_LADDER = ("operators/ivf.py", "operators/pq.py", "operators/lsh.py")
 #: every env knob the engine reads; each one is a code path that a
 #: measurement or a test needs
 ENGINE_ENV_KNOBS = frozenset({
@@ -338,6 +341,16 @@ def main() -> int:
     check(not shared,
           f"no basename(sf_dir / gettempdir( in conversadocs_spark/plans/ "
           f"outside SHARED_NAME_ALLOWED (offenders: {shared or '[]'})")
+
+    # The ANN ladder ranks through the top-k core, so the single-query /
+    # batch plan choice stays in one place.
+    windows = [
+        rel for rel in ANN_LADDER
+        if "Window.partitionBy(" in open(os.path.join(pkg, rel)).read()
+    ]
+    check(not windows,
+          f"no Window.partitionBy( in the ANN ladder; ranks go through "
+          f"knn.topk (offenders: {windows or '[]'})")
 
     if FAILS:
         print(f"\npreflight: {len(FAILS)} FAILURE(S) — do not snapshot")

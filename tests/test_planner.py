@@ -427,8 +427,7 @@ def test_stage_stamp_mismatch_triggers_rebuild(spark, tmp_path):
 
 
 def test_stage_sweep_spares_current_layout_stages(spark):
-    """A production 'ivf' rebuild sweeps only SUPERSEDED stage
-    layouts (pre-hash / pid-suffixed names); a live CURRENT-layout
+    """A production 'ivf' rebuild replaces only its own stage: a live
     stage under another name — e.g. this suite's 'ivf_filtered'
     stages — must survive (ADVICE r12)."""
     import os
@@ -439,21 +438,12 @@ def test_stage_sweep_spares_current_layout_stages(spark):
     emb = io.table(spark, SF_ORACLE, "embeddings")
     corpus = emb.where(F.col("vec_id") >= 5)
     other = _staged_ivf_index(SF_ORACLE, corpus, "ivf_filtered")
-    stage_root = os.path.dirname(other)
-    legacy = [
-        os.path.join(stage_root, n)
-        for n in ("ivf_filtered_sf9.9", "ivf_manifest_sf9.9_12345_0")
-    ]
-    for p in legacy:
-        os.makedirs(p, exist_ok=True)
     ivf_path = _staged_ivf_index(SF_ORACLE, corpus, "ivf")
-    shutil.rmtree(ivf_path)  # force the build (and sweep) path
+    shutil.rmtree(ivf_path)  # force the build path
     _staged_ivf_index(SF_ORACLE, corpus, "ivf")
     assert os.path.isfile(os.path.join(other, "_stage_stamp.json")), (
         "current-layout stage of another name must not be swept"
     )
-    for p in legacy:
-        assert not os.path.isdir(p), f"superseded layout kept: {p}"
 
 
 def test_concurrent_stagers_build_in_their_own_dirs(spark, monkeypatch):
@@ -471,6 +461,7 @@ def test_concurrent_stagers_build_in_their_own_dirs(spark, monkeypatch):
 
     import conversadocs_spark.operators.ivf as ivf_mod
     from conversadocs_spark.plans.vector import _staged_ivf_index
+    from conversadocs_spark.scratch import STAGE_ROOT
 
     emb = io.table(spark, SF_ORACLE, "embeddings")
     corpus = emb.where(F.col("vec_id") >= 5)
@@ -509,10 +500,6 @@ def test_concurrent_stagers_build_in_their_own_dirs(spark, monkeypatch):
         assigned, _centroids, manifest = ivf_mod.ivf_read_index(spark, path)
         assert assigned.count() == corpus.count() == manifest["n"]
     finally:
-        stage_root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".stream_stage",
-        )
-        for d in os.listdir(stage_root):
+        for d in os.listdir(STAGE_ROOT):
             if name in d:  # the stage and any leftover build dir
-                shutil.rmtree(os.path.join(stage_root, d))
+                shutil.rmtree(os.path.join(STAGE_ROOT, d))

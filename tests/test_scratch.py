@@ -27,6 +27,7 @@ def _rows(df) -> Counter:
         "index_build_overwrite",
         "dedup_incremental",
         "streaming_foreachbatch_sink",
+        "join_bucketed_colocated",
     ],
 )
 def test_held_dataframe_survives_a_later_call(spark, tmp_path, name):

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conversadocs_spark import io
+from conversadocs_spark.scratch import STAGE_ROOT
 from conversadocs_spark.streaming.ops import (
     stream_session_agg,
     stream_sliding_agg,
@@ -21,7 +22,6 @@ from conversadocs_spark.streaming.source import (
 )
 from conversadocs_spark.streaming.state import chat_turn, session_chat
 
-STAGE = "/root/repo/.stream_stage"
 
 
 def _replay(stream_df, mode, name):
@@ -38,7 +38,7 @@ def _replay(stream_df, mode, name):
 
 @pytest.fixture(scope="module")
 def staged(spark, sf_dir):
-    out = os.path.join(STAGE, "test_" + os.path.basename(sf_dir))
+    out = os.path.join(STAGE_ROOT, "test_" + os.path.basename(sf_dir))
     return stage_events_files(spark, sf_dir, out, n_files=3)
 
 
@@ -104,7 +104,7 @@ def test_stream_sessions_finalized_subset_of_batch(spark, sf_dir, staged):
 def test_stream_dedup_suppresses_retries(spark, sf_dir):
     from conversadocs_spark.streaming.ops import stream_dedup
 
-    out = os.path.join(STAGE, "test_dup_" + os.path.basename(sf_dir))
+    out = os.path.join(STAGE_ROOT, "test_dup_" + os.path.basename(sf_dir))
     stage_events_files(spark, sf_dir, out, n_files=3, duplicate_rows=True)
     got = _replay(
         stream_dedup(read_events_stream(spark, out)), "append", "t_dedup"
@@ -281,9 +281,7 @@ def test_ivf_append_stream_equals_batch_assign(spark, call_dirs):
     _, centroids = ivf_build(corpus, n_lists=16, refine_iters=2)
     want = {
         r["vec_id"]: r["list_id"]
-        for r in _assign(
-            streamed, centroids, "vec_id", "embedding"
-        ).collect()
+        for r in _assign(streamed, centroids).collect()
     }
     assert got == want
     assert len(got) == streamed.count()  # each vector exactly once
@@ -367,7 +365,7 @@ def test_checkpoint_resume_does_not_reprocess(spark, sf_dir, tmp_path):
         foreach_batch_index_writer,
     )
 
-    full = os.path.join(STAGE, "test_" + os.path.basename(sf_dir))
+    full = os.path.join(STAGE_ROOT, "test_" + os.path.basename(sf_dir))
     stage_events_files(spark, sf_dir, full, n_files=3)
     src = str(tmp_path / "arrivals")
     os.makedirs(src)

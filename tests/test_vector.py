@@ -100,10 +100,10 @@ def test_ivf_build_checkpoints_each_lloyd_step(spark, sf_oracle_dir, tmp_path):
         "embedding",
         F.pmod(F.xxhash64("vec_id"), F.lit(16)).cast("int").alias("list_id"),
     )
-    means = _cell_means(lazy, "vec_id", "embedding")
+    means = _cell_means(lazy)
     for _ in range(2):
-        lazy = _assign(emb, means, "vec_id", "embedding")
-        means = _cell_means(lazy, "vec_id", "embedding")
+        lazy = _assign(emb, means)
+        means = _cell_means(lazy)
 
     def rows(df, *cols):
         return sorted(tuple(r) for r in df.select(*cols).collect())
@@ -176,10 +176,10 @@ def test_ivf_assign_matches_window_argmax(spark, sf_oracle_dir):
         .cast("int")
         .alias("list_id"),
     )
-    centroids = _cell_means(init, "vec_id", "embedding")
+    centroids = _cell_means(init)
     got = {
         (r.vec_id, r.list_id)
-        for r in _assign(emb, centroids, "vec_id", "embedding").collect()
+        for r in _assign(emb, centroids).collect()
     }
     sim = cosine_similarity(F.col("embedding"), F.col("centroid"))
     w = Window.partitionBy("vec_id").orderBy(
@@ -219,8 +219,8 @@ def test_ivf_assign_no_exchange(spark, sf_oracle_dir):
         .cast("int")
         .alias("list_id"),
     )
-    centroids = _cell_means(init, "vec_id", "embedding")
-    assigned = _assign(emb, centroids, "vec_id", "embedding")
+    centroids = _cell_means(init)
+    assigned = _assign(emb, centroids)
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     # tree shape: Project <- BNLJ <- [corpus scan, BroadcastExchange <-
     # centroid-packing agg]. The K-row packing side legitimately
@@ -287,14 +287,14 @@ def test_pq_codes_are_valid_and_compress(spark, sf_oracle_dir):
     emb = io.table(spark, sf_oracle_dir, "embeddings").where(
         F.col("vec_id") >= 5
     )
-    cb = pq_train(emb, m=m, ksub=ksub, refine_iters=1)
+    cb = pq_train(emb, dim, m=m, ksub=ksub, refine_iters=1)
     cb_rows = cb.collect()
     assert len(cb_rows) <= m * ksub
     assert all(len(r["centroid"]) == dim // m for r in cb_rows)
     normed = emb.select(
         "vec_id", l2_normalize(F.col("embedding")).alias("embedding")
     )
-    enc = pq_encode(normed, cb, m, dim // m, "vec_id", "embedding")
+    enc = pq_encode(normed, cb, m, dim // m)
     rows = enc.select("vec_id", "codes").collect()
     n = len(rows)
     assert n == emb.count()
@@ -319,11 +319,11 @@ def test_pq_encode_no_exchange(spark, sf_oracle_dir):
     emb = io.table(spark, sf_oracle_dir, "embeddings").where(
         F.col("vec_id") >= 5
     )
-    cb = pq_train(emb, m=8, ksub=16, refine_iters=0)
+    cb = pq_train(emb, 64, m=8, ksub=16, refine_iters=0)
     normed = emb.select(
         "vec_id", l2_normalize(F.col("embedding")).alias("embedding")
     )
-    enc = pq_encode(normed, cb, 8, 8, "vec_id", "embedding")
+    enc = pq_encode(normed, cb, 8, 8)
     plan = enc._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan, plan
     corpus_side = plan.split("BroadcastNestedLoopJoin", 1)[1].split(
@@ -1248,10 +1248,10 @@ def test_ann_ivf_exact_is_nondegenerate(spark, sf_oracle_dir):
             F.lit(8),
         ).cast("int").alias("list_id"),
     )
-    cents = _cell_means(init, "vec_id", "embedding")
+    cents = _cell_means(init)
     for _ in range(2):
-        assigned = _assign(corpus, cents, "vec_id", "embedding", digits=6)
-        cents = _cell_means(assigned, "vec_id", "embedding")
+        assigned = _assign(corpus, cents, digits=6)
+        cents = _cell_means(assigned)
     n_cells = assigned.select("list_id").distinct().count()
     assert n_cells >= 4, f"index collapsed to {n_cells} cells"
 
@@ -1358,11 +1358,8 @@ def test_ann_pq_exact_is_nondegenerate(spark, sf_oracle_dir):
     a constant and the pool arbitrary), and the ADC pool actually
     prunes (pool=32 < corpus)."""
     from conversadocs_spark import io
-    from conversadocs_spark.operators.pq import (
-        _means,
-        pq_encode,
-        pq_exact_md5,
-    )
+    from conversadocs_spark.operators.ivf import _cell_means
+    from conversadocs_spark.operators.pq import pq_encode, pq_exact_md5
     from conversadocs_spark.plans import QUERIES
 
     rows = QUERIES["ann_pq_exact"](spark, sf_oracle_dir).collect()
@@ -1406,8 +1403,8 @@ def test_ann_pq_exact_is_nondegenerate(spark, sf_oracle_dir):
             F.lit(ksub),
         ).cast("int"),
     )
-    c0 = _means(subs)
-    enc1 = pq_encode(corpus, c0, m, dsub, "vec_id", "embedding", digits=6)
+    c0 = _cell_means(subs, ("sub", "code"), "subvec")
+    enc1 = pq_encode(corpus, c0, m, dsub, digits=6)
     a1 = enc1.select(
         "vec_id", "embedding", F.posexplode("codes").alias("sub", "code")
     ).select(
@@ -1417,7 +1414,7 @@ def test_ann_pq_exact_is_nondegenerate(spark, sf_oracle_dir):
             F.col("embedding"), F.col("sub") * dsub + 1, F.lit(dsub)
         ).alias("subvec"),
     )
-    c1 = _means(a1)
+    c1 = _cell_means(a1, ("sub", "code"), "subvec")
     n_codes = c1.select("sub", "code").distinct().count()
     assert n_codes >= 4, f"codebook collapsed to {n_codes} cells"
     n_corpus = corpus.count()
